@@ -1,0 +1,1 @@
+"""End-to-end crawl benchmark (see run.py)."""
