@@ -52,20 +52,15 @@ EXTRACT_REPLICAS = int(os.environ.get("SPARK_GRAFT_EXTRACT_REPLICAS", "16"))
 # operator-suite queries worth timing at sf0.1 (brute-force pair ops
 # excluded: they are oracle-scale verifiers, not the 10^10 path)
 SUITE = [
-    # round-5 session-4 additions (media matching, new source formats,
-    # compliance, retrieval, release integrity)
-    "q_image_neardup",
-    "q_pdf_text",
+    # source formats, compliance, retrieval, release integrity
     "q_license_detect",
     "q_epoch_alloc",
     "q_proximity_topk",
-    "q_exif_extract",
     "q_sitemap_render",
     "q_ngram_novelty",
     "q_release_manifest",
     "q_robots_render",
     "q_calibration",
-    "q_audio_match",
     "q_hard_negatives",
     "q_manifest_diff",
     "q_host_boilerplate",
@@ -153,10 +148,7 @@ SUITE = [
     "q_random_walks",
     "q_ann_truncated_topk",
     "q_theta_overlap",
-    "q_jpeg_decode",
-    "q_video_frames",
     "q_pagerank_incremental",
-    "q_gif_decode",
     "q_host_overlap",
     "q_opic_greedy",
     "q_lang_smooth",
@@ -171,11 +163,6 @@ SUITE = [
     "q_rank_correlation",
     "q_substr_spans",
     "q_maxscore_topk",
-    "q_image_phash",
-    "q_audio_fingerprint",
-    "q_pricing_summary",
-    "q_top_revenue_orders",
-    "q_region_revenue",
     "q_politeness_quota",
     "q_seen_antijoin",
     "q_frontier_dedup",
@@ -247,7 +234,6 @@ SUITE = [
     "q_token_budget",
     "q_incremental_neardup",
     "q_hist_merge",
-    "q_wav_decode",
     "q_shard_rebalance",
     "q_trustrank",
     "q_postings_varint",
@@ -271,7 +257,6 @@ SUITE = [
     "q_wet_render",
     "q_pct_normalize",
     "q_line_trim",
-    "q_png_decode",
     "q_html_entities",
     "q_nfc_normalize",
     "q_chunked_decode",

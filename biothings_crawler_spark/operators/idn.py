@@ -8,13 +8,10 @@ hostnames through verbatim); this is the Spark-native decoder.
 
 The decoder is the RFC 3492 §6.2 algorithm implemented directly —
 generalized variable-length integers with bias adaptation — not a
-wrapper around a codec, so malformed labels degrade per the media
-plane's ``decode_err`` policy (operators/jpegcodec.py precedent): a
-bad label yields an error string, never a task kill. pytest
-cross-checks every fixture against the stdlib ``punycode`` codec, and
-the driver pair pins ground-truth (unicode, ACE) literal pairs the
-oracle replays — the same pinned-oracle contract the media decoders
-use.
+wrapper around a codec, so a malformed label degrades to a
+``decode_err`` string, never a task kill. pytest cross-checks every
+fixture against the stdlib ``punycode`` codec, and the registry pair pins
+ground-truth (unicode, ACE) literal pairs the oracle replays.
 
 Scale shape: Arrow-batched pandas UDF (the sanctioned Python path) —
 per-label work is O(len); hosts are short, so throughput is

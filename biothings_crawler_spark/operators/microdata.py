@@ -8,10 +8,10 @@ ships a microdata extractor, and real Common-Crawl pages carry
 schema.org markup in both syntaxes, so a complete harvester needs this
 plane.  This is a REAL parser over the html bytes — stdlib
 ``html.parser.HTMLParser`` (charrefs decoded), not a regex — in the
-same Arrow-batched mapInPandas shape as the media decoders: pure map,
-no cross-row state, scale = executor count.
+an Arrow-batched mapInPandas pass: pure map, no cross-row state,
+scale = executor count.
 
-Supported subset (documented like the PNG decoder's): non-nested TEXT
+Supported subset: non-nested TEXT
 properties; property value sources per the WHATWG microdata algorithm
 for the common tags (``meta`` -> @content, ``a``/``link`` -> @href,
 ``img`` -> @src, ``time`` -> @datetime, anything else -> descendant

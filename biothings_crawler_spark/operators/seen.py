@@ -276,7 +276,8 @@ def build_segments(
 ) -> DataFrame:
     """New seen_segments rows for this round (merged with previous).
 
-    One shuffle on segment_id; each group builds its filter in numpy.
+    The round's keys are cogrouped with the previous segments on
+    segment_id; each group builds its filter in numpy.
     ``segment_kind='cuckoo'`` builds deletable segments (robots
     revocation hosts — SURVEY.md §4); capacity must be pre-sized
     (``cuckoo_capacity`` items/segment) because fingerprints cannot be
@@ -285,22 +286,19 @@ def build_segments(
     keyed = scheduled.select(
         segment_col(F.col("url_hash"), n_segments).alias("segment_id"), "url_hash"
     )
-    prev = (
-        prev_segments.select("segment_id", "bloom", "n_items")
-        if prev_segments is not None
-        else None
-    )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["segment_id"].iloc[0])
+    # Keys and previous segments stay separate (cogroup sides) so
+    # ``url_hash`` has no nulls and reaches pandas as int64; a nullable
+    # long column arrives as float64, which rounds every key past 2^53.
+    def build(keys: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
+        seg = int((keys if len(keys) else prev_pdf)["segment_id"].iloc[0])
         if segment_kind == "cuckoo":
             bf = CuckooFilter.sized_for(cuckoo_capacity or 1 << 16)
         else:
             bf = BloomFilter(bits_per_segment, n_hashes)
-        prev_blob = pdf["bloom"].dropna()
         prev_n = 0
-        if len(prev_blob):
-            prev_f = filter_from_bytes(bytes(prev_blob.iloc[0]))
+        if len(prev_pdf):
+            prev_f = filter_from_bytes(bytes(prev_pdf["bloom"].iloc[0]))
             if not isinstance(prev_f, type(bf)):
                 # membership filters cannot be converted in place (a
                 # cuckoo needs the key set, which a bloom doesn't keep);
@@ -312,27 +310,26 @@ def build_segments(
                     "segment from the full key set to migrate kinds"
                 )
             bf = bf.merge(prev_f) if isinstance(bf, BloomFilter) else prev_f
-            prev_n = int(pdf["n_items"].dropna().iloc[0])
-        new_keys = pdf.loc[pdf["url_hash"].notna(), "url_hash"].to_numpy(dtype=np.int64)
+            prev_n = int(prev_pdf["n_items"].iloc[0])
+        new_keys = keys["url_hash"].to_numpy(dtype=np.int64)
         bf.add_many(new_keys)
         return pd.DataFrame(
             [{"segment_id": seg, "round": round_no, "bloom": bf.to_bytes(),
               "n_items": prev_n + len(new_keys)}]
         )
 
-    if prev is not None:
-        unioned = keyed.withColumn("bloom", F.lit(None).cast("binary")).withColumn(
-            "n_items", F.lit(None).cast("long")
-        ).unionByName(
-            prev.withColumn("url_hash", F.lit(None).cast("long")).select(
-                "segment_id", "url_hash", "bloom", "n_items"
-            )
+    if prev_segments is None:
+        # a plain grouped map: cogrouping with an empty side costs an
+        # extra shuffle stage on every fresh crawl's first round
+        return keyed.groupBy("segment_id").applyInPandas(
+            lambda keys: build(keys, pd.DataFrame()), SEEN_SEGMENTS_SCHEMA
         )
-    else:
-        unioned = keyed.withColumn("bloom", F.lit(None).cast("binary")).withColumn(
-            "n_items", F.lit(None).cast("long")
-        )
-    return unioned.groupBy("segment_id").applyInPandas(build, SEEN_SEGMENTS_SCHEMA)
+    prev = prev_segments.select("segment_id", "bloom", "n_items")
+    return (
+        keyed.groupBy("segment_id")
+        .cogroup(prev.groupBy("segment_id"))
+        .applyInPandas(build, SEEN_SEGMENTS_SCHEMA)
+    )
 
 
 def mark_maybe_seen(

@@ -14,8 +14,8 @@ the single-threaded oracle are bit-identical.
 
 Scale shape: each document pair is an independent row — the DP is
 per-pair O(n_sents² · 6) with n_sents bounded by document length, and
-pairs ride ``mapInPandas`` (Arrow batches, the sanctioned Python path
-— same plumbing as the media decoders): no shuffle at all if the pair
+pairs ride ``mapInPandas`` (Arrow batches, the sanctioned Python
+path): no shuffle at all if the pair
 table already carries both texts, one co-keyed join per side if it
 carries URLs only.  State never outlives a batch row.  At 10^8 mined
 pairs this is embarrassingly parallel.

@@ -164,8 +164,7 @@ def lang_id_model(
 ):
     """Pluggable model-based language ID over mapInPandas — the
     production path a 100-TB pipeline swaps in for the marker-word
-    heuristic (same stub contract as operators/multimodal's decode:
-    the container ships no fastText-class model, so the default
+    heuristic (no fastText-class model is bundled, so the default
     "model" is the deterministic heuristic twin, and the Spark-side
     plumbing — Arrow batching, per-worker model load, schema — is real
     and tested).
@@ -361,7 +360,7 @@ def bigram_coverage(df, id_col: str, text_col: str, min_count: int = 3):
     (KenLM-style language-model scoring without the log-prob — rare
     bigrams mark gibberish, OCR noise, and boilerplate-mangled text; a
     deterministic integer/exact-ratio contract the DuckDB oracle can
-    pair, where a real LM would need the multimodal/lang-ID-style
+    pair, where a real LM would need the ``lang_id_model``-style
     model-hook treatment).
 
     Output: (id, n_bigrams, n_common, coverage_q6) with coverage as an

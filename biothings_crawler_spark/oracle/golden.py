@@ -2,13 +2,12 @@
 as one ANSI-SQL statement over the sf tables.
 
 The BFS crawl loop (reference: crawler/spiders/helper.py:30-50 round
-semantics, broadscrape/clic.py:61-103 two-hop crawl), the JSON-LD
-extractor (helper.py:30-50 / extruct usage), and the media-feature stub
-are all DETERMINISTIC pure functions of the fixture corpus. The
-driver's hard gate still gets an EXACT pair for each: this module runs
-the frozen pure-Python oracles (oracle/bfs.simulate_crawl,
-fixtures/corpus.oracle_page_items, the documented fake-feature math)
-and materializes their expected output to parquet; the oracle SQL is
+semantics, broadscrape/clic.py:61-103 two-hop crawl) and the JSON-LD
+extractor (helper.py:30-50 / extruct usage) are DETERMINISTIC pure
+functions of the fixture corpus. The correctness gate still gets an
+EXACT pair for each: this module runs the frozen pure-Python oracles
+(oracle/bfs.simulate_crawl, fixtures/corpus.oracle_page_items) and
+materializes their expected output to parquet; the oracle SQL is
 then a plain ``SELECT .. FROM read_parquet(..)`` DuckDB can run, while
 the Spark side runs the real distributed engine on the same fixture.
 Equality is therefore a genuine cross-implementation check — DataFrame
@@ -22,10 +21,8 @@ _VERSION when semantics change). Generation needs no SparkSession.
 
 from __future__ import annotations
 
-import math
 import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -37,7 +34,6 @@ CRAWL_CFG = dict(max_rounds=2, default_budget=15, round_seconds=10.0,
                  obey_robots=True, n_segments=4,
                  bloom_bits_per_segment=1 << 14, bloom_hashes=5)
 JSONLD_N = 300
-MEDIA_N = 64
 SENTALIGN_N = 120
 
 
@@ -145,32 +141,6 @@ def _jsonld_golden() -> str:
     }))
 
 
-def _media_golden() -> str:
-    """Expected media features from the documented fake-feature math
-    (byte-histogram chunk means), float32-quantized exactly like the
-    engine's array<float> output, emitted as a canonical int string."""
-    from biothings_crawler_spark.operators.multimodal import (
-        _fake_features,
-        gen_media_rows,
-    )
-
-    ids, kinds, nbytes, feats = [], [], [], []
-    for row in gen_media_rows(MEDIA_N):
-        content = row[2]
-        f = _fake_features(content)
-        ids.append(row[0])
-        kinds.append(row[1])
-        nbytes.append(len(content))
-        feats.append(",".join(
-            str(math.floor(float(np.float32(v)) * 1e6)) for v in f))
-    return _write("media_features.parquet", pa.table({
-        "media_id": pa.array(ids, pa.int64()),
-        "kind": pa.array(kinds, pa.string()),
-        "n_bytes": pa.array(nbytes, pa.int64()),
-        "feature_q": pa.array(feats, pa.string()),
-    }))
-
-
 def _sentalign_golden() -> str:
     """Expected Gale-Church beads for the SENTALIGN_N fixture pairs,
     from the frozen memoized-recursion aligner (oracle/galechurch.py);
@@ -206,13 +176,11 @@ def paths() -> dict[str, str]:
         "crawl_docs": os.path.join(d, "crawl_docs.parquet"),
         "refetch_docs": os.path.join(d, "refetch_docs.parquet"),
         "jsonld_items": os.path.join(d, "jsonld_items.parquet"),
-        "media_features": os.path.join(d, "media_features.parquet"),
         "sentalign_beads": os.path.join(d, "sentalign_beads.parquet"),
     }
     if not all(os.path.exists(p) for p in need.values()):
         _crawl_golden()
         _refetch_golden()
         _jsonld_golden()
-        _media_golden()
         _sentalign_golden()
     return need

@@ -39,6 +39,14 @@ def _run_engine(spark, tmpdir, cfg=CFG):
     )
 
 
+@pytest.fixture(scope="module")
+def full_crawl(spark, tmp_path_factory):
+    """The uninterrupted CFG crawl, run once per module: (summary,
+    checkpoint dir). Every test here only reads it."""
+    cp = tmp_path_factory.mktemp("full") / "cp"
+    return _run_engine(spark, cp), cp
+
+
 def _engine_tables(spark, tmpdir):
     from biothings_crawler_spark.catalog import ParquetManifestCatalog
 
@@ -49,10 +57,10 @@ def _engine_tables(spark, tmpdir):
     return sched, docs, texts
 
 
-def test_engine_matches_oracle(spark, tmp_path, oracle_result):
-    summary = _run_engine(spark, tmp_path / "cp")
+def test_engine_matches_oracle(spark, full_crawl, oracle_result):
+    summary, cp = full_crawl
     assert summary["rounds"] >= 3
-    sched, docs, texts = _engine_tables(spark, tmp_path / "cp")
+    sched, docs, texts = _engine_tables(spark, cp)
 
     engine_ordering = sorted(
         (r["round"], r["host"], r["sched_rank"], r["url_canon"])
@@ -70,9 +78,8 @@ def test_engine_matches_oracle(spark, tmp_path, oracle_result):
     assert engine_seen == oracle_result.seen
 
 
-def test_page_texts_byte_identical_to_corpus_golden(spark, tmp_path, oracle_result):
-    _run_engine(spark, tmp_path / "cp")
-    _, _, texts = _engine_tables(spark, tmp_path / "cp")
+def test_page_texts_byte_identical_to_corpus_golden(spark, full_crawl):
+    _, _, texts = _engine_tables(spark, full_crawl[1])
     golden = {r["url"]: r["text"] for r in corpus.gen_pages(N)}
     rows = texts.select("url", "text").collect()
     assert rows, "crawl extracted nothing"
@@ -80,11 +87,10 @@ def test_page_texts_byte_identical_to_corpus_golden(spark, tmp_path, oracle_resu
     assert bad == [], f"text mismatches: {bad[:5]}"
 
 
-def test_metrics_match_oracle(spark, tmp_path, oracle_result):
-    _run_engine(spark, tmp_path / "cp")
+def test_metrics_match_oracle(spark, full_crawl, oracle_result):
     from biothings_crawler_spark.catalog import ParquetManifestCatalog
 
-    cat = ParquetManifestCatalog(str(tmp_path / "cp"))
+    cat = ParquetManifestCatalog(str(full_crawl[1]))
     m = cat.read(spark, "metrics")
     engine = {
         (r["round"], r["host"], r["metric"]): r["value"]
@@ -150,18 +156,18 @@ def test_refetch_round_docs_and_resume(spark):
     assert cat1.latest_round() == golden.CRAWL_CFG["max_rounds"] - 1
 
 
-def test_resume_identical_after_kill(spark, tmp_path, oracle_result):
+def test_resume_identical_after_kill(spark, tmp_path, full_crawl):
     """Kill after round 1, resume -> byte-identical ordering + docs."""
     cut = CrawlConfig(**{**CFG.__dict__, "max_rounds": 2})
     _run_engine(spark, tmp_path / "cut", cut)     # killed after 2 rounds
     _run_engine(spark, tmp_path / "cut", CFG)     # resume to completion
-    _run_engine(spark, tmp_path / "full", CFG)    # uninterrupted reference
+    full = full_crawl[1]                          # uninterrupted reference
 
     for table in ("scheduled", "docs"):
         from biothings_crawler_spark.catalog import ParquetManifestCatalog
 
         a = ParquetManifestCatalog(str(tmp_path / "cut")).read(spark, table)
-        b = ParquetManifestCatalog(str(tmp_path / "full")).read(spark, table)
+        b = ParquetManifestCatalog(str(full)).read(spark, table)
         cols = sorted(set(a.columns) & set(b.columns))
         key = lambda t: tuple((v is None, str(v)) for v in t)  # noqa: E731
         ra = sorted((tuple(r[c] for c in cols) for r in a.select(*cols).collect()), key=key)

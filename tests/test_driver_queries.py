@@ -17,7 +17,6 @@ from biothings_crawler_spark.testing import frame_digest
 SF_DIR = "/root/testdata/sf0.001"
 
 FAST = [
-    "q_pricing_summary",
     "q_politeness_quota",
     "q_seen_antijoin",
     "q_frontier_dedup",
@@ -47,9 +46,9 @@ def duck():
 
 def test_registry_shape():
     assert set(ORACLES) <= set(QUERIES)
-    # round 2: every query has an exact oracle (golden-parquet pairs
-    # cover the BFS loop, extraction, media stub, and hash-ordered
-    # sampling) — zero rows-only checks
+    # every query has an exact oracle (golden-parquet pairs cover the
+    # BFS loop, extraction and hash-ordered sampling) — zero rows-only
+    # checks
     assert set(QUERIES) - set(ORACLES) == set()
 
 

@@ -1,5 +1,5 @@
 """Training-data pipeline operators: dedup family, similarity search,
-text analysis, multimodal plumbing, analysis queries."""
+text analysis, analysis queries."""
 
 import json
 
@@ -13,11 +13,6 @@ from biothings_crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_col,
     simhash_pairs,
-)
-from biothings_crawler_spark.operators.multimodal import (
-    extract_media_features,
-    gen_media_fixture,
-    sample_video_frames,
 )
 from biothings_crawler_spark.operators.similarity import (
     assign_cells,
@@ -326,62 +321,6 @@ def test_text_analysis_cols(spark):
     assert rows[0]["fp"] == rows[2]["fp"] != rows[3]["fp"]
     assert 0.0 <= rows[0]["q"] <= 1.0
     assert rows[0]["q"] > rows[5]["q"] - 1e-9  # en stopwords boost
-
-
-def test_multimodal_plumbing(spark):
-    media = gen_media_fixture(spark, 30)
-    feats = extract_media_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == 8 for r in rows)
-    assert all(0.0 <= v <= 1.0 for r in rows for v in r["feature"])
-    # determinism
-    again = extract_media_features(media).collect()
-    assert sorted(map(str, rows)) == sorted(map(str, again))
-    frames = sample_video_frames(media, every_s=1.0)
-    fr = frames.collect()
-    vids = media.filter("kind = 'video'").select("media_id", "duration_s").collect()
-    expected = sum(max(1, int(v["duration_s"])) for v in vids)
-    assert len(fr) == expected
-    with pytest.raises(Exception):  # stub boundary is explicit
-        extract_media_features(media, decode_stub="error").collect()
-
-
-def test_wav_decode_real_roundtrip(spark):
-    """The audio path is a REAL decoder: gen_wav_media writes actual
-    RIFF/PCM containers worker-side; decode_wav_features must parse
-    them back and agree with the generator's closed-form features —
-    including the stereo interleave (odd ids are 2-channel)."""
-    from biothings_crawler_spark.operators.multimodal import (
-        decode_wav_features,
-        gen_wav_bytes,
-        gen_wav_media,
-    )
-
-    ids = spark.range(0, 12).select(F.col("id").alias("doc_id"))
-    media = gen_wav_media(ids, "doc_id")
-    got = {r["media_id"]: r for r in decode_wav_features(media).collect()}
-    assert len(got) == 12
-    for mid in range(12):
-        c = 1 + mid % 2
-        n = 800 + (mid % 5) * 160
-        xs = [((mid * 31 + j * 7) % 2001) - 1000 for j in range(n * c)]
-        r = got[mid]
-        assert r["sample_rate"] == 8000
-        assert r["n_channels"] == c and r["n_samples"] == n
-        assert r["duration_us"] == n * 1_000_000 // 8000
-        assert r["sum_sq"] == sum(x * x for x in xs)
-        assert r["peak_abs"] == max(abs(x) for x in xs)
-    # the bytes really are a parseable WAV container, not a blob
-    import io
-    import wave
-
-    w = wave.open(io.BytesIO(gen_wav_bytes(3)), "rb")
-    assert (w.getnchannels(), w.getsampwidth(), w.getframerate()) == (2, 2, 8000)
-    w.close()
-    # Arrow-batched path only — no row-at-a-time Python in the plan
-    plan = decode_wav_features(media)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
 
 
 def _typed_docs(spark):
@@ -1851,31 +1790,6 @@ def test_incremental_neardup_scales_with_increment(spark):
     assert est[12] == 1_000_000                             # exact dup
 
 
-def test_sniff_mime_magic_bytes_beat_headers(spark):
-    """Magic bytes win over lying Content-Type headers; HTML fallback
-    catches markup; unknown binaries degrade to octet-stream."""
-    from biothings_crawler_spark.operators.multimodal import sniff_report
-
-    rows = [
-        (1, bytes.fromhex("FFD8FFE000104A46"), "text/html"),       # jpeg, lying header
-        (2, bytes.fromhex("89504E470D0A1A0A"), "image/png"),        # honest png
-        (3, b"<!DOCTYPE html><html><body>x</body>", "image/jpeg"),  # html, lying
-        (4, b"  <html lang=\"en\"><head>", "text/html"),
-        (5, bytes.fromhex("25504446"), "application/pdf"),
-        (6, b"\x00\x01\x02\x03 mystery", "text/plain"),
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary, ct string")
-    out = {r["id"]: r for r in sniff_report(df, "id", "payload", "ct").collect()}
-    assert out[1]["sniffed_mime"] == "image/jpeg" and out[1]["mismatch"] is True
-    assert out[2]["sniffed_mime"] == "image/png" and out[2]["mismatch"] is False
-    assert out[3]["sniffed_mime"] == "text/html" and out[3]["mismatch"] is True
-    assert out[4]["sniffed_mime"] == "text/html"
-    assert out[5]["sniffed_mime"] == "application/pdf"
-    assert out[6]["sniffed_mime"] == "application/octet-stream"
-    plan = sniff_report(df, "id", "payload", "ct")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "EvalPython" not in plan
-
-
 def test_corpus_layout_partition_pruning(spark, tmp_path):
     """The (lang, quality_band) layout prunes at the DIRECTORY level:
     the slice read shows the predicates in PartitionFilters and reads
@@ -1943,36 +1857,6 @@ def test_trim_repeated_lines_keeps_first_in_order(spark):
     assert out[2].text_trimmed == "x" and out[2].chars_saved == 0
     plan = trim_repeated_lines(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "EvalPython" not in plan
-
-
-def test_png_decode_spec_golden_and_filters(spark):
-    """The decoder is checked against REAL spec-encoder bytes (the
-    canonical 1x1 semi-transparent-blue RGBA PNG, Sub-filtered), not
-    only this module's own synthesis; the synthesized path exercises
-    all five filters and matches the closed-form sums."""
-    import base64
-
-    from biothings_crawler_spark.operators.multimodal import (
-        decode_png_features,
-        gen_png_media,
-    )
-
-    golden = base64.b64decode(
-        "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR42mNkYPhf"
-        "DwAChwGA60e6kgAAAABJRU5ErkJggg==")
-    df = spark.createDataFrame([(0, golden)], "media_id long, content binary")
-    g = decode_png_features(df).collect()[0]
-    assert (g.width, g.height, g.bit_depth, g.color_type) == (1, 1, 8, 6)
-    # Sub filter on the first pixel: raw = filtered bytes = (0,0,255),a=127
-    assert (g.sum_r, g.sum_g, g.sum_b) == (0, 0, 255)
-
-    ids = spark.createDataFrame([(7,)], "media_id long")  # h=6: all 5 filters
-    r = decode_png_features(gen_png_media(ids)).collect()[0]
-    w, h = 4 + 7 % 5, 3 + 7 % 4
-    assert (r.width, r.height) == (w, h)
-    expect = [sum((7 * 31 + y * 17 + x * 7 + ch * 3) % 256
-                  for y in range(h) for x in range(w)) for ch in (0, 1, 2)]
-    assert [r.sum_r, r.sum_g, r.sum_b] == expect
 
 
 def test_jaccard_join_exact_vs_bruteforce(spark):

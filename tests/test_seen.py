@@ -15,6 +15,9 @@ from biothings_crawler_spark.operators.seen import (
 )
 
 RNG_KEYS = np.arange(-50_000, 50_000, 7, dtype=np.int64) * 2_654_435_761
+WIDE_KEYS = np.random.default_rng(0).integers(
+    np.iinfo(np.int64).min, np.iinfo(np.int64).max, 2_000, dtype=np.int64
+)
 
 
 def test_bloom_no_false_negatives_and_fpp():
@@ -90,13 +93,16 @@ def test_segment_build_and_probe(spark):
 
 
 def test_segments_merge_across_rounds(spark):
-    r0 = [int(k) for k in RNG_KEYS[:1_000]]
-    r1 = [int(k) for k in RNG_KEYS[1_000:2_000]]
-    s0 = build_segments(_cand(spark, r0), 0, N_SEG, 1 << 16, 7)
-    s1 = build_segments(_cand(spark, r1), 1, N_SEG, 1 << 16, 7, prev_segments=s0)
-    marked = mark_maybe_seen(_cand(spark, r0 + r1), s1, N_SEG).toPandas()
-    assert marked["maybe_seen"].all()
-    assert s1.toPandas()["n_items"].sum() == 2_000
+    # RNG_KEYS all fit in a float64 mantissa; WIDE_KEYS span the full
+    # int64 range, where a key that passes through float64 loses bits.
+    for keys in (RNG_KEYS, WIDE_KEYS):
+        r0 = [int(k) for k in keys[:1_000]]
+        r1 = [int(k) for k in keys[1_000:2_000]]
+        s0 = build_segments(_cand(spark, r0), 0, N_SEG, 1 << 16, 7)
+        s1 = build_segments(_cand(spark, r1), 1, N_SEG, 1 << 16, 7, prev_segments=s0)
+        marked = mark_maybe_seen(_cand(spark, r0 + r1), s1, N_SEG).toPandas()
+        assert marked["maybe_seen"].all()
+        assert s1.toPandas()["n_items"].sum() == 2_000
 
 
 def test_filter_unseen_exactness(spark):
