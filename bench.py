@@ -92,7 +92,6 @@ SUITE = [
     "q_lexicon_filter",
     "q_schema_drift",
     "q_erasure_impact",
-    "q_active_select",
     "q_pack_fragmentation",
     "q_identifier_extract",
     "q_mad_outliers",
@@ -102,15 +101,9 @@ SUITE = [
     "q_sitemap_audit",
     "q_textrank_summary",
     "q_ai_optout",
-    "q_texttiling",
-    "q_topic_chunks",
     # round-5 additions (LM smoothing + parallel-corpus mining planes)
-    "q_kneser_ney",
-    "q_stupid_backoff",
     "q_hreflang_clusters",
     "q_url_parallel_pairs",
-    "q_bitext_verify",
-    "q_sent_align",
     # session-9 additions (classifier/selection/retrieval/drift planes)
     "q_err_eval",
     "q_map_eval",
@@ -125,8 +118,6 @@ SUITE = [
     "q_distinctive_terms",
     "q_ks_drift",
     "q_textrank_keywords",
-    "q_nb_train",
-    "q_nb_classify",
     "q_dsir_weights",
     "q_ql_dirichlet",
     "q_char_entropy",
@@ -141,7 +132,6 @@ SUITE = [
     "q_soft404_probe",
     "q_ip_politeness",
     "q_opic",
-    "q_lm_terciles",
     "q_hyperball",
     "q_harmonic_centrality",
     "q_bowtie",
@@ -158,7 +148,6 @@ SUITE = [
     "q_hll_by_host",
     "q_priority_fusion",
     "q_graph_census",
-    "q_curriculum",
     "q_rrf_hybrid",
     "q_rank_correlation",
     "q_substr_spans",
@@ -208,13 +197,11 @@ SUITE = [
     "q_robots_parse",
     "q_robots_enforce",
     "q_blocklist_filter",
-    "q_lm_score",
     "q_seq_packing",
     "q_dust_params",
     "q_sitemap_parse",
     "q_countmin_hosts",
     "q_crawl_admission",
-    "q_training_prep",
     "q_aimd_rates",
     "q_soft404",
     "q_mirror_hosts",
@@ -265,7 +252,6 @@ SUITE = [
     "q_delta_storage",
     "q_zorder_key",
     "q_typosquat_pairs",
-    "q_bpe_merges",
     "q_payload_pipeline",
     "q_waterfill_budget",
     "q_bm25f_topk",

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_spark
 from biothings_crawler_spark.operators.text import words_col
 
 
@@ -737,7 +738,7 @@ def ql_dirichlet_scores(
     """Dirichlet-smoothed query-likelihood scores (Zhai & Lafferty
     2001) — the language-model companion to BM25 over the same
     (term, id, tf) index plane, exact in lg-fxp units (the integer
-    floor(65536*log2 x) recurrence from operators/nbayes, so the rank
+    floor(65536*log2 x) recurrence from functions/fxp, so the rank
     order is cross-engine verifiable like BM25's rational scores).
 
     The smoothed per-term likelihood (tf + mu*cf/C) / (dl + mu) is
@@ -761,8 +762,6 @@ def ql_dirichlet_scores(
     collection tokens, pre-scale C and cf by a common 2^s shift (the
     ratio cf/C is what the score depends on, up to a per-query
     constant that cancels in ranking)."""
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     m = int(mu)
     if docs is None:
         docs = df.select(
@@ -985,8 +984,6 @@ def query_clarity(
     to the corpus (semi-join, candidate-sized), its vocabulary one
     hash agg, the collection stats one corpus hash agg joined on the
     feedback vocabulary only. No windows, no Python."""
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     # tokenize the corpus ONCE (eager checkpoint) — the QL ranking and
     # the clarity models otherwise each re-run the words_col pass
     # (~6 evaluations measured); at 10^10 rows this is the token table
@@ -1122,8 +1119,6 @@ def ndcg_at_k(
     Scale shape: qrels are broadcast-small by construction; the run
     join is one broadcast equi-join + a query-keyed hash agg; the
     ideal ordering is a window over each query's judgments only."""
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     disc = f"rel * 1000000000000 div ({ilog2_fxp_spark('rank + 1')})"
     dcg = (
         ranked.filter(F.col("rank") <= k)

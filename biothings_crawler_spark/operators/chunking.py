@@ -10,8 +10,9 @@ grammatical).
 
 Semantics (exact, integer-only):
 
-* Sentences split on ``([.!?])\\s+`` — the same boundary rule as
-  ``oracle/galechurch.SENT_SPLIT_RE``, but expressed as a
+* Sentences split on ``([.!?])\\s+``: a run of whitespace that
+  follows ``.``, ``!`` or ``?`` ends a sentence, and the terminator
+  stays with the sentence it closes.  The rule is expressed as a
   marker-substitution + split so the DuckDB twin (RE2: no lookbehind)
   can run the identical rule.  Each sentence is trimmed; empties drop.
 * Sentence token count = whitespace-word count of the trimmed

@@ -22,8 +22,9 @@ Verdict ladder per URL, cheap-to-expensive, all integer-exact:
 Scale shape: ONE hash aggregation pivots (url, ua, text) to a row per
 URL (map-side partials, no window, no self-join), then pure row-local
 whole-stage-codegen array math — word splits evaluated once per side
-via select-boundary staging (the q_topic_chunks projection-collapse
-lesson). Thresholds are ppm integers so the DuckDB twin is exact.
+via select-boundary staging, so Catalyst cannot collapse the
+projections and re-inline the splits. Thresholds are ppm integers so
+the DuckDB twin is exact.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_spark
 from biothings_crawler_spark.operators.text import words_col
 
 
@@ -215,8 +216,6 @@ def distinctive_terms(
     past ~10^11 corpus tokens, right-shift N_A/N_B/N by a common 2^s
     before scoring (the ratios inside both lgs are what G² measures).
     """
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     occ = df.select(
         in_focus.cast("int").alias("side"),
         F.explode(words_col(F.col(text_col))).alias("term"),

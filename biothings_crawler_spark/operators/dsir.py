@@ -11,7 +11,7 @@ pick trusted APIs); at Common-Crawl scale distribution matching
 replaces the allowlist.  The published method samples with Gumbel
 noise from exp(w); the cross-engine-exact stand-in here is the
 deterministic core — the importance weight itself, in the same
-**lg-fxp units** as :mod:`operators/nbayes` (floor(65536·log2 x) via
+**lg-fxp units** as :mod:`functions/fxp` (floor(65536·log2 x) via
 the integer squaring recurrence), with selection as the row-local
 ``w_fxp > 0`` likelihood-ratio test.
 
@@ -29,10 +29,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biothings_crawler_spark.operators.nbayes import (
-    hashed_features,
-    ilog2_fxp_spark,
-)
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_spark
+from biothings_crawler_spark.operators.text import words_col
+
+
+def hashed_features(
+    df: DataFrame, id_col: str, text_col: str, n_buckets: int = 512
+) -> DataFrame:
+    """(id, bucket, tf) — hashed bag-of-words term frequencies.
+
+    bucket = md5-u32(word) mod n_buckets (the cross-engine hash used
+    by every banding operator in this engine); tf = occurrences.  One
+    explode + ONE hash agg; output rows per doc are bounded by
+    min(doc words, n_buckets)."""
+    w = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(words_col(F.col(text_col))).alias("w"),
+    )
+    bucket = (
+        F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long")
+        % n_buckets
+    )
+    return (
+        w.select("id", bucket.alias("bucket"))
+        .groupBy("id", "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
 
 
 def _bucket_lg(feats: DataFrame, n_buckets: int, out: str) -> DataFrame:

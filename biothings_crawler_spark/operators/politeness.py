@@ -40,8 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from biothings_crawler_spark.urlnorm import urljoin  # noqa: F401  (API surface)
-
 ORDER_COLS = ["priority", "url_hash", "url_canon"]
 
 

@@ -365,8 +365,8 @@ def proximity_topk(
     separate SELECT projections, not a withColumn chain: Catalyst
     collapses chained projections and re-inlines each array expression
     at every use site, which measured 54 s -> 1.5 s at sf0.1 when
-    staged (the q_topic_chunks bind_col lesson, projection-boundary
-    form).  The only Exchange is the final TakeOrdered top-k."""
+    staged (projection-boundary staging).  The only Exchange is the
+    final TakeOrdered top-k."""
     if len(terms) < 2:
         raise ValueError("proximity needs at least two query terms")
     base = df.select(

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_spark
 from biothings_crawler_spark.operators.sampling import hash_u60_col
 from biothings_crawler_spark.operators.text import words_col
 
@@ -141,8 +142,6 @@ def cori_shard_scores(
     the belief table is |shards| x |query terms| — broadcast-tiny; the
     final ranking sorts |shards| rows. Input needs no co-location.
     """
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     docs = df.select(
         F.col(shard_col).alias("shard"),
         F.col(id_col).alias("id"),

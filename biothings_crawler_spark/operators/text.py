@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_spark
+
 # tiny marker-word lists; enough for a deterministic n-gram-free heuristic
 EN_MARKERS = ["the", "and", "of", "to", "a", "in", "is", "for", "with", "data"]
 DE_MARKERS = ["der", "die", "und", "das", "mit", "von", "für", "ist", "ein", "daten"]
@@ -1030,7 +1032,7 @@ def char_entropy(df, id_col: str, text_col: str):
     Exactness: H = lg N - (sum_c n_c*lg n_c)/N is transcendental, so
     what is returned is the integer **total self-information**
     ``ent_tot_fxp = N*lg(N) - sum_c n_c*lg(n_c)`` in lg-fxp units
-    (floor(65536*log2), the operators/nbayes integer recurrence) plus
+    (floor(65536*log2), the functions/fxp integer recurrence) plus
     its floor per-char rate — bit-identical in the DuckDB twin, and
     0 exactly when the text is one repeated character (or empty).
 
@@ -1040,8 +1042,6 @@ def char_entropy(df, id_col: str, text_col: str):
     lgs. Zero exchanges, zero Python; the histogram never leaves the
     row, so nothing shuffles per character.
     """
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_spark
-
     clg = ilog2_fxp_spark("c")
     nlg = ilog2_fxp_spark("size(cs)")
     staged = df.selectExpr(

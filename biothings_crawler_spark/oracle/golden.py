@@ -34,7 +34,6 @@ CRAWL_CFG = dict(max_rounds=2, default_budget=15, round_seconds=10.0,
                  obey_robots=True, n_segments=4,
                  bloom_bits_per_segment=1 << 14, bloom_hashes=5)
 JSONLD_N = 300
-SENTALIGN_N = 120
 
 
 def _dir() -> str:
@@ -141,33 +140,6 @@ def _jsonld_golden() -> str:
     }))
 
 
-def _sentalign_golden() -> str:
-    """Expected Gale-Church beads for the SENTALIGN_N fixture pairs,
-    from the frozen memoized-recursion aligner (oracle/galechurch.py);
-    the Spark side runs the iterative-table mapInPandas operator over
-    the same pairs."""
-    from biothings_crawler_spark.oracle import galechurch as gc
-
-    cols = {k: [] for k in ("src_url", "tgt_url", "bead_no", "src_lo",
-                            "src_hi", "tgt_lo", "tgt_hi", "bead_cost")}
-    for row in gc.fixture_rows(SENTALIGN_N):
-        sl = [len(x) for x in gc.split_sentences(row["src_text"])]
-        tl = [len(x) for x in gc.split_sentences(row["tgt_text"])]
-        for k, (lo, hi, tlo, thi, c) in enumerate(gc.align(sl, tl)):
-            cols["src_url"].append(row["src_url"])
-            cols["tgt_url"].append(row["tgt_url"])
-            cols["bead_no"].append(k)
-            cols["src_lo"].append(lo)
-            cols["src_hi"].append(hi)
-            cols["tgt_lo"].append(tlo)
-            cols["tgt_hi"].append(thi)
-            cols["bead_cost"].append(c)
-    return _write("sentalign_beads.parquet", pa.table({
-        k: pa.array(v, pa.string() if k.endswith("url") else pa.int64())
-        for k, v in cols.items()
-    }))
-
-
 def paths() -> dict[str, str]:
     """Generate-if-missing and return {name: parquet path}."""
     d = _dir()
@@ -176,11 +148,9 @@ def paths() -> dict[str, str]:
         "crawl_docs": os.path.join(d, "crawl_docs.parquet"),
         "refetch_docs": os.path.join(d, "refetch_docs.parquet"),
         "jsonld_items": os.path.join(d, "jsonld_items.parquet"),
-        "sentalign_beads": os.path.join(d, "sentalign_beads.parquet"),
     }
     if not all(os.path.exists(p) for p in need.values()):
         _crawl_golden()
         _refetch_golden()
         _jsonld_golden()
-        _sentalign_golden()
     return need

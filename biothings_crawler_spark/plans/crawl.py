@@ -186,8 +186,9 @@ def run_crawl(
     for rnd in range(rnd0, cfg.max_rounds):
         if frontier is None or not frontier.head(1):
             break
-        cand = dedup_frontier(frontier)
-        cand = apply_robots(cand, robots, cfg.obey_robots)
+        # frontier is already one row per URL: the seed build and the
+        # committed next_frontier both come out of dedup_frontier
+        cand = apply_robots(frontier, robots, cfg.obey_robots)
         cand = filter_unseen(
             cand,
             segments.select("segment_id", "bloom") if segments is not None else None,

@@ -4961,189 +4961,6 @@ WHERE NOT EXISTS (
 """
 
 
-_LM_TEXT = """CASE WHEN doc_id % 7 = 0 THEN reverse(text)
-     WHEN doc_id % 5 = 0 THEN text || ' ' || reverse(text)
-     ELSE text END"""
-_LM_TRAIN = "id % 2 = 0 AND id % 7 <> 0 AND id % 5 <> 0"
-
-
-def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM filter (operators/lm): train an exact-integer
-    bigram model on the clean half of the corpus, score a corpus with
-    planted casualties — doc_id%7 char-reversed (all-OOV -> tail),
-    doc_id%5 half-reversed (halved score -> middle) — and bucket into
-    head/middle/tail."""
-    from biothings_crawler_spark.operators.lm import lm_score, train_bigram_lm
-
-    d = _t(spark, sf_dir, "documents")
-    mutated = d.selectExpr("doc_id", _LM_TEXT + " AS text")
-    train = mutated.filter(_LM_TRAIN.replace("id", "doc_id"))
-    model = train_bigram_lm(train, "doc_id", "text", min_count=2)
-    return lm_score(mutated, model, "doc_id", "text")
-
-
-SQL_LM_SCORE = f"""
-WITH m AS (SELECT doc_id, {_LM_TEXT} AS text FROM documents),
-w AS (SELECT doc_id AS id, {_SQL_WORDS} AS ws FROM m),
-g AS (
-  SELECT id, CASE WHEN len(ws) >= 2
-             THEN list_transform(range(1, len(ws)),
-                                 i -> ws[i] || ' ' || ws[i + 1])
-             ELSE CAST([] AS VARCHAR[]) END AS grams
-  FROM w),
-tr AS (SELECT unnest(grams) AS bg FROM g WHERE {_LM_TRAIN}),
-big AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS c12 FROM tr GROUP BY bg),
-uni AS (SELECT split_part(bg, ' ', 1) AS w1, SUM(c12) AS c1
-        FROM big GROUP BY 1),
-mdl AS (SELECT bg, c12, CAST(c1 AS BIGINT) AS c1
-        FROM big JOIN uni ON split_part(big.bg, ' ', 1) = uni.w1
-        WHERE c12 >= 2),
-dg AS (SELECT id, unnest(grams) AS bg FROM g),
-sc AS (
-  SELECT dg.id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(COUNT(mdl.bg) AS BIGINT) AS n_seen,
-         SUM(CASE WHEN mdl.bg IS NOT NULL
-                  THEN mdl.c12 * 1000000 // mdl.c1 ELSE 0 END) AS s
-  FROM dg LEFT JOIN mdl USING (bg) GROUP BY dg.id),
-f AS (
-  SELECT d.id, CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         CAST(coalesce(n_seen, 0) AS BIGINT) AS n_seen,
-         CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-              THEN s // n_bigrams ELSE 0 END AS BIGINT) AS score_ppm,
-         CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-              THEN (n_bigrams - n_seen) * 1000000 // n_bigrams
-              ELSE 0 END AS BIGINT) AS oov_ppm
-  FROM (SELECT doc_id AS id FROM documents) d LEFT JOIN sc USING (id))
-SELECT id, n_bigrams, n_seen, score_ppm, oov_ppm,
-       CASE WHEN score_ppm >= 20000 THEN 'head'
-            WHEN score_ppm >= 2000 THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM f
-"""
-
-
-def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram scoring (operators/lm
-    .train_kn_bigram + kn_score, D=3/4) on the q_lm_score fixture:
-    clean-half training corpus, planted casualties (doc_id%7 reversed
-    -> backoff/continuation-only mass, doc_id%5 half-reversed).  Exact
-    integer ppm — discounted seen-bigram mass plus λ(w1)-weighted
-    continuation probability, the CCNet/KenLM smoothing family."""
-    from biothings_crawler_spark.operators.lm import kn_score, train_kn_bigram
-
-    d = _t(spark, sf_dir, "documents")
-    mutated = d.selectExpr("doc_id", _LM_TEXT + " AS text")
-    train = mutated.filter(_LM_TRAIN.replace("id", "doc_id"))
-    model = train_kn_bigram(train, "doc_id", "text")
-    return kn_score(mutated, model, "doc_id", "text")
-
-
-SQL_KNESER_NEY = f"""
-WITH m AS (SELECT doc_id, {_LM_TEXT} AS text FROM documents),
-w AS (SELECT doc_id AS id, {_SQL_WORDS} AS ws FROM m),
-g AS (
-  SELECT id, CASE WHEN len(ws) >= 2
-             THEN list_transform(range(1, len(ws)),
-                                 i -> ws[i] || ' ' || ws[i + 1])
-             ELSE CAST([] AS VARCHAR[]) END AS grams
-  FROM w),
-tr AS (SELECT unnest(grams) AS bg FROM g WHERE {_LM_TRAIN}),
-big AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS c12 FROM tr GROUP BY bg),
-w1tab AS (SELECT split_part(bg, ' ', 1) AS w1,
-                 CAST(SUM(c12) AS BIGINT) AS c1,
-                 CAST(COUNT(*) AS BIGINT) AS n1w1
-          FROM big GROUP BY 1),
-tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1tot FROM big),
-contp AS (
-  SELECT w2, CAST(n1w2 * 1000000 // n1tot AS BIGINT) AS pc_ppm
-  FROM (SELECT split_part(bg, ' ', 2) AS w2,
-               CAST(COUNT(*) AS BIGINT) AS n1w2
-        FROM big GROUP BY 1), tot),
-dgx AS (
-  SELECT id, bg, split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2
-  FROM (SELECT id, unnest(grams) AS bg FROM g)),
-sc AS (
-  SELECT dgx.id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(COUNT(big.bg) AS BIGINT) AS n_seen,
-         SUM(CASE WHEN big.bg IS NOT NULL
-                  THEN (4 * c12 - 3) * 1000000 // (4 * c1)
-                       + (3 * n1w1 * coalesce(pc_ppm, 0)) // (4 * c1)
-                  WHEN c1 IS NOT NULL
-                  THEN (3 * n1w1 * coalesce(pc_ppm, 0)) // (4 * c1)
-                  ELSE coalesce(pc_ppm, 0) END) AS s
-  FROM dgx LEFT JOIN big USING (bg) LEFT JOIN w1tab USING (w1)
-           LEFT JOIN contp USING (w2)
-  GROUP BY dgx.id)
-SELECT d.id, CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       CAST(coalesce(n_seen, 0) AS BIGINT) AS n_seen,
-       CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-            THEN s // n_bigrams ELSE 0 END AS BIGINT) AS kn_ppm,
-       CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-            THEN (n_bigrams - n_seen) * 1000000 // n_bigrams
-            ELSE 0 END AS BIGINT) AS oov_ppm
-FROM (SELECT doc_id AS id FROM documents) d LEFT JOIN sc USING (id)
-"""
-
-
-def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stupid-backoff bigram scoring (operators/lm.train_stupid_backoff
-    + sb_score, α=2/5 — Brants et al. EMNLP 2007, the MapReduce-scale
-    smoothing) on the same fixture as q_kneser_ney: seen bigrams score
-    their relative frequency, unseen back off to α times the w2
-    unigram frequency, all exact integer ppm."""
-    from biothings_crawler_spark.operators.lm import (
-        sb_score,
-        train_stupid_backoff,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    mutated = d.selectExpr("doc_id", _LM_TEXT + " AS text")
-    train = mutated.filter(_LM_TRAIN.replace("id", "doc_id"))
-    model = train_stupid_backoff(train, "doc_id", "text")
-    return sb_score(mutated, model, "doc_id", "text")
-
-
-SQL_STUPID_BACKOFF = f"""
-WITH m AS (SELECT doc_id, {_LM_TEXT} AS text FROM documents),
-w AS (SELECT doc_id AS id, {_SQL_WORDS} AS ws FROM m),
-g AS (
-  SELECT id, CASE WHEN len(ws) >= 2
-             THEN list_transform(range(1, len(ws)),
-                                 i -> ws[i] || ' ' || ws[i + 1])
-             ELSE CAST([] AS VARCHAR[]) END AS grams
-  FROM w),
-tr AS (SELECT id, unnest(grams) AS bg FROM g WHERE {_LM_TRAIN}),
-big0 AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS c12 FROM tr GROUP BY bg),
-big AS (SELECT bg, c12, CAST(c1 AS BIGINT) AS c1
-        FROM big0 JOIN (SELECT split_part(bg, ' ', 1) AS w1,
-                               SUM(c12) AS c1 FROM big0 GROUP BY 1) u
-        ON split_part(big0.bg, ' ', 1) = u.w1),
-toks AS (
-  SELECT w2 AS w, CAST(COUNT(*) AS BIGINT) AS cw
-  FROM (SELECT unnest(ws) AS w2 FROM w WHERE {_LM_TRAIN}) GROUP BY 1),
-tot AS (SELECT CAST(SUM(cw) AS BIGINT) AS ntok FROM toks),
-dgx AS (SELECT id, bg, split_part(bg, ' ', 2) AS w2
-        FROM (SELECT id, unnest(grams) AS bg FROM g)),
-sc AS (
-  SELECT dgx.id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(COUNT(big.bg) AS BIGINT) AS n_seen,
-         SUM(CASE WHEN big.bg IS NOT NULL THEN c12 * 1000000 // c1
-                  ELSE coalesce((2 * cw * 1000000) // (5 * ntok), 0)
-             END) AS s
-  FROM dgx LEFT JOIN big USING (bg)
-           LEFT JOIN (SELECT w AS w2, cw FROM toks) t USING (w2), tot
-  GROUP BY dgx.id)
-SELECT d.id, CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       CAST(coalesce(n_seen, 0) AS BIGINT) AS n_seen,
-       CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-            THEN s // n_bigrams ELSE 0 END AS BIGINT) AS sb_ppm,
-       CAST(CASE WHEN coalesce(n_bigrams, 0) > 0
-            THEN (n_bigrams - n_seen) * 1000000 // n_bigrams
-            ELSE 0 END AS BIGINT) AS oov_ppm
-FROM (SELECT doc_id AS id FROM documents) d LEFT JOIN sc USING (id)
-"""
-
-
 def _hre_fixture(S: str, D: str) -> tuple[str, str, str]:
     """(url, lang, html) SQL exprs for the hreflang-cluster fixture,
     dialect-parameterized (S = STRING/VARCHAR, D = div///).  3 language
@@ -5274,132 +5091,6 @@ SELECT s.align_key, s.u AS src_url, t.u AS tgt_url, t.lg AS tgt_lang
 FROM (SELECT * FROM k WHERE lg = 'en') s
 JOIN (SELECT * FROM k WHERE lg <> 'en') t USING (align_key)
 """
-
-
-def q_bitext_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bilingual-lexicon overlap verification of mined document pairs
-    (operators/bitext.bitext_lexicon_score — the Resnik-&-Smith-2003 /
-    CCAligned dictionary baseline): even docs are 'en' pages, odd slots
-    synthesize the paired 'de' page as a word-level translation
-    (lexicon = w -> 'q'||w over the corpus vocabulary).  Casualty
-    lanes: g%5 pairs carry the RAW untranslated text (fake pair,
-    ~0 overlap), g%3 pairs carry the translation of the NEXT group's
-    document (related-but-wrong page, partial vocabulary overlap);
-    everything else scores full coverage."""
-    from biothings_crawler_spark.operators.bitext import bitext_lexicon_score
-    from biothings_crawler_spark.operators.text import words_col
-
-    d = _t(spark, sf_dir, "documents")
-    src = d.filter("doc_id % 2 = 0").selectExpr(
-        "doc_id div 2 AS g", "text AS src_text"
-    )
-    nxt = src.selectExpr("g - 1 AS g", "src_text AS next_text")
-    base = src.join(nxt, "g", "left")
-
-    def tr(c):
-        return F.concat_ws(
-            " ", F.transform(words_col(c), lambda w: F.concat(F.lit("q"), w))
-        )
-
-    gs = F.col("g").cast("string")
-    url_s = F.concat(F.lit("https://en.site"), gs, F.lit(".example/d/"), gs)
-    url_t = F.concat(F.lit("https://de.site"), gs, F.lit(".example/d/"), gs)
-    tgt_text = (
-        F.when(F.col("g") % 5 == 0, F.col("src_text"))
-        .when(F.col("g") % 3 == 0,
-              tr(F.coalesce(F.col("next_text"), F.col("src_text"))))
-        .otherwise(tr(F.col("src_text")))
-    )
-    src_docs = base.select(url_s.alias("url"), F.col("src_text").alias("text"))
-    tgt_docs = base.select(url_t.alias("url"), tgt_text.alias("text"))
-    pairs = base.select(url_s.alias("src_url"), url_t.alias("tgt_url"))
-    lex = (
-        d.select(F.explode(words_col(F.col("text"))).alias("src_word"))
-        .distinct()
-        .select("src_word",
-                F.concat(F.lit("q"), F.col("src_word")).alias("tgt_word"))
-    )
-    return bitext_lexicon_score(pairs, src_docs, tgt_docs, lex)
-
-
-def _sql_bitext() -> str:
-    def W(e: str) -> str:
-        return _SQL_WORDS.replace("lower(text)", f"lower({e})")
-
-    def TR(e: str) -> str:
-        return f"array_to_string(list_transform({W(e)}, w -> 'q' || w), ' ')"
-
-    us = "'https://en.site' || CAST(g AS VARCHAR) || '.example/d/' || CAST(g AS VARCHAR)"
-    ut = "'https://de.site' || CAST(g AS VARCHAR) || '.example/d/' || CAST(g AS VARCHAR)"
-    return f"""
-WITH src AS (
-  SELECT doc_id // 2 AS g, text AS src_text FROM documents
-  WHERE doc_id % 2 = 0),
-nxt AS (SELECT g - 1 AS g, src_text AS next_text FROM src),
-tx AS (
-  SELECT src.g, src_text,
-         CASE WHEN src.g % 5 = 0 THEN src_text
-              WHEN src.g % 3 = 0
-              THEN {TR("coalesce(next_text, src_text)")}
-              ELSE {TR("src_text")} END AS tgt_text
-  FROM src LEFT JOIN nxt USING (g)),
-pairs AS (SELECT {us} AS src_url, {ut} AS tgt_url FROM tx),
-lex AS (
-  SELECT DISTINCT w AS src_word, 'q' || w AS tgt_word
-  FROM (SELECT unnest({_SQL_WORDS}) AS w FROM documents)),
-sw AS (
-  SELECT DISTINCT {us} AS url, unnest({W("src_text")}) AS w FROM tx),
-tw AS (
-  SELECT DISTINCT {ut} AS url, unnest({W("tgt_text")}) AS w FROM tx),
-pw AS (
-  SELECT p.src_url, p.tgt_url, sw.w,
-         MAX(CASE WHEN l.src_word IS NOT NULL THEN 1 ELSE 0 END) AS in_lex,
-         MAX(CASE WHEN t2.w IS NOT NULL THEN 1 ELSE 0 END) AS covered
-  FROM pairs p
-  JOIN sw ON sw.url = p.src_url
-  LEFT JOIN lex l ON l.src_word = sw.w
-  LEFT JOIN tw t2 ON t2.url = p.tgt_url AND t2.w = l.tgt_word
-  GROUP BY 1, 2, 3),
-sc AS (
-  SELECT src_url, tgt_url, CAST(COUNT(*) AS BIGINT) AS n_src_words,
-         CAST(SUM(in_lex) AS BIGINT) AS n_lexical,
-         CAST(SUM(covered) AS BIGINT) AS n_covered
-  FROM pw GROUP BY 1, 2)
-SELECT p.src_url, p.tgt_url,
-       CAST(coalesce(n_src_words, 0) AS BIGINT) AS n_src_words,
-       CAST(coalesce(n_lexical, 0) AS BIGINT) AS n_lexical,
-       CAST(coalesce(n_covered, 0) AS BIGINT) AS n_covered,
-       CAST(CASE WHEN coalesce(n_lexical, 0) > 0
-            THEN n_covered * 1000000 // n_lexical ELSE 0 END AS BIGINT)
-         AS overlap_ppm
-FROM pairs p LEFT JOIN sc USING (src_url, tgt_url)
-"""
-
-
-SQL_BITEXT_VERIFY = _sql_bitext()
-
-
-def q_sent_align(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gale-Church sentence alignment (operators/sentalign
-    .gale_church_align — integer bead penalties from Gale & Church CL
-    1993, exact-rational length term): the iterative-DP mapInPandas
-    operator over the deterministic fixture pairs
-    (oracle/galechurch.fixture_rows: 2-1 merges, surplus/deficit target
-    ends) vs the frozen memoized-recursion aligner materialized to
-    golden parquet — an exact cross-implementation pair, same pattern
-    as the BFS crawl golden."""
-    from biothings_crawler_spark.operators.sentalign import gale_church_align
-    from biothings_crawler_spark.oracle import galechurch as gc
-    from biothings_crawler_spark.oracle.golden import SENTALIGN_N
-
-    pairs = spark.createDataFrame(gc.fixture_rows(SENTALIGN_N))
-    return gale_church_align(pairs)
-
-
-SQL_SENT_ALIGN = (
-    "SELECT src_url, tgt_url, bead_no, src_lo, src_hi, tgt_lo, tgt_hi, "
-    f"bead_cost FROM read_parquet('{_GOLDEN['sentalign_beads']}')"
-)
 
 
 _RAG_M = 24   # chunk token budget
@@ -5627,162 +5318,6 @@ FROM fg GROUP BY host
 
 
 SQL_AI_OPTOUT = _sql_ai_optout()
-
-
-_TILE_W, _TILE_K = 10, 2
-
-
-def q_texttiling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextTiling topic segmentation (operators/texttiling — Hearst CL
-    1997 with the squared-cosine ppm surrogate and the sqrt-free
-    integer cutoff): fixture doc = text followed by its z-prefixed
-    twin, a vocabulary-disjoint second topic, so the strongest depth
-    lands at the junction gap.  Three hash aggs + one bounded per-doc
-    collect; the depth fold is row-local."""
-    from biothings_crawler_spark.operators.texttiling import texttiling
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit(" "),
-            F.regexp_replace("text", r"(\S+)", r"z$1"),
-        ).alias("t"),
-    )
-    return texttiling(d, "doc_id", "t", w=_TILE_W, k=_TILE_K)
-
-
-def _sql_tile_core(w: int, k: int) -> str:
-    """Shared CTE prefix for the tiling twins: the two-topic fixture,
-    the agg pipeline, and the depth fold — ends at ``st`` with
-    ``(doc_id, ntok, sc, m, d, sd, sd2)``."""
-    return f"""
-WITH dd AS (
-  SELECT doc_id,
-         text || ' ' || regexp_replace(text, '(\\S+)', 'z\\1', 'g') AS text
-  FROM documents),
-w2 AS (
-  SELECT doc_id, ws, len(ws) AS ntok
-  FROM (SELECT doc_id, {_SQL_WORDS} AS ws FROM dd)
-  WHERE len(ws) > {w}),
-tok AS (
-  SELECT doc_id, ntok, CAST((ntok + {w} - 1) // {w} AS INTEGER) AS pp,
-         CAST((i - 1) // {w} AS INTEGER) AS p,
-         ws[CAST(i AS INTEGER)] AS tok
-  FROM w2, unnest(range(1, len(ws) + 1)) AS u(i)),
-cnt AS (
-  SELECT doc_id, ntok, pp, p, tok, COUNT(*) AS c FROM tok GROUP BY ALL),
-sides AS (
-  SELECT doc_id, ntok, tok, c, CAST(g AS INTEGER) AS gap, 'l' AS side
-  FROM cnt, unnest(range(p + 1, p + {k} + 1)) AS u(g)
-  WHERE g >= 1 AND g <= pp - 1
-  UNION ALL
-  SELECT doc_id, ntok, tok, c, CAST(g AS INTEGER) AS gap, 'r' AS side
-  FROM cnt, unnest(range(p - {k} + 1, p + 1)) AS u(g)
-  WHERE g >= 1 AND g <= pp - 1),
-pt AS (
-  SELECT doc_id, ntok, gap, tok,
-         SUM(CASE WHEN side = 'l' THEN c ELSE 0 END) AS cl,
-         SUM(CASE WHEN side = 'r' THEN c ELSE 0 END) AS cr
-  FROM sides GROUP BY ALL),
-sc0 AS (
-  SELECT doc_id, ntok, gap,
-         CAST(SUM(cl * cr) * SUM(cl * cr) * 1000000
-              // (SUM(cl * cl) * SUM(cr * cr)) AS BIGINT) AS s
-  FROM pt GROUP BY doc_id, ntok, gap),
-ar AS (SELECT doc_id, ntok, list(s ORDER BY gap) AS sc
-       FROM sc0 GROUP BY doc_id, ntok),
-dp AS (
-  SELECT doc_id, ntok, sc, len(sc) AS m,
-    list_transform(range(0, len(sc)), j ->
-      sc[list_max(list_filter(range(0, j + 1),
-           t -> t = 0 OR sc[t] < sc[t + 1])) + 1]
-      + sc[list_min(list_filter(range(j, len(sc)),
-           t -> t = len(sc) - 1 OR sc[t + 2] < sc[t + 1])) + 1]
-      - 2 * sc[j + 1]) AS d
-  FROM ar),
-st AS (
-  SELECT doc_id, ntok, sc, m, d, list_sum(d) AS sd,
-         list_sum(list_transform(d, x -> x * x)) AS sd2
-  FROM dp)"""
-
-
-def _sql_texttiling() -> str:
-    w = _TILE_W
-    dj = "d[CAST(j AS INTEGER)]"
-    b = f"(2 * sd - 2 * m * {dj})"
-    return f"""{_sql_tile_core(_TILE_W, _TILE_K)}
-SELECT doc_id, CAST(j AS INT) AS gap, CAST(j * {w} AS INT) AS pos,
-  CAST(sc[CAST(j AS INTEGER)] AS BIGINT) AS score_ppm,
-  CAST({dj} AS BIGINT) AS depth,
-  ({b} < 0 OR m * sd2 - sd * sd > {b} * {b}) AS is_boundary
-FROM st, unnest(range(1, m + 1)) AS u(j)
-"""
-
-
-SQL_TEXTTILING = _sql_texttiling()
-
-
-_TILE_M = 40  # topic-chunk token budget
-
-
-def q_topic_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic chunking (operators/texttiling.topic_chunks): TextTiling
-    boundaries first, token budget second — chunks never straddle a
-    topic shift.  Same two-topic fixture as q_texttiling, so the
-    z-twin junction must always be a chunk edge."""
-    from biothings_crawler_spark.operators.texttiling import topic_chunks
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit(" "),
-            F.regexp_replace("text", r"(\S+)", r"z$1"),
-        ).alias("t"),
-    )
-    return topic_chunks(d, "doc_id", "t",
-                        w=_TILE_W, k=_TILE_K, max_tokens=_TILE_M)
-
-
-def _sql_topic_chunks() -> str:
-    w, s = _TILE_W, max(1, _TILE_M // _TILE_W)
-    x = "2 * sd - 2 * m * x"
-    cj = "ck[CAST(j AS INTEGER)]"
-    hi = f"least({cj}.phi * {w}, ntok)"
-    return f"""{_sql_tile_core(_TILE_W, _TILE_K)},
-bf AS (
-  SELECT doc_id, ntok, m,
-    list_transform(d, x -> {x} < 0
-      OR m * sd2 - sd * sd > ({x}) * ({x})) AS bf
-  FROM st),
-ct AS (
-  SELECT doc_id, ntok,
-    list_concat(list_concat([0],
-      list_filter(range(1, m + 1), g -> bf[CAST(g AS INTEGER)])),
-      [m + 1]) AS cuts
-  FROM bf),
-ck AS (
-  SELECT doc_id, ntok,
-    flatten(list_transform(range(1, len(cuts)), si ->
-      list_transform(range(0,
-          (cuts[CAST(si + 1 AS INTEGER)] - cuts[CAST(si AS INTEGER)] - 1)
-          // {s} + 1), t ->
-        struct_pack(
-          seg := si - 1,
-          plo := cuts[CAST(si AS INTEGER)] + t * {s},
-          phi := least(cuts[CAST(si AS INTEGER)] + (t + 1) * {s},
-                       cuts[CAST(si + 1 AS INTEGER)]))))) AS ck
-  FROM ct)
-SELECT doc_id,
-  CAST({cj}.seg AS INT) AS seg_id,
-  CAST(j - 1 AS INT) AS chunk_id,
-  CAST({cj}.plo * {w} AS INT) AS tok_lo,
-  CAST({hi} AS INT) AS tok_hi,
-  CAST({hi} - {cj}.plo * {w} AS INT) AS n_tokens
-FROM ck, unnest(range(1, len(ck) + 1)) AS u(j)
-"""
-
-
-SQL_TOPIC_CHUNKS = _sql_topic_chunks()
 
 
 def q_sitemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6334,103 +5869,6 @@ a AS (
     AND NOT (CASE WHEN hid % 3 = 0 THEN path LIKE '/tmp/%'
                   ELSE path LIKE '/private/%' END))
 SELECT host, url_canon FROM a
-"""
-
-
-_TP_FWD = """CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'alpha beta gamma delta epsilon.'
-  WHEN 1 THEN 'beta gamma delta epsilon zeta.'
-  WHEN 2 THEN 'gamma delta epsilon zeta eta.'
-  ELSE 'delta epsilon zeta eta theta.'
-END"""
-_TP_REV = """CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'epsilon delta gamma beta alpha.'
-  WHEN 1 THEN 'zeta epsilon delta gamma beta.'
-  WHEN 2 THEN 'eta zeta epsilon delta gamma.'
-  ELSE 'theta eta zeta epsilon delta.'
-END"""
-_TP_SENT = (f"CASE WHEN doc_id % 6 = 1 THEN {_TP_REV} ELSE {_TP_FWD} END")
-
-
-def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed training-data tail (plans/pipeline.training_prep):
-    C4 filter -> bigram-LM tail-drop -> greedy packing, on pages of
-    doc_id%9 repeated shared-vocab sentences.  Casualties: <5-sentence
-    pages die at C4; doc_id%6==1 pages use word-reversed sentences
-    (all bigrams OOV vs the even-id model) and die at the LM stage."""
-    from biothings_crawler_spark.plans.pipeline import training_prep
-
-    pages = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        f"repeat(({_TP_SENT}) || chr(10), CAST(doc_id % 9 AS INT)) AS ptext",
-    )
-    return training_prep(pages, "doc_id", "ptext")
-
-
-SQL_TRAINING_PREP = f"""
-WITH RECURSIVE pg AS (
-  SELECT doc_id AS id,
-         repeat(({_TP_SENT}) || chr(10), CAST(doc_id % 9 AS INT)) AS ptext
-  FROM documents),
-cl AS (
-  SELECT id,
-         list_filter(string_split(ptext, chr(10)),
-           l -> len(list_filter(string_split_regex(trim(l), '\\s+'),
-                                x -> len(x) > 0)) >= 3
-                AND regexp_matches(trim(l), '[.!?"]$')
-                AND NOT contains(lower(trim(l)), 'javascript')) AS kept,
-         contains(lower(ptext), 'lorem ipsum') AS lorem,
-         contains(ptext, '{{') AS brace
-  FROM pg),
-c4 AS (
-  SELECT id, coalesce(array_to_string(kept, chr(10)), '') AS text,
-         CAST(len(regexp_extract_all(
-           coalesce(array_to_string(kept, chr(10)), ''), '([.!?])', 1))
-           AS BIGINT) AS n_sent,
-         lorem, brace
-  FROM cl),
-keep AS (SELECT id, text FROM c4
-         WHERE NOT lorem AND NOT brace AND n_sent >= 5),
-w AS (SELECT id, {_SQL_WORDS} AS ws FROM keep),
-g AS (
-  SELECT id, CASE WHEN len(ws) >= 2
-             THEN list_transform(range(1, len(ws)),
-                                 i -> ws[i] || ' ' || ws[i + 1])
-             ELSE CAST([] AS VARCHAR[]) END AS grams
-  FROM w),
-tr AS (SELECT unnest(grams) AS bg FROM g WHERE id % 2 = 0),
-big AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS c12 FROM tr GROUP BY bg),
-uni AS (SELECT split_part(bg, ' ', 1) AS w1, SUM(c12) AS c1
-        FROM big GROUP BY 1),
-mdl AS (SELECT bg, c12, CAST(c1 AS BIGINT) AS c1
-        FROM big JOIN uni ON split_part(big.bg, ' ', 1) = uni.w1
-        WHERE c12 >= 2),
-dg AS (SELECT id, unnest(grams) AS bg FROM g),
-sc AS (
-  SELECT dg.id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         SUM(CASE WHEN mdl.bg IS NOT NULL
-                  THEN mdl.c12 * 1000000 // mdl.c1 ELSE 0 END) AS s
-  FROM dg LEFT JOIN mdl USING (bg) GROUP BY dg.id),
-good AS (
-  SELECT k.id, k.text FROM keep k JOIN sc ON sc.id = k.id
-  WHERE CASE WHEN n_bigrams > 0 THEN s // n_bigrams ELSE 0 END >= 2000),
-base AS (
-  SELECT id, id % 8 AS shard, least(tokc, 128) AS tok, tokc > 128 AS oversized
-  FROM (SELECT id, {_SQL_TOKENS} AS tokc FROM good)),
-o AS (SELECT id, shard, tok, oversized,
-             row_number() OVER (PARTITION BY shard ORDER BY id) AS rn
-      FROM base),
-p AS (
-  SELECT id, shard, rn, tok, oversized, CAST(0 AS BIGINT) AS bin, tok AS fill
-  FROM o WHERE rn = 1
-  UNION ALL
-  SELECT o.id, o.shard, o.rn, o.tok, o.oversized,
-         CASE WHEN p.fill + o.tok <= 128 THEN p.bin ELSE p.bin + 1 END,
-         CASE WHEN p.fill + o.tok <= 128 THEN p.fill + o.tok ELSE o.tok END
-  FROM p JOIN o ON o.shard = p.shard AND o.rn = p.rn + 1)
-SELECT id, CAST(shard AS BIGINT) AS shard, bin, CAST(tok AS BIGINT) AS tok,
-       CAST(fill AS BIGINT) AS fill_after, oversized
-FROM p
 """
 
 
@@ -7001,34 +6439,24 @@ binned AS (
   SELECT host, CAST(length(bin(v)) - 1 AS BIGINT) AS bin,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM f GROUP BY host, CAST(length(bin(v)) - 1 AS BIGINT)),
-per_host AS (
-  SELECT host, CAST(SUM(n) AS BIGINT) AS n,
-         list({'bin': bin, 'n': n} ORDER BY bin) AS bins
-  FROM binned GROUP BY host),
+cum AS (
+  SELECT host, bin,
+         CAST(SUM(n) OVER (PARTITION BY host ORDER BY bin) AS BIGINT) AS cum,
+         CAST(SUM(n) OVER (PARTITION BY host) AS BIGINT) AS n
+  FROM binned),
 q AS (
-  -- field order matters: DuckDB list_reduce materializes the result
-  -- struct field-by-field IN LITERAL ORDER and later fields see the
-  -- already-updated accumulator, so 'cum' must come LAST or the
-  -- quantile conditions read post-increment cum (off-by-one bin)
+  -- first bin whose running count reaches the quantile; a window sum
+  -- plus a filtered MIN gives the same cells at every DuckDB thread
+  -- count, which a struct-accumulator list_reduce fold does not
   SELECT host, n,
-         list_reduce(
-           list_prepend({'b50': CAST(-1 AS BIGINT), 'b95': CAST(-1 AS BIGINT),
-                         'b99': CAST(-1 AS BIGINT), 'cum': CAST(0 AS BIGINT)},
-                        list_transform(bins, s -> {'b50': s.bin, 'b95': s.bin,
-                                                   'b99': s.bin, 'cum': s.n})),
-           (acc, s) -> {
-             'b50': CASE WHEN acc.b50 = -1 AND (acc.cum + s.cum) * 1000000 >= n * 500000
-                         THEN s.b50 ELSE acc.b50 END,
-             'b95': CASE WHEN acc.b95 = -1 AND (acc.cum + s.cum) * 1000000 >= n * 950000
-                         THEN s.b95 ELSE acc.b95 END,
-             'b99': CASE WHEN acc.b99 = -1 AND (acc.cum + s.cum) * 1000000 >= n * 990000
-                         THEN s.b99 ELSE acc.b99 END,
-             'cum': acc.cum + s.cum}) AS r
-  FROM per_host)
+         MIN(bin) FILTER (WHERE cum * 1000000 >= n * 500000) AS b50,
+         MIN(bin) FILTER (WHERE cum * 1000000 >= n * 950000) AS b95,
+         MIN(bin) FILTER (WHERE cum * 1000000 >= n * 990000) AS b99
+  FROM cum GROUP BY host, n)
 SELECT host, n,
-       (CAST(1 AS BIGINT) << CAST(r.b50 + 1 AS INT)) - 1 AS p50_us,
-       (CAST(1 AS BIGINT) << CAST(r.b95 + 1 AS INT)) - 1 AS p95_us,
-       (CAST(1 AS BIGINT) << CAST(r.b99 + 1 AS INT)) - 1 AS p99_us
+       (CAST(1 AS BIGINT) << CAST(b50 + 1 AS INT)) - 1 AS p50_us,
+       (CAST(1 AS BIGINT) << CAST(b95 + 1 AS INT)) - 1 AS p95_us,
+       (CAST(1 AS BIGINT) << CAST(b99 + 1 AS INT)) - 1 AS p99_us
 FROM q
 """
 
@@ -7351,22 +6779,18 @@ binned AS (
   SELECT host, CAST(length(bin(v)) - 1 AS BIGINT) AS bin,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM f GROUP BY host, CAST(length(bin(v)) - 1 AS BIGINT)),
-ph AS (
-  SELECT host, CAST(SUM(n) AS BIGINT) AS n,
-         list({'bin': bin, 'n': n} ORDER BY bin) AS bins
-  FROM binned GROUP BY host),
+cum AS (
+  SELECT host, bin,
+         CAST(SUM(n) OVER (PARTITION BY host ORDER BY bin) AS BIGINT) AS cum,
+         CAST(SUM(n) OVER (PARTITION BY host) AS BIGINT) AS n
+  FROM binned),
 lat AS (
-  -- running counter LAST: see SQL_LATENCY_QUANTILES field-order note
+  -- same p95 rule as SQL_LATENCY_QUANTILES
   SELECT host,
          (CAST(1 AS BIGINT) << CAST(
-            list_reduce(
-              list_prepend({'b': CAST(-1 AS BIGINT), 'cum': CAST(0 AS BIGINT)},
-                           list_transform(bins, s -> {'b': s.bin, 'cum': s.n})),
-              (acc, s) -> {
-                'b': CASE WHEN acc.b = -1 AND (acc.cum + s.cum) * 1000000 >= n * 950000
-                          THEN s.b ELSE acc.b END,
-                'cum': acc.cum + s.cum}).b + 1 AS INT)) - 1 AS p95_us
-  FROM ph)
+            MIN(bin) FILTER (WHERE cum * 1000000 >= n * 950000) + 1 AS INT))
+           - 1 AS p95_us
+  FROM cum GROUP BY host)
 SELECT r.host, r.rate_rph, l.p95_us,
        CAST(GREATEST(CAST(1 AS BIGINT),
                      LEAST(r.rate_rph * 600 // 3600,
@@ -10140,121 +9564,6 @@ SELECT a.host AS host_a, b.host AS host_b
 FROM h a, h b
 WHERE a.host < b.host AND levenshtein(a.host, b.host) = 1
 """
-
-
-
-def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from biothings_crawler_spark.operators.bpe import word_counts
-    return word_counts(_t(spark, sf_dir, "documents"), "text")
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge training (operators/bpe.bpe_train): 6 rounds of
-    weighted adjacent-pair counting + greedy merge over the corpus
-    word table.  The oracle replays the SAME training loop as chained
-    SQL CTEs — per round one pair aggregate, one deterministic argmax
-    (cnt DESC, left ASC, right ASC), one padded string-fold merge
-    application — and must land on the identical merge table."""
-    from biothings_crawler_spark.operators.bpe import bpe_train
-
-    merges, _ = bpe_train(spark, _bpe_words(spark, sf_dir), n_merges=6)
-    return spark.createDataFrame(
-        merges, "rank int, lft string, rgt string, cnt long")
-
-
-def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final BPE segmentation of every corpus word after the 6 learned
-    merges — the per-word evidence that engine and oracle walked the
-    same training trajectory (a divergence at ANY round changes
-    downstream segment strings)."""
-    from biothings_crawler_spark.operators.bpe import bpe_train
-
-    _, seg = bpe_train(spark, _bpe_words(spark, sf_dir), n_merges=6)
-    return seg.select("w", "weight", "seq")
-
-
-def _sql_bpe_oracle(n_merges: int = 6, max_tokens: int = 14,
-                    final: str = "merges") -> str:
-    """Chained-CTE DuckDB twin of bpe_train.  The merge-application
-    fold keeps string-only state padded to a fixed length (both
-    v1.0.0 list_reduce pitfalls avoided); the round's best pair is
-    CROSS JOINed into the row first because DuckDB lambdas cannot
-    contain subqueries."""
-    def fold() -> str:
-        # SINGLE-field string state 'out<US>prev' (US = chr(31)):
-        # experiments show DuckDB 1.0 struct-accumulator lambdas read
-        # sibling fields PRE-update at small row counts but POST-update
-        # past ~tens of rows (vector-strategy dependent), so any fold
-        # whose field reads another mutated field is row-count-unsound.
-        # One field reading only ITSELF is safe in either order.
-        # Tokens come off the plain STRING via split_part (a varying-
-        # length LIST column inside a lambda corrupts across rows —
-        # the CDC oracle documents that sibling bug).
-        live = "(x.i <= len(seq) - len(replace(seq, ' ', '')) + 1)"
-        t = "split_part(seq, ' ', x.i)"
-        op = "split_part(acc.s, chr(31), 1)"
-        pv = "split_part(acc.s, chr(31), 2)"
-        merging = f"({pv} = ma AND {t} = mb)"
-        new_out = (f"CASE WHEN NOT {live} OR {merging} OR {pv} = '' "
-                   f"THEN {op} WHEN {op} = '' THEN {pv} "
-                   f"ELSE {op} || ' ' || {pv} END")
-        new_prev = (f"CASE WHEN NOT {live} THEN {pv} "
-                    f"WHEN {merging} THEN ma || mb ELSE {t} END")
-        return f"""list_reduce(
-      list_prepend(struct_pack(s := chr(31), i := 0),
-        list_transform(range(1, {max_tokens} + 1), j ->
-          struct_pack(s := '', i := CAST(j AS INTEGER)))),
-      (acc, x) -> struct_pack(
-        s := ({new_out}) || chr(31) || ({new_prev}),
-        i := 0))"""
-
-    rounds = []
-    for k in range(1, n_merges + 1):
-        rounds.append(f"""p{k} AS (
-  SELECT toks[CAST(i AS INTEGER)] AS a,
-         toks[CAST(i AS INTEGER) + 1] AS b,
-         CAST(sum(weight) AS BIGINT) AS cnt
-  FROM (SELECT weight, string_split(seq, ' ') AS toks FROM s{k-1}) t,
-       unnest(range(1, len(toks))) u(i)
-  GROUP BY 1, 2),
-b{k} AS (SELECT a, b, cnt FROM p{k} ORDER BY cnt DESC, a, b LIMIT 1),
-j{k} AS (
-  SELECT w, weight, seq, b.a AS ma, b.b AS mb
-  FROM s{k-1}, b{k} b),
-f{k} AS (
-  SELECT w, weight, {fold()} AS st FROM j{k}),
-s{k} AS (
-  SELECT w, weight,
-    split_part(st.s, chr(31), 1)
-    || CASE WHEN split_part(st.s, chr(31), 2) = '' THEN ''
-            ELSE ' ' || split_part(st.s, chr(31), 2) END AS seq
-  FROM f{k})""")
-    chain = ",\n".join(rounds)
-    if final == "merges":
-        sel = "\nUNION ALL\n".join(
-            f"SELECT CAST({k-1} AS INT) AS rank, a AS lft, b AS rgt, cnt "
-            f"FROM b{k}" for k in range(1, n_merges + 1))
-    else:
-        sel = f"SELECT w, weight, seq FROM s{n_merges}"
-    return f"""
-WITH wc AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS weight
-  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        FROM documents)
-  WHERE len(w) > 0 AND len(w) <= 12
-  GROUP BY w),
-s0 AS (
-  SELECT w, weight,
-    array_to_string(list_transform(range(1, len(w) + 1),
-      i -> substr(w, CAST(i AS INTEGER), 1)), ' ') || ' $' AS seq
-  FROM wc),
-{chain}
-{sel}
-"""
-
-
-SQL_BPE_MERGES = _sql_bpe_oracle(final="merges")
-SQL_BPE_SEGMENT = _sql_bpe_oracle(final="segment")
 
 
 
@@ -13695,111 +13004,6 @@ FROM totals t JOIN pe ON pe.grp = t.grp
 """
 
 
-N_MINE_SRC = 500
-
-
-def q_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-based bitext mining (operators/bitext.margin_mining,
-    Artetxe & Schwenk ratio margin, mutual-best): the 'de' side is the
-    'en' vector under a tiny deterministic perturbation (true pairs,
-    cos ~ 0.999) except every vec_id%10==2, whose pair is sign-flipped
-    (hubness decoy — its best match is an unrelated vector with margin
-    ~ 1.1, which the 1.3 threshold rejects while true pairs score ~2).
-    Candidates here are the bounded brute set (the production path
-    plugs the IVF probe in); oracle replays windows, sums and the
-    integer margin."""
-    from biothings_crawler_spark.operators.bitext import margin_mining
-
-    e = _t(spark, sf_dir, "embeddings")
-    pert = F.transform(
-        F.col("embedding"),
-        lambda x, i: (
-            x + (((F.col("vec_id") * (i + F.lit(1))) % 7) - 3)
-            .cast("double") * F.lit(0.01)
-        ).cast("float"),
-    )
-    alt = F.transform(
-        F.col("embedding"),
-        lambda x, i: (
-            x * F.when((i + 1) % 2 == 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-        ).cast("float"),
-    )
-    def norm(v) -> F.Column:
-        return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x),
-                                  F.lit(0.0), lambda acc, x: acc + x))
-
-    # norms are per-SIDE quantities: computing them once per row here
-    # (instead of per pair inside a cosine call) cuts the pair work to
-    # a single dot fold — same expression tree per value, so the
-    # doubles are bit-identical to the per-pair formulation.
-    tgt = e.select(
-        F.col("vec_id").alias("tgt_id"),
-        F.when(F.col("vec_id") % 10 == 2, alt).otherwise(pert).alias("tv"),
-    ).withColumn("tn", norm(F.col("tv")))
-    src = e.filter(F.col("vec_id") < N_MINE_SRC).select(
-        F.col("vec_id").alias("src_id"), F.col("embedding").alias("sv"),
-    ).withColumn("sn", norm(F.col("sv"))).repartition(32)
-    dot = F.aggregate(F.zip_with(F.col("sv"), F.col("tv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cand = src.crossJoin(tgt).select(
-        "src_id", "tgt_id",
-        F.floor(dot / (F.col("sn") * F.col("tn")) * 1_000_000)
-        .cast("long").alias("cos_ppm"),
-    )
-    return margin_mining(cand)
-
-
-SQL_MARGIN_MINING = f"""
-WITH tgt AS (
-  SELECT vec_id AS tgt_id,
-         CASE WHEN vec_id % 10 = 2
-              THEN list_transform(embedding, (x, i) ->
-                     CAST(x * (CASE WHEN i % 2 = 0 THEN -1.0 ELSE 1.0 END)
-                          AS FLOAT))
-              ELSE list_transform(embedding, (x, i) ->
-                     CAST(x + CAST((vec_id * i) % 7 - 3 AS DOUBLE)
-                              * CAST(0.01 AS DOUBLE) AS FLOAT))
-         END AS tv
-  FROM embeddings),
-src AS (SELECT vec_id AS src_id, embedding AS sv FROM embeddings
-        WHERE vec_id < {{n_src}}),
-cand0 AS (
-  SELECT src_id, tgt_id,
-         CAST(floor({_sql_cosine('sv', 'tv')} * 1000000) AS BIGINT)
-           AS cos_ppm
-  FROM src, tgt),
-cand AS (SELECT * FROM cand0 WHERE cos_ppm > 0),
-rs AS (SELECT *, row_number() OVER (PARTITION BY src_id
-         ORDER BY cos_ppm DESC, src_id, tgt_id) AS rn FROM cand),
-rt AS (SELECT *, row_number() OVER (PARTITION BY tgt_id
-         ORDER BY cos_ppm DESC, src_id, tgt_id) AS rn FROM cand),
-ss AS (SELECT src_id, CAST(SUM(cos_ppm) AS BIGINT) AS sum_s,
-              CAST(COUNT(*) AS BIGINT) AS m_s
-       FROM rs WHERE rn <= 4 GROUP BY src_id),
-st AS (SELECT tgt_id, CAST(SUM(cos_ppm) AS BIGINT) AS sum_t,
-              CAST(COUNT(*) AS BIGINT) AS m_t
-       FROM rt WHERE rn <= 4 GROUP BY tgt_id),
-fwd AS (SELECT src_id, tgt_id FROM rs WHERE rn = 1),
-bwd AS (SELECT src_id, tgt_id FROM rt WHERE rn = 1),
-mutual AS (SELECT f.src_id, f.tgt_id FROM fwd f
-           JOIN bwd b ON b.src_id = f.src_id AND b.tgt_id = f.tgt_id),
-o AS (
-  SELECT c.src_id, c.tgt_id, c.cos_ppm,
-         c.cos_ppm * 2 * ss.m_s * st.m_t * 1000000
-           // (ss.sum_s * st.m_t + st.sum_t * ss.m_s) AS margin
-  FROM cand c
-  JOIN mutual m ON m.src_id = c.src_id AND m.tgt_id = c.tgt_id
-  JOIN ss ON ss.src_id = c.src_id
-  JOIN st ON st.tgt_id = c.tgt_id)
-SELECT src_id, tgt_id, cos_ppm,
-       CAST(margin AS BIGINT) AS margin_ppm,
-       CAST(CASE WHEN margin >= 1300000 THEN 1 ELSE 0 END AS BIGINT)
-         AS mined
-FROM o
-""".format(n_src=N_MINE_SRC)
-
-
 def q_rdfa_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RDFa Lite extraction (operators/rdfa.rdfa_extract — REAL stdlib
     HTMLParser, like the microdata sibling): body-level vocab
@@ -14994,70 +14198,6 @@ WHERE rn <= {POLITENESS_BUDGET}
 """
 
 
-def q_lm_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language LM tercile bucketing (operators/lm.tercile_cutoffs
-    + bucket_by_terciles) — CCNet's actual bucketing rule (per-language
-    perplexity terciles, Wenzek et al. §3.3) replacing q_lm_score's
-    fixed thresholds: cutoffs come from a bounded (lang, bin) histogram
-    window (<= 1001 rows per language), never a per-language sort of
-    the corpus, then return by broadcast join. Same planted-casualty
-    scoring fixture as q_lm_score."""
-    from biothings_crawler_spark.operators.lm import (
-        bucket_by_terciles,
-        lm_score,
-        tercile_cutoffs,
-        train_bigram_lm,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    mutated = d.selectExpr("doc_id", _LM_TEXT + " AS text")
-    train = mutated.filter(_LM_TRAIN.replace("id", "doc_id"))
-    model = train_bigram_lm(train, "doc_id", "text", min_count=2)
-    scored = lm_score(mutated, model, "doc_id", "text").drop("bucket")
-    scored = scored.join(
-        d.select(F.col("doc_id").alias("id"), "lang"), "id"
-    ).localCheckpoint(eager=True)
-    # ^ the standard mid-pipeline materialization: the cutoff pass and
-    # the bucketing join both read `scored` — without it the whole
-    # train+score chain re-executes per consumer (measured 14.9 s ->
-    # ~2 s at sf0.1; at 100 TB this is a persisted table between the
-    # scoring job and the bucketing job)
-    cuts = tercile_cutoffs(scored, "lang")
-    return bucket_by_terciles(scored, cuts, "lang").select(
-        "id", "lang", "score_ppm", "bucket"
-    )
-
-
-# reuse q_lm_score's entire scoring chain verbatim (everything up to its
-# final fixed-threshold SELECT), then bucket by per-language terciles
-_SQL_LM_CHAIN = SQL_LM_SCORE.rsplit("\nSELECT id, n_bigrams", 1)[0]
-
-SQL_LM_TERCILES = _SQL_LM_CHAIN + """,
-sb AS (
-  SELECT f.id, d.lang, f.score_ppm, f.score_ppm // 1000 AS bin
-  FROM f JOIN (SELECT doc_id AS id, lang FROM documents) d USING (id)),
-hist AS (SELECT lang, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM sb GROUP BY 1, 2),
-cum AS (SELECT lang, bin,
-               CAST(SUM(cnt) OVER (PARTITION BY lang ORDER BY bin DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS cum
-        FROM hist),
-tot AS (SELECT lang, CAST(SUM(cnt) AS BIGINT) AS n FROM hist GROUP BY 1),
-cut AS (SELECT lang,
-               MAX(CASE WHEN cum >= greatest(n // 3, 1) THEN bin END)
-                 AS head_bin,
-               MAX(CASE WHEN cum >= greatest((2 * n) // 3, 1) THEN bin END)
-                 AS mid_bin
-        FROM cum JOIN tot USING (lang) GROUP BY lang)
-SELECT sb.id, sb.lang, sb.score_ppm,
-       CASE WHEN sb.bin >= cut.head_bin THEN 'head'
-            WHEN sb.bin >= cut.mid_bin THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM sb JOIN cut USING (lang)
-"""
-
-
 HYPERBALL_ROUNDS = 3
 
 
@@ -16078,97 +15218,6 @@ FROM nn, agg, rc, mo, mi
 
 
 SQL_GRAPH_CENSUS = _sql_graph_census()
-
-
-CURRICULUM_BUDGETS = {"head": 30000, "middle": 20000, "tail": 10000}
-
-
-def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum corpus staging — the composition a staged pretraining
-    run needs: per-language quality TERCILES (operators/lm.
-    tercile_cutoffs + bucket_by_terciles) assign each doc a stage, then
-    each stage takes its own TOKEN budget quality-first (operators/
-    sampling.select_token_budget, the banded no-global-sort plan).
-    Output: (id, lang, score_ppm, n_tok, stage, cum_tokens) for the
-    selected docs. One DuckDB statement verifies the whole composition
-    (the naive per-stage running-sum twin)."""
-    from biothings_crawler_spark.operators.lm import (
-        bucket_by_terciles,
-        tercile_cutoffs,
-    )
-    from biothings_crawler_spark.operators.sampling import (
-        select_token_budget,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        F.col("doc_id").alias("id"),
-        "lang",
-        ((F.col("doc_id") * 7919) % 1000001).cast("long").alias("score_ppm"),
-        F.expr("n_chars div 4").cast("long").alias("n_tok"),
-    )
-    cuts = tercile_cutoffs(scored, "lang")
-    staged = bucket_by_terciles(scored, cuts, "lang") \
-        .withColumnRenamed("bucket", "stage").localCheckpoint(eager=True)
-    parts = []
-    for stage, budget in CURRICULUM_BUDGETS.items():
-        sel = select_token_budget(
-            staged.filter(F.col("stage") == stage)
-            .select("id", "lang", "score_ppm", "n_tok"),
-            "id", "n_tok", "score_ppm", budget,
-        )
-        parts.append(sel.withColumn("stage", F.lit(stage)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("id", "lang", "score_ppm", "n_tok", "stage",
-                      F.col("cum_tokens").cast("long").alias("cum_tokens"))
-
-
-def _sql_curriculum() -> str:
-    budgets = " ".join(
-        f"WHEN '{k}' THEN {v}" for k, v in CURRICULUM_BUDGETS.items())
-    return f"""
-WITH sc AS (
-  SELECT doc_id AS id, lang,
-         CAST((doc_id * 7919) % 1000001 AS BIGINT) AS score_ppm,
-         CAST(n_chars // 4 AS BIGINT) AS n_tok
-  FROM documents),
-sb AS (SELECT *, score_ppm // 1000 AS bin FROM sc),
-hist AS (SELECT lang, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM sb GROUP BY 1, 2),
-cum AS (SELECT lang, bin,
-               CAST(SUM(cnt) OVER (PARTITION BY lang ORDER BY bin DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS cum
-        FROM hist),
-tot AS (SELECT lang, CAST(SUM(cnt) AS BIGINT) AS n FROM hist GROUP BY 1),
-cut AS (SELECT lang,
-               MAX(CASE WHEN cum >= greatest(n // 3, 1) THEN bin END)
-                 AS head_bin,
-               MAX(CASE WHEN cum >= greatest((2 * n) // 3, 1) THEN bin END)
-                 AS mid_bin
-        FROM cum JOIN tot USING (lang) GROUP BY lang),
-staged AS (
-  SELECT sb.id, sb.lang, sb.score_ppm, sb.n_tok,
-         CASE WHEN sb.bin >= c.head_bin THEN 'head'
-              WHEN sb.bin >= c.mid_bin THEN 'middle'
-              ELSE 'tail' END AS stage
-  FROM sb JOIN cut c USING (lang)),
-run AS (
-  SELECT *,
-         CAST(SUM(n_tok) OVER (PARTITION BY stage
-              ORDER BY score_ppm DESC, id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cum_tokens
-  FROM staged)
-SELECT id, lang, score_ppm, n_tok, stage, cum_tokens
-FROM run
-WHERE cum_tokens <= CASE stage {budgets} END
-"""
-
-
-SQL_CURRICULUM = _sql_curriculum()
 
 
 def q_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17322,139 +16371,8 @@ FROM burn
 
 NB_V = 256
 # planted class signal: every doc carries three 'm<lang>' marker tokens,
-# so a correct classifier must recover lang from text alone
+# so the 'en' target distribution differs from the raw corpus in text
 _NB_TEXT = "text || ' m' || lang || ' m' || lang || ' m' || lang"
-
-
-def q_nb_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial Naive Bayes TRAINING (operators/nbayes.nb_train):
-    hashed bag-of-words (md5-u32 mod 256), Laplace +1, exact
-    fixed-point log2 weights — the dense (label, bucket, w_fxp) model
-    table plus bucket=-1 prior rows.  The oracle re-derives every
-    weight with its own integer squaring-recurrence log2."""
-    from biothings_crawler_spark.operators.nbayes import nb_train
-
-    d = _t(spark, sf_dir, "documents")
-    mut = d.selectExpr("doc_id", "lang", _NB_TEXT + " AS text")
-    train = mut.filter("doc_id % 2 = 0")
-    return nb_train(train, "doc_id", "text", "lang", n_buckets=NB_V)
-
-
-def q_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NB scoring (operators/nbayes.nb_classify): train on even
-    doc_ids, classify the whole corpus; min-struct argmax with
-    (score desc, label asc) tie-break.  The planted 'm<lang>' markers
-    make the task learnable — a pytest asserts high accuracy — while
-    the oracle checks every score bit-for-bit."""
-    from biothings_crawler_spark.operators.nbayes import nb_classify, nb_train
-
-    d = _t(spark, sf_dir, "documents")
-    mut = d.selectExpr("doc_id", "lang", _NB_TEXT + " AS text")
-    train = mut.filter("doc_id % 2 = 0")
-    model = nb_train(train, "doc_id", "text", "lang", n_buckets=NB_V)
-    return nb_classify(mut, model, "doc_id", "text", n_buckets=NB_V)
-
-
-def _sql_nb_model() -> str:
-    """Shared CTE chain: mutated corpus -> hashed features -> dense NB
-    model (cond + pri), replayed with ilog2_fxp_duck."""
-    from biothings_crawler_spark.operators.nbayes import ilog2_fxp_duck
-
-    return f"""
-m AS (SELECT doc_id, lang, {_NB_TEXT} AS text FROM documents),
-wd AS (SELECT doc_id AS id, unnest({_SQL_WORDS}) AS w FROM m),
-ft AS (SELECT id,
-              ('0x' || substr(md5(w), 1, 8))::BIGINT % {NB_V} AS bucket,
-              CAST(COUNT(*) AS BIGINT) AS tf
-       FROM wd GROUP BY 1, 2),
-tr AS (SELECT doc_id AS id, lang AS label FROM m WHERE doc_id % 2 = 0),
-cnt AS (SELECT tr.label, ft.bucket, CAST(SUM(ft.tf) AS BIGINT) AS cnt
-        FROM ft JOIN tr USING (id) GROUP BY 1, 2),
-grid AS (SELECT l.label, r.range::BIGINT AS bucket
-         FROM (SELECT DISTINCT label FROM tr) l CROSS JOIN range({NB_V}) r),
-dense AS (SELECT g.label, g.bucket, coalesce(c.cnt, 0) AS cnt
-          FROM grid g LEFT JOIN cnt c USING (label, bucket)),
-tot AS (SELECT label, CAST(SUM(cnt) AS BIGINT) AS tot FROM dense GROUP BY 1),
-cond AS (SELECT d.label, d.bucket,
-                CAST({ilog2_fxp_duck('cnt + 1')}
-                     - {ilog2_fxp_duck(f'tot + {NB_V}')} AS BIGINT) AS w_fxp
-         FROM dense d JOIN tot USING (label)),
-docs AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS nd FROM tr GROUP BY 1),
-ndt AS (SELECT CAST(SUM(nd) AS BIGINT) AS ndt FROM docs),
-pri AS (SELECT label, CAST(-1 AS BIGINT) AS bucket,
-               CAST({ilog2_fxp_duck('nd')}
-                    - {ilog2_fxp_duck('ndt')} AS BIGINT) AS w_fxp
-        FROM docs CROSS JOIN ndt)"""
-
-
-SQL_NB_TRAIN = f"""
-WITH {_sql_nb_model()}
-SELECT label, bucket, w_fxp FROM cond
-UNION ALL SELECT label, bucket, w_fxp FROM pri
-"""
-
-SQL_NB_CLASSIFY = f"""
-WITH {_sql_nb_model()},
-per AS (SELECT ft.id, c.label, CAST(SUM(ft.tf * c.w_fxp) AS BIGINT) AS s
-        FROM ft JOIN cond c USING (bucket) GROUP BY 1, 2),
-sc AS (SELECT per.id, per.label, per.s + p.w_fxp AS score_fxp
-       FROM per JOIN pri p ON p.label = per.label),
-emp AS (SELECT m.doc_id AS id, p.label, p.w_fxp AS score_fxp
-        FROM m CROSS JOIN pri p
-        WHERE m.doc_id NOT IN (SELECT DISTINCT id FROM ft)),
-allsc AS (SELECT * FROM sc UNION ALL SELECT * FROM emp)
-SELECT id, label AS pred, CAST(score_fxp AS BIGINT) AS score_fxp
-FROM allsc
-QUALIFY row_number() OVER (PARTITION BY id
-                           ORDER BY score_fxp DESC, label) = 1
-"""
-
-
-def q_active_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncertainty sampling for the labeling loop (operators/nbayes.
-    active_select, Lewis-Gale margin sampling): train on even ids,
-    rank the whole corpus by top-two fixed-point score margin within
-    each predicted class, keep the 10 most ambiguous per class.
-    Oracle replays the shared NB model chain + margin windows."""
-    from biothings_crawler_spark.operators.nbayes import (
-        active_select,
-        nb_train,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    mut = d.selectExpr("doc_id", "lang", _NB_TEXT + " AS text")
-    train = mut.filter("doc_id % 2 = 0")
-    model = nb_train(train, "doc_id", "text", "lang", n_buckets=NB_V)
-    return active_select(mut, model, "doc_id", "text",
-                         n_buckets=NB_V, k=10)
-
-
-SQL_ACTIVE_SELECT = f"""
-WITH {_sql_nb_model()},
-per AS (SELECT ft.id, c.label, CAST(SUM(ft.tf * c.w_fxp) AS BIGINT) AS s
-        FROM ft JOIN cond c USING (bucket) GROUP BY 1, 2),
-sc AS (SELECT per.id, per.label, per.s + p.w_fxp AS score_fxp
-       FROM per JOIN pri p ON p.label = per.label),
-emp AS (SELECT m.doc_id AS id, p.label, p.w_fxp AS score_fxp
-        FROM m CROSS JOIN pri p
-        WHERE m.doc_id NOT IN (SELECT DISTINCT id FROM ft)),
-allsc AS (SELECT * FROM sc UNION ALL SELECT * FROM emp),
-rnk AS (SELECT id, label, score_fxp,
-               row_number() OVER (PARTITION BY id
-                 ORDER BY score_fxp DESC, label) AS rn
-        FROM allsc),
-marg AS (
-  SELECT a.id, a.label AS pred,
-         CAST(a.score_fxp - b.score_fxp AS BIGINT) AS margin_fxp
-  FROM rnk a JOIN rnk b ON b.id = a.id AND b.rn = 2
-  WHERE a.rn = 1)
-SELECT pred, id, margin_fxp,
-       CAST(rn AS BIGINT) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY pred
-        ORDER BY margin_fxp, id) AS rn FROM marg)
-WHERE rn <= 10
-"""
-
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17471,7 +16389,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weights(mut, target, "doc_id", "text", n_buckets=NB_V)
 
 
-from biothings_crawler_spark.operators.nbayes import ilog2_fxp_duck
+from biothings_crawler_spark.functions.fxp import ilog2_fxp_duck
 
 SQL_DSIR_WEIGHTS = f"""
 WITH m AS (SELECT doc_id, lang, {_NB_TEXT} AS text FROM documents),
@@ -18704,8 +17622,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_char_entropy": q_char_entropy,
     "q_ql_dirichlet": q_ql_dirichlet,
     "q_dsir_weights": q_dsir_weights,
-    "q_nb_train": q_nb_train,
-    "q_nb_classify": q_nb_classify,
     # --- Gate-rotation rule: the driver's correctness gate samples the FIRST
     # 50 entries, so queries whose operators changed since their last green
     # driver row are seated here, newest first.  Round 4 added more queries
@@ -18744,7 +17660,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_soft404_probe": q_soft404_probe,
     "q_ip_politeness": q_ip_politeness,
     "q_opic": q_opic,
-    "q_lm_terciles": q_lm_terciles,
     "q_hyperball": q_hyperball,
     "q_harmonic_centrality": q_harmonic_centrality,
     "q_bowtie": q_bowtie,
@@ -18761,7 +17676,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_hll_by_host": q_hll_by_host,
     "q_priority_fusion": q_priority_fusion,
     "q_graph_census": q_graph_census,
-    "q_curriculum": q_curriculum,
     "q_rrf_hybrid": q_rrf_hybrid,
     "q_rank_correlation": q_rank_correlation,
     "q_indegree_dist": q_indegree_dist,
@@ -18809,7 +17723,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_idn_decode": q_idn_decode,
     "q_pairwise_auc": q_pairwise_auc,
     "q_label_agreement": q_label_agreement,
-    "q_margin_mining": q_margin_mining,
     "q_rdfa_extract": q_rdfa_extract,
     "q_span_corruption": q_span_corruption,
     "q_sitemap_scope": q_sitemap_scope,
@@ -18821,7 +17734,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_lexicon_filter": q_lexicon_filter,
     "q_schema_drift": q_schema_drift,
     "q_erasure_impact": q_erasure_impact,
-    "q_active_select": q_active_select,
     "q_pack_fragmentation": q_pack_fragmentation,
     "q_identifier_extract": q_identifier_extract,
     "q_mad_outliers": q_mad_outliers,
@@ -18839,8 +17751,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_bm25f_topk": q_bm25f_topk,
     "q_waterfill_budget": q_waterfill_budget,
     "q_payload_pipeline": q_payload_pipeline,
-    "q_bpe_merges": q_bpe_merges,
-    "q_bpe_segment": q_bpe_segment,
     "q_typosquat_pairs": q_typosquat_pairs,
     "q_delta_storage": q_delta_storage,
     "q_zorder_key": q_zorder_key,
@@ -18896,7 +17806,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_robots_parse": q_robots_parse,
     "q_robots_enforce": q_robots_enforce,
     "q_blocklist_filter": q_blocklist_filter,
-    "q_lm_score": q_lm_score,
     "q_seq_packing": q_seq_packing,
     "q_pack_stats": q_pack_stats,
     "q_dust_params": q_dust_params,
@@ -18904,7 +17813,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_sitemap_parse": q_sitemap_parse,
     "q_countmin_hosts": q_countmin_hosts,
     "q_crawl_admission": q_crawl_admission,
-    "q_training_prep": q_training_prep,
     "q_main_content": q_main_content,
     "q_url_history": q_url_history,
     "q_link_farm": q_link_farm,
@@ -19006,16 +17914,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_winnow_fingerprints": q_winnow_fingerprints,
     "q_sessionize_fold": q_sessionize_fold,
     "q_wat_render": q_wat_render,
-    "q_kneser_ney": q_kneser_ney,
-    "q_stupid_backoff": q_stupid_backoff,
     "q_hreflang_clusters": q_hreflang_clusters,
     "q_url_parallel_pairs": q_url_parallel_pairs,
-    "q_bitext_verify": q_bitext_verify,
-    "q_sent_align": q_sent_align,
     "q_rag_chunks": q_rag_chunks,
     "q_ai_optout": q_ai_optout,
-    "q_texttiling": q_texttiling,
-    "q_topic_chunks": q_topic_chunks,
     "q_sitemap_audit": q_sitemap_audit,
     "q_textrank_summary": q_textrank_summary,
 }
@@ -19028,8 +17930,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # materialization cuts — every query over a touched operator is seated FIRST
 # so its CURRENT implementation gets a hard driver row (the rotation
 # discipline from rounds 4-5), followed by the never-gated queries VERDICT r5
-# named, then further never-gated entries.  The media-decoding pairs and
-# the TPC-H revenue queries have since been deleted; the full-registry
+# named, then further never-gated entries.  The media-decoding pairs, the
+# TPC-H revenue queries and the text-modelling pairs (LM, BPE, Naive Bayes,
+# TextTiling, bitext alignment) have since been deleted; the full-registry
 # oracle run (scripts/compare_oracle.py) covers every surviving entry.
 _GATE_FIRST: list[str] = [
     # queries over operators rewritten this round (stale green rows)
@@ -19045,11 +17948,10 @@ _GATE_FIRST: list[str] = [
     "q_crawl_budget", "q_depth_yield", "q_leakage_splits",
     # VERDICT r5's named never-gated queries
     "q_substr_spans", "q_bm25f_topk", "q_semantic_dedup", "q_rag_chunks",
-    "q_ai_optout", "q_texttiling", "q_erasure_impact", "q_topic_chunks",
+    "q_ai_optout", "q_erasure_impact",
     # further never-gated entries (toward the 229/344 union target)
-    "q_containment_pairs", "q_active_select", "q_cdc_chunks", "q_c4_filter",
-    "q_bpe_merges", "q_archive_roundtrip",
-    "q_crawl_admission",
+    "q_containment_pairs", "q_cdc_chunks", "q_c4_filter",
+    "q_archive_roundtrip", "q_crawl_admission",
 ]
 QUERIES = {
     **{k: QUERIES[k] for k in _GATE_FIRST},
@@ -19080,14 +17982,11 @@ ORACLES: dict[str, str] = {
     "q_char_entropy": SQL_CHAR_ENTROPY,
     "q_ql_dirichlet": SQL_QL_DIRICHLET,
     "q_dsir_weights": SQL_DSIR_WEIGHTS,
-    "q_nb_train": SQL_NB_TRAIN,
-    "q_nb_classify": SQL_NB_CLASSIFY,
     "q_modularity": SQL_MODULARITY,
     "q_kmeans": SQL_KMEANS,
     "q_soft404_probe": SQL_SOFT404_PROBE,
     "q_ip_politeness": SQL_IP_POLITENESS,
     "q_opic": SQL_OPIC,
-    "q_lm_terciles": SQL_LM_TERCILES,
     "q_hyperball": SQL_HYPERBALL,
     "q_harmonic_centrality": SQL_HARMONIC_CENTRALITY,
     "q_bowtie": SQL_BOWTIE,
@@ -19104,7 +18003,6 @@ ORACLES: dict[str, str] = {
     "q_hll_by_host": SQL_HLL_BY_HOST,
     "q_priority_fusion": SQL_PRIORITY_FUSION,
     "q_graph_census": SQL_GRAPH_CENSUS,
-    "q_curriculum": SQL_CURRICULUM,
     "q_rrf_hybrid": SQL_RRF_HYBRID,
     "q_rank_correlation": SQL_RANK_CORRELATION,
     "q_spell_suggest": SQL_SPELL_SUGGEST,
@@ -19177,7 +18075,6 @@ ORACLES: dict[str, str] = {
     "q_idn_decode": SQL_IDN_DECODE,
     "q_pairwise_auc": SQL_PAIRWISE_AUC,
     "q_label_agreement": SQL_LABEL_AGREEMENT,
-    "q_margin_mining": SQL_MARGIN_MINING,
     "q_rdfa_extract": SQL_RDFA_EXTRACT,
     "q_span_corruption": SQL_SPAN_CORRUPTION,
     "q_sitemap_scope": SQL_SITEMAP_SCOPE,
@@ -19189,7 +18086,6 @@ ORACLES: dict[str, str] = {
     "q_lexicon_filter": SQL_LEXICON_FILTER,
     "q_schema_drift": SQL_SCHEMA_DRIFT,
     "q_erasure_impact": SQL_ERASURE_IMPACT,
-    "q_active_select": SQL_ACTIVE_SELECT,
     "q_pack_fragmentation": SQL_PACK_FRAGMENTATION,
     "q_identifier_extract": SQL_IDENTIFIER_EXTRACT,
     "q_mad_outliers": SQL_MAD_OUTLIERS,
@@ -19211,7 +18107,6 @@ ORACLES: dict[str, str] = {
     "q_robots_parse": SQL_ROBOTS_PARSE,
     "q_robots_enforce": SQL_ROBOTS_ENFORCE,
     "q_blocklist_filter": SQL_BLOCKLIST_FILTER,
-    "q_lm_score": SQL_LM_SCORE,
     "q_seq_packing": SQL_SEQ_PACKING,
     "q_pack_stats": SQL_PACK_STATS,
     "q_dust_params": SQL_DUST_PARAMS,
@@ -19219,7 +18114,6 @@ ORACLES: dict[str, str] = {
     "q_sitemap_parse": SQL_SITEMAP_PARSE,
     "q_countmin_hosts": SQL_COUNTMIN_HOSTS,
     "q_crawl_admission": SQL_CRAWL_ADMISSION,
-    "q_training_prep": SQL_TRAINING_PREP,
     "q_main_content": SQL_MAIN_CONTENT,
     "q_url_history": SQL_URL_HISTORY,
     "q_link_farm": SQL_LINK_FARM,
@@ -19369,21 +18263,13 @@ ORACLES: dict[str, str] = {
     "q_zorder_key": SQL_ZORDER_KEY,
     "q_delta_storage": SQL_DELTA_STORAGE,
     "q_typosquat_pairs": SQL_TYPOSQUAT_PAIRS,
-    "q_bpe_merges": SQL_BPE_MERGES,
-    "q_bpe_segment": SQL_BPE_SEGMENT,
     "q_payload_pipeline": SQL_PAYLOAD_PIPELINE,
     "q_waterfill_budget": SQL_WATERFILL_BUDGET,
     "q_bm25f_topk": SQL_BM25F_TOPK,
-    "q_kneser_ney": SQL_KNESER_NEY,
-    "q_stupid_backoff": SQL_STUPID_BACKOFF,
     "q_hreflang_clusters": SQL_HREFLANG_CLUSTERS,
     "q_url_parallel_pairs": SQL_URL_PARALLEL_PAIRS,
-    "q_bitext_verify": SQL_BITEXT_VERIFY,
-    "q_sent_align": SQL_SENT_ALIGN,
     "q_rag_chunks": SQL_RAG_CHUNKS,
     "q_ai_optout": SQL_AI_OPTOUT,
-    "q_texttiling": SQL_TEXTTILING,
-    "q_topic_chunks": SQL_TOPIC_CHUNKS,
     "q_sitemap_audit": SQL_SITEMAP_AUDIT,
     "q_textrank_summary": SQL_TEXTRANK_SUMMARY,
 }

@@ -153,48 +153,3 @@ def web_pipeline(
     )
     topk = bm25_topk(survivors, "id", "text", query_terms, k=k)
     return survivors, chunks, topk
-
-
-def training_prep(
-    pages: DataFrame,
-    id_col: str,
-    text_col: str,
-    capacity: int = 128,
-    n_shards: int = 8,
-    lm_min_count: int = 2,
-) -> DataFrame:
-    """The COMPOSED training-data tail a pretraining pipeline runs on
-    cleaned web text: C4 line/page quality filtering
-    (operators/text.c4_quality_filter) -> CCNet-style bigram-LM
-    scoring with the model trained on the even-id half
-    (operators/lm) -> drop the 'tail' bucket -> greedy per-shard
-    sequence packing into capacity-bounded context bins
-    (operators/packing.pack_sequences).
-
-    Returns the per-doc packing assignment ``(id, shard, bin, tok,
-    fill_after, oversized)``.  Scale shape: the C4 stage is a
-    row-local projection; LM is two hash aggs + a model equi-join;
-    packing is one shard-keyed agg — the whole tail adds three keyed
-    shuffles to the corpus, nothing quadratic, no Python.  The driver
-    pair (q_training_prep) verifies the COMPOSITION against one DuckDB
-    statement, like q_clean_corpus.
-    """
-    from biothings_crawler_spark.operators.lm import lm_score, train_bigram_lm
-    from biothings_crawler_spark.operators.packing import pack_sequences
-    from biothings_crawler_spark.operators.text import c4_quality_filter
-
-    c4 = c4_quality_filter(pages, id_col, text_col)
-    kept = c4.filter("keep").select("id", F.col("clean_text").alias("text"))
-    model = train_bigram_lm(
-        kept.filter("id % 2 = 0"), "id", "text", min_count=lm_min_count
-    )
-    scored = lm_score(kept, model, "id", "text")
-    good = kept.join(
-        scored.filter("bucket <> 'tail'").select("id"), "id", "left_semi"
-    )
-    base = good.select(
-        "id",
-        token_count_col(F.col("text")).alias("n_tok"),
-        (F.col("id") % n_shards).alias("shard"),
-    )
-    return pack_sequences(base, "id", "n_tok", capacity, "shard")

@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at a given sf,
 compare row count, column names, and an order-insensitive value hash.
+Ends with one summary line, ``N/M exact``, followed by the failing
+names.
 
 Usage: python scripts/compare_oracle.py [sf_dir] [query ...]
 """
@@ -29,14 +31,15 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    n_fail = 0
+    failed: list[str] = []
+    n_exact = 0
     for name in names:
         t0 = time.time()
         try:
             spdf = QUERIES[name](spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
+            failed.append(name)
             continue
         if name not in ORACLES:
             print(f"SKIP {name}: rows-only ({len(spdf)} rows) "
@@ -46,7 +49,7 @@ def main() -> int:
             odf = con.execute(ORACLES[name]).df()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
+            failed.append(name)
             continue
         problems = []
         if len(spdf) != len(odf):
@@ -57,7 +60,7 @@ def main() -> int:
         if hs != ho:
             problems.append(f"hash {hs} vs {ho}")
         if problems:
-            n_fail += 1
+            failed.append(name)
             print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
             if len(spdf) and len(odf) and sorted(spdf.columns) == sorted(odf.columns):
                 cols = sorted(spdf.columns)
@@ -70,9 +73,11 @@ def main() -> int:
                         print(f"  first diff row {i}:\n   spark={ra}\n   duck ={rb}")
                         break
         else:
+            n_exact += 1
             print(f"OK   {name}: {len(spdf)} rows, hash {hs} [{time.time()-t0:.1f}s]")
     spark.stop()
-    return 1 if n_fail else 0
+    print(f"{n_exact}/{len(names)} exact", *failed)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -8,6 +8,8 @@ this keeps the contract from regressing silently in CI.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -15,6 +17,7 @@ from biothings_crawler_spark.plans.driver_queries import ORACLES, QUERIES, TABLE
 from biothings_crawler_spark.testing import frame_digest
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 FAST = [
     "q_politeness_quota",
@@ -34,14 +37,18 @@ FAST = [
 ]
 
 
-@pytest.fixture(scope="module")
-def duck():
+def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
+
+
+@pytest.fixture(scope="module")
+def duck():
+    return _duck(SF_DIR)
 
 
 def test_registry_shape():
@@ -67,3 +74,16 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"user_id", "event_id", "sched_rank"}
+
+
+@pytest.mark.parametrize("name", ["q_latency_quantiles", "q_adaptive_budgets"])
+def test_quantile_oracle_independent_of_duckdb_threads(spark, name):
+    """The p-quantile bin is the first bin whose running count reaches
+    it; the oracle must give the same answer at every DuckDB thread
+    count, and that answer must be the Spark side's."""
+    digests = set()
+    for threads in (1, 2, 4):
+        con = _duck(SF01_DIR)
+        con.execute(f"SET threads = {threads}")
+        digests.add(frame_digest(con.execute(ORACLES[name]).df()))
+    assert digests == {frame_digest(QUERIES[name](spark, SF01_DIR).toPandas())}

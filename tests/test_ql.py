@@ -3,7 +3,7 @@
 import math
 
 from biothings_crawler_spark.operators.bm25 import ql_dirichlet_topk
-from biothings_crawler_spark.operators.nbayes import FXP
+from biothings_crawler_spark.functions.fxp import FXP
 
 
 def _docs(spark):
