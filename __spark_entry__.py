@@ -8,7 +8,7 @@ value-hash → CORRECTNESS_r{N}.json).
 The real registry lives in
 ``biothings_crawler_spark/plans/driver_queries.py`` — one (Spark,
 DuckDB-SQL) pair per operator family from SURVEY.md §2 plus the
-training-data pipeline operators (dedup / similarity / text).
+training-data pipeline operators (dedup / text).
 Run ``python scripts/compare_oracle.py`` for a local replica of the
 driver's gate.
 """

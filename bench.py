@@ -73,7 +73,6 @@ SUITE = [
     "q_shard_skip",
     "q_word_segment",
     "q_feed_render",
-    "q_embedding_drift",
     "q_refs_strip",
     "q_depth_yield",
     "q_rendezvous_assign",
@@ -83,23 +82,17 @@ SUITE = [
     "q_pairwise_auc",
     "q_label_agreement",
     "q_rdfa_extract",
-    "q_span_corruption",
     "q_sitemap_scope",
     "q_survival_ledger",
     "q_event_transitions",
-    "q_heading_chunks",
-    "q_maxsim_topk",
     "q_lexicon_filter",
     "q_schema_drift",
     "q_erasure_impact",
-    "q_pack_fragmentation",
     "q_identifier_extract",
     "q_mad_outliers",
     "q_url_templates",
-    # round-5 session-3 additions (chunking/segmentation + compliance)
-    "q_rag_chunks",
+    # round-5 session-3 additions (compliance)
     "q_sitemap_audit",
-    "q_textrank_summary",
     "q_ai_optout",
     # round-5 additions (LM smoothing + parallel-corpus mining planes)
     "q_hreflang_clusters",
@@ -114,11 +107,7 @@ SUITE = [
     "q_profile_drift",
     "q_temperature_mix",
     "q_wilson_errors",
-    "q_vocab_coverage",
-    "q_distinctive_terms",
     "q_ks_drift",
-    "q_textrank_keywords",
-    "q_dsir_weights",
     "q_ql_dirichlet",
     "q_char_entropy",
     "q_burst_intervals",
@@ -128,7 +117,6 @@ SUITE = [
     "q_cori_shards",
     "q_query_clarity",
     "q_tokenizer_fertility",
-    "q_kmeans",
     "q_soft404_probe",
     "q_ip_politeness",
     "q_opic",
@@ -136,7 +124,6 @@ SUITE = [
     "q_harmonic_centrality",
     "q_bowtie",
     "q_random_walks",
-    "q_ann_truncated_topk",
     "q_theta_overlap",
     "q_pagerank_incremental",
     "q_host_overlap",
@@ -148,9 +135,6 @@ SUITE = [
     "q_hll_by_host",
     "q_priority_fusion",
     "q_graph_census",
-    "q_rrf_hybrid",
-    "q_rank_correlation",
-    "q_substr_spans",
     "q_maxscore_topk",
     "q_politeness_quota",
     "q_seen_antijoin",
@@ -160,20 +144,16 @@ SUITE = [
     "q_exact_dedup",
     "q_minhash_lsh",
     "q_simhash_pairs",
-    "q_ann_ivf_topk",
     "q_lang_id",
     "q_token_stats",
     "q_quality_stats",
     "q_event_windows",
     "q_line_dedup",
-    "q_embedding_near_dup",
     "q_pii_scrub",
     "q_decontamination",
     "q_html_to_text",
     "q_passage_dedup",
     "q_recrawl_schedule",
-    "q_quantize_embeddings",
-    "q_ann_quantized_topk",
     "q_bigram_coverage",
     "q_snapshot_diff",
     "q_refetch_round",
@@ -197,7 +177,6 @@ SUITE = [
     "q_robots_parse",
     "q_robots_enforce",
     "q_blocklist_filter",
-    "q_seq_packing",
     "q_dust_params",
     "q_sitemap_parse",
     "q_countmin_hosts",
@@ -256,15 +235,11 @@ SUITE = [
     "q_waterfill_budget",
     "q_bm25f_topk",
     "q_readability",
-    "q_vocab_growth",
-    "q_zipf_profile",
     "q_slo_burn",
     "q_ucb_recrawl",
     "q_hilbert_key",
     "q_prf_search",
     "q_ktruss",
-    "q_pq_encode",
-    "q_pq_adc",
 ]
 
 
@@ -393,61 +368,6 @@ def archive_pipeline_job(spark: SparkSession, pages) -> dict:
     return {"files": n_files, "pages": n_pages, "cdx_rows": n_idx}
 
 
-def training_pipeline_job(spark: SparkSession, pages) -> dict:
-    """The composed crawl-output-to-TRAINING-CORPUS pipeline — the
-    session-7 tail on top of the mega front: html->text -> PII scrub
-    -> exact dedup -> near-dup components -> ExactSubstr duplicated-
-    span removal (Lee et al.) -> leakage-safe train/val/test splits
-    keyed by the near-dup components -> per-shard sequence packing of
-    the TRAIN split only.  One mid-pipeline materialization (the
-    deduped corpus), same discipline as mega_pipeline_job."""
-    from biothings_crawler_spark.operators.dedup import (
-        connected_components,
-        exact_dedup,
-        minhash_lsh_pairs,
-    )
-    from biothings_crawler_spark.operators.extract import html_to_text_col
-    from biothings_crawler_spark.operators.packing import pack_sequences
-    from biothings_crawler_spark.operators.pii import pii_scrub_col
-    from biothings_crawler_spark.operators.sampling import leakage_safe_splits
-    from biothings_crawler_spark.operators.substr import (
-        duplicated_spans,
-        strip_spans,
-    )
-    from biothings_crawler_spark.operators.text import token_count_col
-
-    txt = pages.select(
-        "id", html_to_text_col(F.col("html")).alias("raw_text"))
-    scrubbed = txt.select("id", pii_scrub_col(F.col("raw_text")).alias("text"))
-    d2 = scrubbed.join(
-        exact_dedup(scrubbed, "id", "text").select("id"), "id", "left_semi")
-
-    pairs = minhash_lsh_pairs(d2, "id", "text", n_perm=16, bands=4,
-                              verify_threshold=0.5)
-    comp = connected_components(pairs, d2.select("id"))
-    survivors = d2.join(
-        comp.filter(F.col("id") == F.col("component")).select("id"),
-        "id", "left_semi").persist()
-    n_surv = survivors.count()
-
-    spans = duplicated_spans(survivors, "id", "text", min_len=25)
-    cleaned = strip_spans(survivors, spans, "id", "text")
-
-    splits = leakage_safe_splits(survivors.select("id"), comp)
-    train = cleaned.join(
-        splits.filter(F.col("split") == "train").select("id"),
-        "id", "left_semi")
-    base = train.select(
-        "id",
-        token_count_col(F.col("text_clean")).alias("n_tok"),
-        (F.col("id") % 8).alias("shard"),
-    )
-    packed = pack_sequences(base, "id", "n_tok", 128, "shard")
-    n_packed = packed.count()
-    survivors.unpersist()
-    return {"survivors": n_surv, "packed": n_packed}
-
-
 def release_pipeline_job(spark: SparkSession, pages) -> dict:
     """The composed crawl-output-to-PUBLISHED-RELEASE pipeline over
     the session-4 operators: html->text -> license admission gate
@@ -567,15 +487,6 @@ def main() -> None:
     counts["mega_pipeline_pages"] = n_mega_pages
     counts["mega_pipeline_survivors"] = mega_counts["survivors"]
 
-    # the training-corpus tail over the same pages (best-of-2)
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        tp_counts = training_pipeline_job(spark, mega_pages)
-        best = min(best or 1e9, time.time() - t0)
-    timings["training_pipeline"] = round(best, 3)
-    counts["training_pipeline_packed"] = tp_counts["packed"]
-
     # the archive storage loop over the same pages (best-of-2)
     best = None
     for _ in range(2):
@@ -640,9 +551,8 @@ def main() -> None:
     headline_queries = {
         k: timings[k]
         for k in ("crawl_sched", "extract_jsonld", "mega_pipeline",
-                  "training_pipeline", "archive_pipeline",
-                  "q_politeness_quota", "q_minhash_lsh",
-                  "q_ann_ivf_topk", "q_sessionize", "q_sessionize_fold")
+                  "archive_pipeline", "q_politeness_quota",
+                  "q_minhash_lsh", "q_sessionize", "q_sessionize_fold")
         if k in timings
     }
     compact = dict(out, queries=headline_queries,

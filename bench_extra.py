@@ -4,8 +4,8 @@ materialization) AND with bench.py's count() methodology, and captures
 .explain("formatted") into plans/r06/.
 
 Usage:
-  python bench_extra.py q_site_families q_kmeans          # time + plan
-  python bench_extra.py --plan-only --tag before q_kmeans # just plans
+  python bench_extra.py q_site_families q_pagerank        # time + plan
+  python bench_extra.py --plan-only --tag before q_pagerank # just plans
   python bench_extra.py --top N                           # N slowest from BENCH_LAST.json
 
 This file is NOT part of the frozen measurement surface (bench.py is);
@@ -39,16 +39,17 @@ def main() -> None:
     args = ap.parse_args()
 
     names = list(args.queries)
-    if args.top:
-        d = json.load(open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                        "BENCH_LAST.json")))
-        ranked = sorted(d["queries"].items(), key=lambda kv: -kv[1])
-        names += [k for k, _ in ranked if k.startswith("q_")][: args.top]
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ["SPARK_GRAFT_CPUS"] = cpus
     from biothings_crawler_spark.plans import driver_queries as dq
     from biothings_crawler_spark.session import get_spark
+
+    if args.top:
+        d = json.load(open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                        "BENCH_LAST.json")))
+        ranked = sorted(d["queries"].items(), key=lambda kv: -kv[1])
+        # BENCH_LAST.json may still time entries since deleted from the registry
+        names += [k for k, _ in ranked if k in dq.QUERIES][: args.top]
 
     spark = get_spark("bench_extra", master=f"local[{cpus}]")
     spark.range(1000).select(F.xxhash64("id")).count()  # warm

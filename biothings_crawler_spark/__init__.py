@@ -15,7 +15,7 @@ Layout:
   oracle/     frozen row-at-a-time reference semantics (the goldens)
   fixtures/   deterministic synthetic corpus generators (FIXTURES.md)
   operators/  seen-set (bloom/cuckoo), politeness window, frontier ops,
-              extraction UDFs, dedup, similarity, text analysis
+              extraction UDFs, dedup, text analysis
   sources/    sitemap / paginated-API / id-range seed expansion
   plans/      crawl round loop, upload transforms, analysis queries
   functions/  scalar function library (citation, tdoc, canonical JSON)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from pathlib import Path
 
@@ -70,14 +71,12 @@ class ParquetManifestCatalog:
         for name, df in tables.items():
             tmp = self.root / ".tmp" / f"{name}-r{round_no:06d}"
             if tmp.exists():
-                import shutil
                 shutil.rmtree(tmp)
             df.write.mode("overwrite").parquet(str(tmp))
             staged.append((tmp, self._round_dir(name, round_no)))
         for tmp, final in staged:
             final.parent.mkdir(parents=True, exist_ok=True)
             if final.exists():
-                import shutil
                 shutil.rmtree(final)  # leftover from an uncommitted crash
             os.rename(tmp, final)
         manifest["rounds"].append(round_no)

@@ -63,13 +63,6 @@ def url_of(i: int) -> str:
     return SOURCES[src][1].format(i=i)
 
 
-def host_of_index(i: int) -> str:
-    src = source_of(i)
-    if src == "longtail":
-        return f"site{i % 97}.example.net"
-    return SOURCES[src][0]
-
-
 def _uhash(url: str) -> int:
     return xxh64(url.encode("utf-8"))
 

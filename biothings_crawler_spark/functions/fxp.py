@@ -1,8 +1,8 @@
 """Exact fixed-point base-2 logarithm for cross-engine scoring.
 
 log2 is transcendental, so operators that need log probabilities
-(query likelihood, DSIR weights, entropy, Dunning G², NDCG discounts)
-score in **lg-fxp units** — floor(65536 · log2(x)) computed EXACTLY
+(query likelihood, entropy, NDCG discounts) score in **lg-fxp
+units** — floor(65536 · log2(x)) computed EXACTLY
 by integer arithmetic: n = floor(log2 x) from the binary-string
 length, then 16 fractional bits from the classic squaring recurrence
 (normalize the mantissa m to [2^16, 2^17); square; a doubled bit is 1

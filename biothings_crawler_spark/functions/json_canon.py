@@ -22,7 +22,3 @@ from typing import Any
 def canonical_json(obj: Any) -> str:
     """Deterministic JSON: recursively sorted keys, compact separators."""
     return json.dumps(obj, sort_keys=True, ensure_ascii=False, separators=(",", ":"))
-
-
-def canonical_json_loads(s: str) -> Any:
-    return json.loads(s)

@@ -285,19 +285,3 @@ def hilbert_key_col(a, b, bits: int = HILBERT_BITS):
         step,
         lambda acc: acc["d"],
     )
-
-
-def write_hilbert_layout(
-    df: DataFrame, path: str, col_a: str, col_b: str,
-    n_files: int = 16, bits: int = HILBERT_BITS,
-) -> None:
-    """Write ``df`` Hilbert-clustered on ``(col_a, col_b)``: range-
-    partitioned and sorted by the Hilbert key, so each output file
-    covers one CONNECTED blob of (a, b) space (vs up to 4 disjoint
-    rectangles for a Morton range) — strictly better file-level
-    min/max pruning for spatial/range workloads."""
-    keyed = df.withColumn(
-        "hkey", hilbert_key_col(F.col(col_a), F.col(col_b), bits))
-    (keyed.repartitionByRange(n_files, "hkey")
-     .sortWithinPartitions("hkey")
-     .write.mode("overwrite").parquet(path))

@@ -1,2 +1,2 @@
 """Engine operators: extraction UDFs, frontier ops, seen-set, politeness,
-dedup, similarity, text analysis."""
+dedup, text analysis."""

@@ -1,5 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine near-dup.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 Everything here is native Spark SQL expressions — higher-order array
 functions (transform/aggregate/zip_with) keep the math JVM-side with
@@ -16,8 +15,6 @@ Scale design:
     verification re-computes true Jaccard on the candidate sliver only.
   * SimHash — 64-bit signature per row; banding on 16-bit sub-keys;
     hamming distance via bit_count(xor).
-  * embedding near-dup — random-hyperplane signs bucket the vectors;
-    within-bucket cosine verify.
 """
 
 from __future__ import annotations
@@ -27,7 +24,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -500,121 +497,6 @@ def simhash_pairs(
     )
 
 
-# --- embedding near-dup ---------------------------------------------------------
-
-def cosine_col(a: Column, b: Column) -> Column:
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    return dot / (na * nb)
-
-
-def _plane_signs(dim: int, n_planes: int, seed: int, hash_family: str) -> list:
-    """The ±1 hyperplane components hash(seed:p:i) — row-independent
-    constants, so they are computed ONCE here (driver side) instead of
-    dim×n_planes hash evaluations per corpus row. md5 here == Spark's
-    md5 == DuckDB's md5; xxhash64 via the Spark-compatible pure-Python
-    XXH64 in hashing.py."""
-    import hashlib
-
-    from biothings_crawler_spark.hashing import xxhash64_str
-
-    signs = []
-    for p in range(n_planes):
-        row = []
-        for i in range(dim):
-            key = f"{seed}:{p}:{i}"
-            if hash_family == "md5":
-                s = 1.0 if hashlib.md5(key.encode()).hexdigest()[0] < "8" else -1.0
-            else:
-                s = 1.0 if xxhash64_str(key) > 0 else -1.0
-            row.append(s)
-        signs.append(row)
-    return signs
-
-
-def hyperplane_sig_col(
-    vec: Column, dim: int, n_planes: int = 16, seed: int = 42,
-    hash_family: str = "xxhash64",
-) -> Column:
-    """Random-hyperplane sign signature. Plane p component i =
-    hash(seed:p:i) mapped to ±1 — deterministic, no stored planes.
-    'md5' family: +1 iff first hex digit of md5 < '8' (same in DuckDB).
-    The sign matrix is a precomputed literal (see _plane_signs); per row
-    only the n_planes dot products run."""
-    signs = _plane_signs(dim, n_planes, seed, hash_family)
-
-    def plane_dot(p: int) -> Column:
-        lit_signs = F.array(*[F.lit(s) for s in signs[p]])
-        return F.aggregate(F.zip_with(vec, lit_signs, lambda x, s: x * s),
-                           F.lit(0.0), lambda acc, x: acc + x)
-
-    bits = [F.when(plane_dot(p) > 0, F.shiftleft(F.lit(1).cast("long"), p))
-            .otherwise(F.lit(0).cast("long")) for p in range(n_planes)]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 16,
-    hash_family: str = "xxhash64",
-    n_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate vectors: hyperplane-LSH buckets -> cosine verify.
-
-    Recall amplification: ``n_tables`` INDEPENDENT hash tables (table t
-    uses hyperplane seed ``seed + 1000*t``) OR-combined — a true pair is
-    missed only if it splits in every table, turning a single-table
-    recall cliff near the threshold (P(all n_planes signs agree) can be
-    well under 0.5) into 1-(1-p)^n_tables. Recall vs the brute-force
-    oracle is pytest-enforced (test_pipeline_ops).
-
-    Scale shape mirrors minhash_lsh_pairs: the bucket self-join carries
-    ONLY (id, table, bucket) — never the vectors; candidate pairs are
-    deduped across tables BEFORE the vectors are re-joined for the
-    cosine verification, so each surviving pair pays one cosine."""
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    banded = base.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                hyperplane_sig_col(
-                    F.col("v"), dim, n_planes, seed=seed + 1000 * t,
-                    hash_family=hash_family,
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ])).alias("tb"),
-    ).select("id", "tb.tbl", "tb.bucket")
-    a = banded.select(F.col("id").alias("id_a"), "tbl", "bucket")
-    b = banded.select(F.col("id").alias("id_b"), "tbl", "bucket")
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        pairs.join(base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a")
-        .join(base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
-        .withColumn("cosine", once_col(cosine_col(F.col("v_a"), F.col("v_b"))))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 # --- near-dup clustering ---------------------------------------------------------
 
 def connected_components(
@@ -679,83 +561,6 @@ def connected_components(
             "iterations; raise max_iters (component diameter exceeds it)"
         )
     return labels
-
-
-# --- semantic dedup (SemDeDup) ----------------------------------------------------
-
-
-def semantic_dedup_pairs(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int = 8,
-    threshold: float = 0.95,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """Within-cluster semantic-duplicate pairs, SemDeDup-style (Abbas
-    et al. 2023, "SemDeDup: Data-efficient learning at web-scale
-    through semantic deduplication", arXiv:2303.09540): coarse-quantize
-    the embedding space into cells (pick_centroids -> assign_cells, the
-    IVF coarse quantizer reused as the clustering step), then compute
-    EXACT pairwise cosine only WITHIN each cell and keep pairs at or
-    above ``threshold``. Returns (id_a, id_b, cosine), id_a < id_b.
-
-    Scale shape: the only shuffle of the corpus is the cell equi-join
-    (both sides hash-partitioned on cell); the quadratic pairwise step
-    is confined per cell — at 10^10 vectors you grow ``n_centroids``
-    proportionally so cell size stays bounded (SemDeDup's own recipe:
-    clusters of ~10^4-10^5), and a pathologically hot cell is split by
-    re-clustering its members. Semantic duplicates sit at cosine near
-    1.0, where nearest-centroid assignment provably co-cells them: an
-    exact scalar multiple of a vector has BIT-IDENTICAL cosine to every
-    centroid (the fold scales exactly), and near-identical vectors
-    share the argmax for any non-degenerate quantizer — the
-    within-cell restriction's zero-casualty property at high threshold
-    is pytest-enforced against the brute-force oracle."""
-    from biothings_crawler_spark.operators.similarity import (
-        assign_cells,
-        pick_centroids,
-    )
-
-    cents = pick_centroids(embeddings, id_col, vec_col, n_centroids,
-                           hash_family=hash_family)
-    cells = assign_cells(embeddings, cents, id_col, vec_col)
-    a = cells.select(F.col("vec_id").alias("id_a"), F.col("v").alias("v_a"), "cell")
-    b = cells.select(F.col("vec_id").alias("id_b"), F.col("v").alias("v_b"), "cell")
-    return (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", once_col(cosine_col(F.col("v_a"), F.col("v_b"))))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def semantic_dedup(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int = 8,
-    threshold: float = 0.95,
-    hash_family: str = "xxhash64",
-    max_iters: int = 25,
-) -> DataFrame:
-    """SemDeDup completion: within-cell semantic pairs -> connected
-    components -> soft 1e6//cluster_size weights (the q_dedup_weights
-    convention: integer micro-units, cross-engine exact), so a training
-    pipeline can keep one exemplar per semantic cluster (id ==
-    component) or downsample duplicates proportionally. Returns
-    (id, component, weight_ppm)."""
-    pairs = semantic_dedup_pairs(
-        embeddings, id_col, vec_col, n_centroids, threshold, hash_family
-    )
-    nodes = embeddings.select(F.col(id_col).alias("id"))
-    cc = connected_components(pairs.select("id_a", "id_b"), nodes,
-                              max_iters=max_iters)
-    sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    return cc.join(sizes, "component").select(
-        "id", "component", F.expr("1000000 div csize").alias("weight_ppm")
-    )
 
 
 def containment_pairs(

@@ -68,19 +68,6 @@ def pii_email_count(text: Column) -> Column:
     return _count_matches(text, EMAIL_RE)
 
 
-def pii_ipv4_count(text: Column) -> Column:
-    # count IPs on the email-scrubbed text so `1.2.3.4@host.com`-style
-    # overlaps can't double-count; mirrors the scrub order below
-    return _count_matches(F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN), IPV4_RE)
-
-
-def pii_phone_count(text: Column) -> Column:
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN), IPV4_RE, IPV4_TOKEN
-    )
-    return _count_matches(scrubbed, PHONE_RE)
-
-
 def luhn_valid_col(candidate: Column) -> Column:
     """Luhn checksum over a 16-digit card candidate (separators
     stripped), as a pure expression: strip non-digits, double every
@@ -99,22 +86,6 @@ def luhn_valid_col(candidate: Column) -> Column:
         ).otherwise(d.cast("int")),
     )
     return F.aggregate(contrib, F.lit(0), lambda a, x: a + x) % 10 == 0
-
-
-def _scrub_through_phone(text: Column) -> Column:
-    return F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN), IPV4_RE, IPV4_TOKEN
-        ),
-        PHONE_RE,
-        PHONE_TOKEN,
-    )
-
-
-def pii_ssn_count(text: Column) -> Column:
-    """SSN-shaped matches, counted after the email/IP/phone scrubs
-    (mirrors the scrub order; the 3-2-4 shape has no checksum)."""
-    return _count_matches(_scrub_through_phone(text), SSN_RE)
 
 
 def iban_valid_col(candidate: Column) -> Column:
@@ -139,29 +110,6 @@ def iban_valid_col(candidate: Column) -> Column:
     )
 
 
-def pii_iban_count(text: Column) -> Column:
-    """Number of mod-97-VALID IBAN-shaped matches, counted after the
-    email/IP/phone/SSN scrubs (mirrors the scrub order)."""
-    scrubbed = F.regexp_replace(_scrub_through_phone(text), SSN_RE, SSN_TOKEN)
-    return F.size(
-        F.filter(F.regexp_extract_all(scrubbed, F.lit(IBAN_RE), 0), iban_valid_col)
-    )
-
-
-def pii_cc_count(text: Column) -> Column:
-    """Number of Luhn-VALID card-shaped matches, counted on the text
-    after the email/IP/phone/SSN/IBAN scrubs (mirrors the scrub
-    order)."""
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(_scrub_through_phone(text), SSN_RE, SSN_TOKEN),
-        IBAN_RE,
-        IBAN_TOKEN,
-    )
-    return F.size(
-        F.filter(F.regexp_extract_all(scrubbed, F.lit(CC_RE), 0), luhn_valid_col)
-    )
-
-
 def pii_scrub_col(text: Column) -> Column:
     """Redact email -> IPv4 -> phone -> SSN -> IBAN -> card, in that
     fixed order (order matters: an email's host part may contain digit
@@ -183,15 +131,15 @@ def pii_scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     n_phones, n_ssns, n_ibans, n_cards, clean_text). Pure projection
     (no exchange, no Python worker) built as a LINEAR chain of staged
     scrub columns, each computed exactly once and referenced by the
-    next stage plus one count — NOT via the standalone pii_*_count
-    helpers, which each rebuild the scrub prefix from the raw text:
-    composing the helpers in one select duplicates the regex tree
-    2^stages times, which blows the 64 KB Janino method limit and
-    drops the whole projection to interpreted mode (observed; the
-    staged form stays codegen-compilable as the scrub cascade grows).
-    Semantics are identical to the helpers — the counts use the same
-    mirror-the-scrub-order inputs; at 10^10 documents this remains the
-    cheapest pass in the pipeline."""
+    next stage plus one count — NOT via per-pattern count helpers that
+    each rebuild the scrub prefix from the raw text: composing such
+    helpers in one select duplicates the regex tree 2^stages times,
+    which blows the 64 KB Janino method limit and drops the whole
+    projection to interpreted mode (observed; the staged form stays
+    codegen-compilable as the scrub cascade grows). Each count reads
+    the text as scrubbed by every earlier stage (mirror-the-scrub-order
+    inputs); at 10^10 documents this remains the cheapest pass in the
+    pipeline."""
     t = F.col(text_col)
     staged = df.select(
         F.col(id_col).alias("id"),

@@ -1,9 +1,8 @@
-"""Wilson bounds (operators/confidence) + vocab coverage (corpusstats)."""
+"""Wilson bounds, KS drift and Cohen's kappa (operators/confidence)."""
 
 import math
 
 from biothings_crawler_spark.operators.confidence import wilson_flags
-from biothings_crawler_spark.operators.corpusstats import vocab_coverage
 
 
 def _wilson_py(bad: int, n: int):
@@ -41,65 +40,6 @@ def test_wilson_bounds_bracket_rate(spark):
     df = spark.createDataFrame(rows, "host string, bad boolean")
     r = wilson_flags(df, "host", "bad").collect()[0]
     assert r.lb_ppm <= r.rate_ppm <= r.ub_ppm
-
-
-def test_vocab_coverage_hand_computed(spark):
-    docs = spark.createDataFrame(
-        [(1, "a a a b b c d e")], "id long, text string"
-    )
-    r = vocab_coverage(docs, "text").collect()[0]
-    # V=5 (a b c d e), N=8, f1=3 (c d e), f2=1 (b)
-    assert (r.v_obs, r.n_tokens, r.f1, r.f2) == (5, 8, 3, 1)
-    assert r.chao1 == 5 + 3 * 2 // (2 * 2)  # bias-corrected: +1
-    assert r.gt_oov_ppm == 3 * 1_000_000 // 8
-    assert r.coverage_ppm == 5 * 1_000_000 // 6
-
-
-def test_vocab_coverage_no_doubletons_defined(spark):
-    docs = spark.createDataFrame([(1, "x y z")], "id long, text string")
-    r = vocab_coverage(docs, "text").collect()[0]
-    # f2=0: bias-corrected form stays finite (f1=3 -> +3)
-    assert (r.f1, r.f2, r.chao1) == (3, 0, 6)
-
-
-def test_distinctive_terms_surfaces_planted_markers(spark):
-    from pyspark.sql import functions as F
-
-    from biothings_crawler_spark.operators.corpusstats import (
-        distinctive_terms,
-    )
-
-    rows = []
-    for i in range(40):
-        side = "focus" if i % 2 == 0 else "rest"
-        marker = "mfocus" if side == "focus" else "mrest"
-        rows.append((i, side, f"shared filler words {marker} {marker}"))
-    docs = spark.createDataFrame(rows, "id long, grp string, text string")
-    out = distinctive_terms(docs, "text", F.col("grp") == "focus",
-                            k=4).collect()
-    # the two markers must rank 1-2, directions opposite; shared
-    # vocabulary scores (near) zero keyness
-    top2 = {r.term: r for r in out[:2]}
-    assert set(top2) == {"mfocus", "mrest"}
-    assert top2["mfocus"].overused and not top2["mrest"].overused
-    assert top2["mfocus"].g2_fxp == top2["mrest"].g2_fxp > 0  # symmetric
-    assert all(r.g2_fxp <= 2 for r in out[2:])  # floors leave <=2 crumbs
-
-
-def test_distinctive_terms_zero_cells_finite(spark):
-    from pyspark.sql import functions as F
-
-    from biothings_crawler_spark.operators.corpusstats import (
-        distinctive_terms,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a", "only here"), (2, "b", "different words")],
-        "id long, grp string, text string",
-    )
-    out = distinctive_terms(docs, "text", F.col("grp") == "a", k=10)
-    rows = out.collect()
-    assert len(rows) == 4 and all(r.g2_fxp >= 0 for r in rows)
 
 
 def test_ks_drift_detects_planted_shift(spark):

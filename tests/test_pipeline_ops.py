@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: dedup family, similarity search,
-text analysis, analysis queries."""
+"""Training-data pipeline operators: dedup family, BM25 search, text
+analysis, analysis queries."""
 
 import json
 
@@ -7,18 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from biothings_crawler_spark.operators.dedup import (
-    embedding_near_dup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_col,
     simhash_pairs,
-)
-from biothings_crawler_spark.operators.similarity import (
-    assign_cells,
-    brute_force_topk,
-    ivf_topk,
-    pick_centroids,
 )
 from biothings_crawler_spark.operators.text import (
     fingerprint_col,
@@ -41,11 +34,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def documents(spark):
     return spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
 
 
 def _texts(spark):
@@ -102,49 +90,6 @@ def test_simhash(spark):
     assert (0, 3) in pairs  # one word changed -> small hamming
 
 
-def test_hyperplane_lsh_recall_vs_brute_force(spark, embeddings):
-    """Multi-table OR-amplification must recover >=90% of the true
-    cosine>=0.95 pairs that a single 8-plane table can miss (the
-    round-1 recall cliff). Planted near-dups: one coordinate inflated."""
-    from biothings_crawler_spark.operators.dedup import cosine_col
-
-    emb = embeddings.limit(100).select("vec_id", "embedding")
-    dup = emb.select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: F.when(i == F.col("vec_id") % 64, x * F.lit(1.2)).otherwise(x),
-        ).alias("embedding"),
-    )
-    planted = emb.unionByName(dup)
-    a = planted.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
-    b = planted.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
-    truth = {
-        (r["id_a"], r["id_b"])
-        for r in a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_col(F.col("v_a"), F.col("v_b")))
-        .filter(F.col("cosine") >= 0.95)
-        .collect()
-    }
-    assert truth, "fixture produced no true near-dup pairs"
-
-    def recall(n_tables: int) -> float:
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in embedding_near_dup_pairs(
-                planted, "vec_id", "embedding", dim=64, threshold=0.95,
-                n_planes=8, n_tables=n_tables,
-            ).collect()
-        }
-        assert got <= truth  # cosine verify: no false positives
-        return len(got & truth) / len(truth)
-
-    r1, r6 = recall(1), recall(6)
-    assert r6 >= 0.9, (r1, r6, len(truth))
-    assert r6 >= r1
-
-
 def test_simhash_pandas_twin_bit_identical(spark, documents):
     """The numpy pandas-UDF signature (scale path) must equal the
     expression signature bit-for-bit, for both hash families."""
@@ -166,144 +111,6 @@ def test_simhash_pandas_twin_bit_identical(spark, documents):
     got = nulls.select(
         simhash60_md5_pandas_udf(F.col("text")).alias("b")).collect()
     assert [r["b"] for r in got] == [None, 0]
-
-
-def test_embedding_near_dup_and_topk(spark, embeddings):
-    emb = embeddings.limit(200)
-    # plant a near-exact duplicate of vec 0
-    dup = emb.filter(F.col("vec_id") == 0).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.000001)).alias("embedding"),
-        "label",
-    )
-    planted = emb.unionByName(dup)
-    pairs = embedding_near_dup_pairs(planted, "vec_id", "embedding", dim=64,
-                                     threshold=0.999).collect()
-    assert any(r["id_a"] == 0 and r["id_b"] == 10_000 for r in pairs)
-
-    q = emb.filter(F.col("vec_id") < 3)
-    topk = brute_force_topk(emb, q, k=5)
-    rows = topk.collect()
-    assert len(rows) == 15
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid, rs in by_q.items():
-        best = min(rs, key=lambda r: r["rank"])
-        assert best["vec_id"] == qid and best["cosine"] > 0.999999
-
-
-def test_ivf_recall(spark, embeddings):
-    cents = pick_centroids(embeddings, "vec_id", "embedding", 16)
-    cells = assign_cells(embeddings, cents, "vec_id", "embedding")
-    assert cells.count() == embeddings.count()
-    q = embeddings.filter(F.col("vec_id") < 8)
-    exact = brute_force_topk(embeddings, q, k=5)
-    approx = ivf_topk(cells, cents, q, k=5, nprobe=6)
-    et = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
-    at = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
-    recall = len(et & at) / len(et)
-    assert recall >= 0.6, recall
-
-
-def test_quantized_ivf_index_recall_and_pruning(spark, embeddings, tmp_path):
-    """The 8-bit quantized cell-partitioned index must (a) keep
-    recall@10 >= 0.9 against the FULL-PRECISION IVF at the same
-    (nprobe, k) — quantization, not cell choice, is the only delta —
-    and (b) probe with the same partition-pruned plan as the
-    full-precision index (dequantize only on the probed sliver)."""
-    from biothings_crawler_spark.operators.quantize import (
-        ivf_quantized_topk,
-        write_quantized_ivf_index,
-    )
-    from biothings_crawler_spark.operators.similarity import (
-        assign_cells,
-        ivf_topk,
-        pick_centroids,
-    )
-
-    cents = pick_centroids(embeddings, "vec_id", "embedding", 16)
-    cells = assign_cells(embeddings, cents, "vec_id", "embedding")
-    path = str(tmp_path / "ivfq")
-    write_quantized_ivf_index(cells, path)
-    qidx = spark.read.parquet(path)
-
-    q = embeddings.filter(F.col("vec_id") < 8)
-    full = ivf_topk(cells, cents, q, k=10, nprobe=6)
-    quant = ivf_quantized_topk(qidx, cents, q, k=10, nprobe=6)
-    ft = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-    qt = {(r["query_id"], r["vec_id"]) for r in quant.collect()}
-    recall = len(ft & qt) / len(ft)
-    assert recall >= 0.9, recall
-
-    plan = quant._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-
-
-def test_rerank_beats_or_matches_quantized_only(spark, embeddings, tmp_path):
-    """Two-stage retrieval: reranking the quantized stage's k*4
-    candidates with full-precision cosine must give recall@10 vs the
-    full-precision IVF at least as high as quantized-only, and the
-    final ordering must be by exact (not quantized) cosine."""
-    from biothings_crawler_spark.operators.quantize import (
-        ivf_quantized_topk,
-        ivf_rerank_topk,
-        write_quantized_ivf_index,
-    )
-    from biothings_crawler_spark.operators.similarity import (
-        assign_cells,
-        ivf_topk,
-        pick_centroids,
-    )
-    from biothings_crawler_spark.operators.dedup import cosine_col
-
-    cents = pick_centroids(embeddings, "vec_id", "embedding", 16)
-    cells = assign_cells(embeddings, cents, "vec_id", "embedding")
-    path = str(tmp_path / "ivfq")
-    write_quantized_ivf_index(cells, path)
-    qidx = spark.read.parquet(path)
-    q = embeddings.filter(F.col("vec_id") < 8)
-
-    full = {(r["query_id"], r["vec_id"])
-            for r in ivf_topk(cells, cents, q, k=10, nprobe=6).collect()}
-    quant = {(r["query_id"], r["vec_id"])
-             for r in ivf_quantized_topk(qidx, cents, q, k=10, nprobe=6).collect()}
-    rer_rows = ivf_rerank_topk(qidx, cents, q, embeddings,
-                               k=10, nprobe=6, rerank_factor=4).collect()
-    rer = {(r["query_id"], r["vec_id"]) for r in rer_rows}
-    r_quant = len(full & quant) / len(full)
-    r_rerank = len(full & rer) / len(full)
-    assert r_rerank >= r_quant and r_rerank >= 0.9, (r_quant, r_rerank)
-
-    # final scores are EXACT cosines: recompute one row independently
-    # (cosine is symmetric, so operand order is irrelevant)
-    probe = next(r for r in rer_rows if r["query_id"] != r["vec_id"])
-    va, vb = (
-        embeddings.filter(F.col("vec_id").isin(int(probe["query_id"]),
-                                               int(probe["vec_id"])))
-        .orderBy("vec_id").collect()
-    )
-    got = (
-        spark.createDataFrame([(va["embedding"], vb["embedding"])],
-                              "a array<float>, b array<float>")
-        .select(cosine_col(F.col("a"), F.col("b")).alias("c")).collect()[0]["c"]
-    )
-    assert abs(got - probe["cosine"]) < 1e-12
-
-
-def test_q_ann_ivf_quantized_plan_prunes(spark):
-    """The driver-gate quantized-IVF query itself builds, persists, and
-    re-reads the quantized index; ITS plan must show probe-side
-    partition pruning, same bar as q_ann_ivf_topk."""
-    from biothings_crawler_spark.plans.driver_queries import q_ann_ivf_quantized
-
-    out = q_ann_ivf_quantized(spark, "/root/testdata/sf0.001")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-    per_q = {}
-    for r in out.collect():
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
 def test_text_analysis_cols(spark):
@@ -479,46 +286,6 @@ def test_bigram_coverage_scores_gibberish_low(spark):
     assert out[102]["n_bigrams"] == 0 and out[102]["coverage_q6"] == 0
 
 
-def test_quantize_roundtrip_bound_and_recall(spark, embeddings):
-    """8-bit scalar quantization: reconstruction error is bounded by
-    half a quantization step per element, and quantized brute top-k
-    keeps >=0.9 recall@10 vs full precision on real embeddings."""
-    from biothings_crawler_spark.operators.quantize import (
-        dequantize_col,
-        quantize_embeddings,
-        quantized_brute_topk,
-    )
-    from biothings_crawler_spark.operators.similarity import brute_force_topk
-
-    emb = embeddings.limit(400)
-    qt = quantize_embeddings(emb)
-    # round-trip error <= (vmax - vmin)/255/2 + eps, per element
-    err = (
-        qt.join(emb.selectExpr("vec_id", "embedding AS orig"), "vec_id")
-        .select(
-            F.aggregate(
-                F.zip_with(
-                    dequantize_col(F.col("qvec"), F.col("vmin"), F.col("vmax")),
-                    F.col("orig"),
-                    lambda a, b: F.abs(a - b.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            ).alias("max_err"),
-            ((F.col("vmax") - F.col("vmin")) / 510.0 + 1e-9).alias("bound"),
-        )
-    )
-    assert err.filter(F.col("max_err") > F.col("bound")).count() == 0
-
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = {(r["query_id"], r["vec_id"])
-             for r in brute_force_topk(emb, q, k=10).collect()}
-    quant = {(r["query_id"], r["vec_id"])
-             for r in quantized_brute_topk(qt, q, k=10).collect()}
-    recall = len(exact & quant) / len(exact)
-    assert recall >= 0.9, recall
-
-
 def test_recrawl_schedule_fold_and_clamps(spark):
     """Adaptive revisit intervals: halve on change, double on
     no-change, clamped; first fetch carries no flag; next_due = last
@@ -593,54 +360,6 @@ def test_connected_components_chain(spark):
     nodes = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3, 4, 10, 11, 99]}))
     out = {r["id"]: r["component"] for r in connected_components(pairs, nodes).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
-
-
-def test_ivf_index_write_prunes_probed_cells(spark, embeddings, tmp_path):
-    """The persisted IVF index (partitioned by cell) must (a) give the
-    same top-k as the in-memory path and (b) let the probe join prune
-    the scan to the probed cells (dynamic partition pruning)."""
-    from biothings_crawler_spark.operators.similarity import (
-        assign_cells,
-        ivf_topk,
-        pick_centroids,
-        read_ivf_index,
-        write_ivf_index,
-    )
-
-    emb = embeddings.limit(400)
-    cents = pick_centroids(emb, "vec_id", "embedding", 8)
-    cells = assign_cells(emb, cents, "vec_id", "embedding")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(cells, path)
-    on_disk = read_ivf_index(spark, path)
-
-    q = emb.filter(F.col("vec_id") < 3)
-    want = {(r["query_id"], r["vec_id"], r["rank"])
-            for r in ivf_topk(cells, cents, q, k=5, nprobe=3).collect()}
-    out = ivf_topk(on_disk, cents, q, k=5, nprobe=3)
-    got = {(r["query_id"], r["vec_id"], r["rank"]) for r in out.collect()}
-    assert got == want and len(got) == 15
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-
-
-def test_q_ann_ivf_topk_reads_persisted_index_with_pruning(spark):
-    """The driver-gate IVF query itself now builds, persists, and
-    re-reads the cell-partitioned index, so ITS plan must show the
-    probe-side partition pruning — not just the operator-level test
-    above."""
-    from biothings_crawler_spark.plans.driver_queries import q_ann_ivf_topk
-
-    out = q_ann_ivf_topk(spark, "/root/testdata/sf0.001")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-    # 5 results per query vector, rank 1..5, deterministic
-    rows = out.collect()
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
 def test_winnow_twins_and_overlap_detection(spark, documents):
@@ -1409,56 +1128,6 @@ def test_tokenizer_model_hook_matches_expression(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_semantic_dedup_no_casualties(spark):
-    """SemDeDup's within-cell restriction must lose NO pair the
-    brute-force all-pairs cosine finds at the fixture's threshold: the
-    planted twin families (exact power-of-two scalings, cosine ~1.0)
-    are the only pairs >= 0.95, and scale-invariance makes their cell
-    assignment bit-identical to the base vector's — so within-cell ==
-    brute force exactly. Also pins the CC completion: each family is
-    one component labeled by its base id with 1e6//size weights."""
-    from biothings_crawler_spark.operators.dedup import (
-        cosine_col,
-        semantic_dedup_pairs,
-    )
-    from biothings_crawler_spark.plans.driver_queries import (
-        _semdedup_embeddings,
-        q_semantic_dedup,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    aug = _semdedup_embeddings(spark, sf)
-    a = aug.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
-    b = aug.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
-    brute = {
-        (r["id_a"], r["id_b"])
-        for r in (
-            a.crossJoin(b)
-            .filter("id_a < id_b")
-            .withColumn("c", cosine_col(F.col("v_a"), F.col("v_b")))
-            .filter("c >= 0.95")
-            .collect()
-        )
-    }
-    within = {
-        (r["id_a"], r["id_b"])
-        for r in semantic_dedup_pairs(
-            aug, "vec_id", "embedding", n_centroids=8, threshold=0.95,
-            hash_family="md5",
-        ).collect()
-    }
-    # 25 triples (base, x2, x4) contribute 3 pairs, 25 pairs (base, x2)
-    # contribute 1: 100 planted pairs, zero natural ones, zero casualties
-    assert within == brute and len(brute) == 100
-
-    out = {r["id"]: (r["component"], r["weight_ppm"])
-           for r in q_semantic_dedup(spark, sf).collect()}
-    assert len(out) == 575
-    assert out[20000] == (0, 333333) and out[10000] == (0, 333333)
-    assert out[10010] == (10, 500000) and out[10] == (10, 500000)
-    assert out[1] == (1, 1000000)
-
-
 # --- corpus datasheet (operators/datasheet.corpus_datasheet) -----------------
 
 
@@ -1886,46 +1555,6 @@ def test_jaccard_join_exact_vs_bruteforce(spark):
     assert (3, 100) in got  # the planted twin survived the prefix filter
 
 
-def test_truncated_ann_recall_and_rerank_pattern(spark):
-    """Fixture embeddings are isotropic (not MRL-trained), so prefix
-    truncation keeps ~1/4 of the signal; the assertions pin the
-    mechanism: far-above-random recall, monotone in kept dims, and the
-    truncated-shortlist -> full-re-rank serving pattern recovering
-    most of the exact top-10."""
-    from pyspark.sql import functions as F
-
-    from biothings_crawler_spark.operators.similarity import (
-        brute_force_topk,
-        truncated_brute_topk,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 20)
-
-    def _sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return out
-
-    full = _sets(brute_force_topk(e, q, "vec_id", "embedding", 10))
-    n_q = len(full)
-
-    def _recall(hit_sets):
-        return sum(len(full[k] & hit_sets[k]) for k in full) / (10 * n_q)
-
-    r16 = _recall(_sets(truncated_brute_topk(e, q, "vec_id", "embedding",
-                                             10, dims=16)))
-    r32 = _recall(_sets(truncated_brute_topk(e, q, "vec_id", "embedding",
-                                             10, dims=32)))
-    # random top-10 out of 500 candidates would recall ~0.02
-    assert r16 >= 0.15
-    assert r32 >= r16
-    shortlist = _recall(_sets(truncated_brute_topk(e, q, "vec_id",
-                                                   "embedding", 100, dims=16)))
-    assert shortlist >= 0.6  # measured 0.72: re-rank recovers most
-
-
 def test_priority_sample_contract(spark):
     from biothings_crawler_spark.operators.sampling import (
         hash_u60_col,
@@ -2050,43 +1679,6 @@ def test_readability_plan_is_pure_projection(spark):
     ).executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_vocab_growth_hand_computed(spark):
-    from biothings_crawler_spark.operators.corpusstats import vocab_growth
-
-    df = spark.createDataFrame(
-        [(0, "a b"), (5, "a c"), (9, "c c d")],
-        "doc_id long, text string",
-    )
-    got = {r["bucket"]: (r["tokens"], r["tokens_cum"],
-                         r["new_terms"], r["vocab_cum"])
-           for r in vocab_growth(df, "doc_id", "text", buckets=2).collect()}
-    # id 0 -> bucket 0; ids 5, 9 -> bucket 1 (range [0,9], 2 buckets)
-    assert got[0] == (2, 2, 2, 2)          # tokens a,b; vocab {a,b}
-    assert got[1] == (5, 7, 2, 4)          # +a,c,c,c,d; new {c,d}
-
-
-def test_zipf_profile_rank_spans(spark):
-    from biothings_crawler_spark.operators.corpusstats import zipf_profile
-
-    df = spark.createDataFrame(
-        [(1, "a a a a b b c d")], "doc_id long, text string")
-    got = {r["rank"]: (r["freq"], r["n_terms"])
-           for r in zipf_profile(df, "text", max_log2_rank=2).collect()}
-    # freqs: a=4 (rank 1), b=2 (rank 2), c=d=1 (ranks 3-4 share freq 1)
-    assert got == {1: (4, 1), 2: (2, 1), 4: (1, 2)}
-
-
-def test_zipf_profile_window_is_on_histogram_only(spark):
-    from biothings_crawler_spark.operators.corpusstats import zipf_profile
-
-    df = spark.createDataFrame([(1, "x y z")], "doc_id long, text string")
-    plan = zipf_profile(df, "text")._jdf.queryExecution(
-    ).optimizedPlan().toString()
-    # the Window's child must aggregate by freq (the sqrt(2N)-bounded
-    # histogram), never order raw terms
-    assert plan.index("Window") < plan.index("Aggregate")
 
 
 def test_slo_burn_hand_computed(spark):
@@ -2250,65 +1842,6 @@ def test_k_truss_triangle_survives_k3(spark):
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long")
     got = {(r["a"], r["b"]) for r in k_truss(df, 3).collect()}
     assert got == {(1, 2), (2, 3), (1, 3)}       # the pendant edge peels
-
-
-def test_pq_encode_centroid_vectors_code_to_themselves(spark):
-    from biothings_crawler_spark.operators.pq import (
-        pq_codebooks, pq_encode, pq_topk_adc)
-
-    # 4 vectors of dim 4, m=2 subspaces, k=4 codebook = ALL vectors,
-    # so every vector's subvectors are exact centroids: d2 = 0
-    rows = [(i, [i * 10, i * 10 + 1, i * 20, i * 20 + 3]) for i in range(4)]
-    qt = spark.createDataFrame(rows, "vec_id long, qvec array<int>")
-    books = pq_codebooks(qt, m=2, k=4)
-    codes = pq_encode(qt, books, m=2)
-    got = {r["vec_id"]: r["codes"] for r in codes.collect()}
-    cb = {(r["sub"], tuple(r["cv"])): r["cid"] for r in books.collect()}
-    for i in range(4):
-        sv0 = (i * 10, i * 10 + 1)
-        sv1 = (i * 20, i * 20 + 3)
-        assert got[i] == [cb[(0, sv0)], cb[(1, sv1)]]
-
-    # ADC with a query equal to a database vector: its own entry
-    # scores adc_d2 = 0 and ranks first
-    top = pq_topk_adc(qt.filter("vec_id = 2"), books, codes, k=1, m=2)
-    r = top.collect()[0]
-    assert (r["query_id"], r["vec_id"], r["adc_d2"], r["rank"]) == (2, 2, 0, 1)
-
-
-def test_pq_adc_recall_vs_exact_on_quantized(spark):
-    from biothings_crawler_spark.operators.pq import (
-        pq_codebooks, pq_encode, pq_topk_adc)
-    from biothings_crawler_spark.operators.quantize import quantize_embeddings
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qt = quantize_embeddings(emb).select("vec_id", "qvec")
-    books = pq_codebooks(qt)
-    codes = pq_encode(qt, books)
-    queries = qt.filter("vec_id < 5")
-    adc = pq_topk_adc(queries, books, codes, k=10)
-    got = {(r["query_id"], r["vec_id"]) for r in adc.collect()}
-    # exact integer L2 on the same quantized vectors
-    exact = (
-        qt.alias("c").crossJoin(
-            queries.select(F.col("vec_id").alias("query_id"),
-                           F.col("qvec").alias("qq")))
-        .select("query_id", F.col("c.vec_id").alias("vec_id"),
-                F.expr("aggregate(zip_with(qvec, qq, (x, y) -> "
-                       "cast((x - y) * (x - y) as bigint)), 0L, "
-                       "(a, v) -> a + v)").alias("d2"))
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    ex = {(r["query_id"], r["vec_id"]) for r in
-          exact.select("query_id", "vec_id",
-                       F.row_number().over(w).alias("rn"))
-          .filter("rn <= 10").collect()}
-    recall = len(got & ex) / len(ex)
-    # 8-byte codes vs 64-byte vectors (measured 0.54 on this fixture
-    # at the m=16/k=16/rounds=2 defaults; pinned with headroom)
-    assert recall >= 0.45, recall
 
 
 def test_passage_dedup_huge_ids_and_million_passage_doc(spark):

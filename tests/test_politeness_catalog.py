@@ -93,18 +93,58 @@ def test_catalog_atomic_commit_and_resume(spark, tmp_path):
         cat.commit(1, {"t": df0})  # re-commit refused (resume safety)
 
 
-def test_catalog_uncommitted_rounds_invisible(spark, tmp_path):
-    """A crash between table write and manifest update leaves no trace."""
-    cat = ParquetManifestCatalog(tmp_path / "cp2")
-    cat.commit(0, {"t": spark.range(4).withColumnRenamed("id", "v")})
-    # simulate a crashed round-1 write (data dir exists, not in manifest)
-    df = spark.range(9).withColumnRenamed("id", "v")
-    df.write.parquet(str(cat._round_dir("t", 1)))
-    assert cat.rounds("t") == [0]
-    assert cat.read(spark, "t").count() == 4
-    # and a fresh commit for round 1 replaces the garbage
-    cat.commit(1, {"t": spark.range(2).withColumnRenamed("id", "v")})
-    assert cat.read(spark, "t", 1).count() == 2
+@pytest.mark.parametrize("kill_point", ["before_manifest", "after_first_rename"])
+def test_catalog_uncommitted_rounds_invisible(spark, tmp_path, monkeypatch, kill_point):
+    """A job killed inside a real two-table commit leaves no visible
+    trace: after all renames but before the manifest write (both round
+    dirs orphaned), or after the first rename only (one round dir
+    orphaned, the other table still staged in .tmp/)."""
+    import os
+
+    def rows(n):
+        return spark.range(n).withColumnRenamed("id", "v")
+
+    class Killed(Exception):
+        pass
+
+    root = tmp_path / "cp2"
+    cat = ParquetManifestCatalog(root)
+    cat.commit(0, {"t": rows(4), "u": rows(3)})
+    if kill_point == "before_manifest":
+        def kill(manifest):
+            raise Killed
+
+        monkeypatch.setattr(cat, "_write_manifest", kill)
+    else:
+        real_rename = os.rename
+        calls = []
+
+        def kill(src, dst):
+            calls.append(src)
+            if len(calls) > 1:
+                raise Killed
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", kill)
+    with pytest.raises(Killed):
+        cat.commit(1, {"t": rows(9), "u": rows(7)})
+    monkeypatch.undo()
+    assert cat._round_dir("t", 1).exists()  # the orphan is on disk
+    staged = (root / ".tmp" / "u-r000001").exists()
+    assert staged == (kill_point == "after_first_rename")
+
+    resumed = ParquetManifestCatalog(root)
+    assert resumed.latest_round() == 0
+    for name, n in (("t", 4), ("u", 3)):
+        assert resumed.rounds(name) == [0]
+        assert resumed.read(spark, name).count() == n
+        assert resumed.read(spark, name, 1) is None
+    # re-committing the round replaces the garbage
+    resumed.commit(1, {"t": rows(2), "u": rows(5)})
+    assert resumed.latest_round() == 1
+    assert resumed.read(spark, "t", 1).count() == 2
+    assert resumed.read(spark, "u", 1).count() == 5
+    assert not list((root / ".tmp").glob("*-r*"))
 
 
 def test_catalog_commit_stamps_meta_provenance(spark, tmp_path):

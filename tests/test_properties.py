@@ -46,17 +46,3 @@ def test_gzip_member_parse_roundtrip(payload):
     # a flipped trailer byte must be rejected, never mis-decoded
     corrupt = blob[:-1] + bytes([blob[-1] ^ 0xFF])
     assert _parse_gzip_member(corrupt)[0] is False
-
-
-@settings(max_examples=80, deadline=None)
-@given(st.text(st.characters(min_codepoint=0x20, max_codepoint=0x7E),
-               max_size=200))
-def test_outline_sections_partition_wordcount(html):
-    """Heading-outline invariant: per-section word counts equal each
-    section's own split; section numbers are dense from 0."""
-    from biothings_crawler_spark.operators.chunking import _parse_outline
-
-    rows = _parse_outline(html)
-    for sec_no, _level, _path, _title, n_words, content in rows:
-        assert n_words == len(content.split())
-    assert [r[0] for r in rows] == list(range(len(rows)))

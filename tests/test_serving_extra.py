@@ -203,57 +203,3 @@ def test_depth_yield_census_shape(spark):
     assert out[3].share == 1_000_000
     shares = [out[k].share for k in sorted(out)]
     assert shares == sorted(shares)
-
-
-def test_maxsim_matches_numpy_and_prefers_token_overlap(spark):
-    import numpy as np
-
-    from biothings_crawler_spark.operators.similarity import maxsim_topk
-
-    rng = np.random.RandomState(5)
-    M, D = 4, 4
-    # doc 10 shares ONE token sub-vector with the query but is
-    # otherwise orthogonal-ish; doc 11 is a moderate single-vector
-    # match spread evenly. MaxSim must prefer the token-level hit.
-    qv = rng.randn(M * D).astype("float32")
-    d10 = rng.randn(M * D).astype("float32")
-    d10[2 * D:3 * D] = qv[0:D] * 2.0      # exact token match (scaled)
-    d11 = (qv * 0.3 + rng.randn(M * D) * 0.7).astype("float32")
-    docs = [(10, d10.tolist()), (11, d11.tolist()),
-            (12, rng.randn(M * D).astype("float32").tolist())]
-    q = spark.createDataFrame([(0, qv.tolist())],
-                              "vec_id long, embedding array<float>")
-    dv = spark.createDataFrame(docs, "vec_id long, embedding array<float>")
-    cand = spark.createDataFrame(
-        [(0, i) for i, _ in docs], "query_id long, doc_id long")
-    got = {r["doc_id"]: r for r in
-           maxsim_topk(cand, q, dv, m=M, d=D, k=3).collect()}
-
-    def ref_score(dvec):
-        s = 0
-        for i in range(M):
-            best = None
-            for j in range(M):
-                a = qv[i * D:(i + 1) * D].astype(np.float64)
-                b = np.array(dvec[j * D:(j + 1) * D], dtype=np.float64)
-                # replicate the engine's left-to-right fold exactly
-                dot = 0.0
-                na = 0.0
-                nb = 0.0
-                for kk in range(D):
-                    dot += float(np.float32(qv[i * D + kk])
-                                 * np.float32(dvec[j * D + kk]))
-                    na += float(np.float32(qv[i * D + kk])
-                                * np.float32(qv[i * D + kk]))
-                    nb += float(np.float32(dvec[j * D + kk])
-                                * np.float32(dvec[j * D + kk]))
-                c = int(np.floor(dot / (np.sqrt(na) * np.sqrt(nb))
-                                 * 1_000_000))
-                best = c if best is None else max(best, c)
-            s += best
-        return s
-
-    for did, dvec in docs:
-        assert got[did]["score_ppm"] == ref_score(dvec), did
-    # token-level hit outranks the diffuse single-vector match
-    assert got[10]["rank"] < got[11]["rank"]
