@@ -61,7 +61,6 @@ SUITE = [
     "q_release_manifest",
     "q_robots_render",
     "q_calibration",
-    "q_hard_negatives",
     "q_manifest_diff",
     "q_host_boilerplate",
     "q_homograph_hosts",
@@ -70,7 +69,6 @@ SUITE = [
     "q_pagination_chains",
     "q_js_required",
     "q_query_parse",
-    "q_shard_skip",
     "q_word_segment",
     "q_feed_render",
     "q_refs_strip",
@@ -97,25 +95,15 @@ SUITE = [
     # round-5 additions (LM smoothing + parallel-corpus mining planes)
     "q_hreflang_clusters",
     "q_url_parallel_pairs",
-    # session-9 additions (classifier/selection/retrieval/drift planes)
-    "q_err_eval",
-    "q_map_eval",
-    "q_ndcg",
-    "q_dict_frontcoding",
-    "q_search_pipeline",
+    # session-9 additions (classifier/selection/drift planes)
     "q_prospective_match",
     "q_profile_drift",
     "q_temperature_mix",
     "q_wilson_errors",
     "q_ks_drift",
-    "q_ql_dirichlet",
     "q_char_entropy",
     "q_burst_intervals",
     "q_mojibake",
-    "q_pruned_topk",
-    "q_ltr_features",
-    "q_cori_shards",
-    "q_query_clarity",
     "q_tokenizer_fertility",
     "q_soft404_probe",
     "q_ip_politeness",
@@ -135,7 +123,6 @@ SUITE = [
     "q_hll_by_host",
     "q_priority_fusion",
     "q_graph_census",
-    "q_maxscore_topk",
     "q_politeness_quota",
     "q_seen_antijoin",
     "q_frontier_dedup",
@@ -157,9 +144,7 @@ SUITE = [
     "q_bigram_coverage",
     "q_snapshot_diff",
     "q_refetch_round",
-    "q_postings_chunks",
     "q_hll_small",
-    "q_bm25_topk",
     "q_sessionize",
     "q_sessionize_fold",
     "q_asof_join",
@@ -200,11 +185,7 @@ SUITE = [
     "q_token_budget",
     "q_incremental_neardup",
     "q_hist_merge",
-    "q_shard_rebalance",
     "q_trustrank",
-    "q_postings_varint",
-    "q_sharded_postings",
-    "q_compact_index",
     "q_surt_keys",
     "q_politeness_audit",
     "q_cdx_index",
@@ -233,12 +214,10 @@ SUITE = [
     "q_typosquat_pairs",
     "q_payload_pipeline",
     "q_waterfill_budget",
-    "q_bm25f_topk",
     "q_readability",
     "q_slo_burn",
     "q_ucb_recrawl",
     "q_hilbert_key",
-    "q_prf_search",
     "q_ktruss",
 ]
 
@@ -283,15 +262,14 @@ def crawl_sched_job(spark: SparkSession, seeds) -> int:
 
 
 MEGA_REPLICAS = int(os.environ.get("SPARK_GRAFT_MEGA_REPLICAS", "4"))
-MEGA_QUERY = ["data", "analysis", "research"]
 
 
 def mega_input(spark: SparkSession, sf_dir: str, replicas: int = MEGA_REPLICAS):
-    """Crawled-page corpus for the composed pipeline: documents x
+    """Crawled-page corpus for the composed pipelines: documents x
     replicas wrapped in full HTML (script/style/comment noise, an
     email for id%3==0), distinct ids per replica — so exact dedup has
-    real work (the replicas are byte-identical bodies) and the PII
-    pass has real casualties. Materialized OUTSIDE the timed window."""
+    real work (the replicas are byte-identical bodies). Materialized
+    OUTSIDE the timed window."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_rows = docs.count() * replicas
     n_parts = max(4, min(spark.sparkContext.defaultParallelism, n_rows // 4000))
@@ -313,23 +291,6 @@ def mega_input(spark: SparkSession, sf_dir: str, replicas: int = MEGA_REPLICAS):
         .select(i.alias("id"), F.encode(html, "utf-8").alias("html"))
         .persist()
     )
-
-
-def mega_pipeline_job(spark: SparkSession, pages) -> dict:
-    """The composed crawl-output-to-search pipeline (plans/pipeline.
-    web_pipeline): html->text -> PII scrub -> exact dedup -> near-dup
-    removal -> chunked inverted index -> BM25 top-k, with ONE
-    mid-pipeline materialization (the cleaned-corpus artifact a real
-    run persists before indexing)."""
-    from biothings_crawler_spark.plans.pipeline import web_pipeline
-
-    survivors, chunks, topk = web_pipeline(pages, "id", "html", MEGA_QUERY)
-    survivors = survivors.persist()
-    n_surv = survivors.count()
-    n_chunks = chunks.count()
-    n_topk = topk.count()
-    survivors.unpersist()
-    return {"survivors": n_surv, "chunks": n_chunks, "topk": n_topk}
 
 
 def archive_pipeline_job(spark: SparkSession, pages) -> dict:
@@ -474,20 +435,11 @@ def main() -> None:
         best = min(best or 1e9, time.time() - t0)
     timings["extract_jsonld"] = round(best, 3)
 
-    # the composed crawl-output-to-search pipeline, one wall number
-    # (best-of-2; the CC loop's eager checkpoints make reruns honest)
+    # crawled pages shared by the archive and release pipelines
     mega_pages = mega_input(spark, SF_DIR)
     n_mega_pages = mega_pages.count()  # materialize, untimed
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        mega_counts = mega_pipeline_job(spark, mega_pages)
-        best = min(best or 1e9, time.time() - t0)
-    timings["mega_pipeline"] = round(best, 3)
-    counts["mega_pipeline_pages"] = n_mega_pages
-    counts["mega_pipeline_survivors"] = mega_counts["survivors"]
 
-    # the archive storage loop over the same pages (best-of-2)
+    # the archive storage loop (best-of-2)
     best = None
     for _ in range(2):
         t0 = time.time()
@@ -550,7 +502,7 @@ def main() -> None:
     print(line, flush=True)
     headline_queries = {
         k: timings[k]
-        for k in ("crawl_sched", "extract_jsonld", "mega_pipeline",
+        for k in ("crawl_sched", "extract_jsonld",
                   "archive_pipeline", "q_politeness_quota",
                   "q_minhash_lsh", "q_sessionize", "q_sessionize_fold")
         if k in timings

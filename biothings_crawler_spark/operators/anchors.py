@@ -78,10 +78,10 @@ def anchor_field(
     anchor_col: str,
     m: int = 10,
 ) -> DataFrame:
-    """The per-target anchor FIELD for fielded retrieval (the
-    ``anchors`` input of :func:`bm25.bm25f_topk`): each top-m term
-    repeated ``n_hosts`` times, in rank order — so the BM25F anchor tf
-    IS the host-collapsed vote count, not the raw link count.  Bounded
+    """The per-target anchor FIELD for fielded (BM25F-style)
+    retrieval: each top-m term repeated ``n_hosts`` times, in rank
+    order — so the anchor field's tf IS the host-collapsed vote count,
+    not the raw link count.  Bounded
     by construction: <= m terms and <= sum(n_hosts) <= m * |hosts|
     tokens per target, assembled row-locally from the summary (one
     ``array_join``/``repeat`` projection, no extra shuffle past the

@@ -12,7 +12,7 @@ Shape: one projection (token/char counts are row-local codegen
 expressions — the same ``TOKEN_RE`` proxy as operators/text.py, so the
 datasheet agrees with the pipeline's own token accounting), ONE hash
 aggregation keyed by the stratum, then a 1-row global-totals broadcast
-join (same pattern as traps.host_skew_report / bm25's totals).  No
+join (same pattern as traps.host_skew_report).  No
 windows, no driver collects; the stratum domain is |langs|×|sources|-
 bounded, so the final join is trivially broadcast-able at any corpus
 size.  All derived ratios are exact integer parts-per-million so the

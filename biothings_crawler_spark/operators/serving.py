@@ -1,15 +1,14 @@
-"""Query-serving operators over the ranked-retrieval plane: positional
-phrase matching, query-dependent snippet extraction, and host-crowding
-diversification (the reference serves ES dis_max + highlight-style hits
-through crawler/web/handlers.py; this module adds the classic serving
-primitives the same index would power, Spark-first).
+"""Query-serving operators: positional phrase matching, query-dependent
+snippet extraction, rank fusion, query parsing and ranker evaluation (the
+reference serves ES dis_max + highlight-style hits through
+crawler/web/handlers.py; this module adds the classic serving primitives
+the same index would power, Spark-first).
 
 Scale shapes:
 
 - ``positional_postings`` is one posexplode + nothing else: the
   positional index is (term, id, pos) ROWS, never a per-term array —
-  a stop word is many rows sharded across reducers, exactly like
-  bm25.inverted_postings with a position column added.
+  a stop word is many rows sharded across reducers.
 - ``phrase_topk`` resolves an n-term phrase as (n-1) equi-joins on the
   composite key (id, first_pos) over per-term posting slivers: each
   join side is one term's postings (a filter pushed into the scan /
@@ -19,9 +18,6 @@ Scale shapes:
   per-doc best-window search costs O(len * width) array ops with a
   bounded constant width — honest and embarrassingly parallel; the
   prefix-sum O(len) variant buys nothing until width is large.
-- ``diverse_topk`` adds one narrow (id, host) join and one window over
-  host partitions on top of bm25 scoring; the window input is already
-  reduced to docs matching at least one query term.
 """
 
 from __future__ import annotations
@@ -29,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from biothings_crawler_spark.operators.bm25 import bm25_scores
 from biothings_crawler_spark.operators.text import words_col
 
 
@@ -115,36 +110,6 @@ def snippet_windows(
                 F.slice("words", -F.col("best.neg_start"), F.lit(width)), " "
             ).alias("snippet"),
         )
-    )
-
-
-def diverse_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    host_col: str,
-    query_terms: list[str],
-    k: int = 20,
-    per_host: int = 2,
-) -> DataFrame:
-    """Host-crowding-capped serving top-k: integer-BM25 scores, at most
-    ``per_host`` results per host (rank by score desc, id asc within a
-    host), then the global top-k over the survivors.  Returns
-    (id, host, score, host_rank)."""
-    from pyspark.sql.window import Window
-
-    scores = bm25_scores(df, id_col, text_col, query_terms)
-    hosts = df.select(
-        F.col(id_col).alias("id"), F.col(host_col).alias("host")
-    )
-    w = Window.partitionBy("host").orderBy(F.desc("score"), "id")
-    return (
-        scores.join(hosts, "id")
-        .withColumn("host_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("host_rank") <= per_host)
-        .orderBy(F.desc("score"), "id")
-        .limit(k)
-        .select("id", "host", "score", "host_rank")
     )
 
 

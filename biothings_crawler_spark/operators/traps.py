@@ -22,9 +22,9 @@ needs both as first-class batch operators over the frontier table.
   would split each hot host into ~``target_per_task``-URL tasks —
   directly consumable by the two-phase salted politeness window
   (operators/politeness.py).  Shape: per-host hash agg, a 1-row
-  global-totals broadcast join (same pattern as bm25.py's totals),
-  TakeOrderedAndProject for the top-k.  All integer arithmetic
-  (ppm shares, ceil-division salt) so the DuckDB oracle is exact.
+  global-totals broadcast join, TakeOrderedAndProject for the top-k.
+  All integer arithmetic (ppm shares, ceil-division salt) so the
+  DuckDB oracle is exact.
 
 * :func:`link_farm_report` — reciprocal-link spam: honest sites link
   *out* to hubs far more than hubs link back, while link farms

@@ -81,75 +81,3 @@ def clean_corpus(
         "id", "clean_text", "n_kept", "n_removed",
         token_count_col(F.col("clean_text")).cast("long").alias("n_tokens"),
     )
-
-
-def web_pipeline(
-    pages: DataFrame,
-    id_col: str,
-    html_col: str,
-    query_terms: list[str],
-    jaccard: float = 0.5,
-    n_perm: int = 16,
-    bands: int = 4,
-    chunk_range: int = 1 << 12,
-    k: int = 20,
-    shingle_impl: str = "pandas",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The COMPOSED crawl-output-to-search pipeline a 100-TB operator
-    actually runs, end to end: crawled pages -> html->text extraction
-    -> PII scrub -> exact dedup (min-id winner) -> MinHash-LSH near-dup
-    removal (connected components, min-id survivor) -> bounded-chunk
-    inverted index -> BM25 ranked retrieval.
-
-    Returns (survivors, chunks, topk) — survivors is the cleaned
-    corpus (id, text), chunks the serialized index, topk the query
-    result. The caller decides what to materialize; a production run
-    persists `survivors` once (the cleaned-corpus artifact) and builds
-    the index from it, exactly like bench.py's mega_pipeline entry.
-
-    Scale shape: extraction + scrubbing are codegen projections riding
-    the scan; exact dedup is one fingerprint hash-agg; the LSH
-    candidate join carries only (id, band) keys; CC is the bounded
-    component loop; the index is the chunked hash-agg form
-    (operators/bm25.postings_chunks) whose per-group memory is bounded
-    regardless of stop-word heat. Nothing quadratic, no collect."""
-    from biothings_crawler_spark.operators.bm25 import (
-        bm25_topk,
-        inverted_postings,
-        postings_chunks,
-    )
-    from biothings_crawler_spark.operators.extract import html_to_text_col
-    from biothings_crawler_spark.operators.pii import pii_scrub_col
-
-    txt = pages.select(
-        F.col(id_col).alias("id"),
-        html_to_text_col(F.col(html_col)).alias("raw_text"),
-    )
-    # extraction + scrubbing materialize ONCE: downstream the cleaned
-    # text is read by the dedup agg, the semi-join, the LSH base, the
-    # CC node set and the survivor join — without the cut each consumer
-    # re-runs the whole regex chain over the raw HTML (measured 4
-    # full re-evaluations at sf0.1).  At 10^10 rows this is the
-    # extracted-text table a production run writes anyway.
-    scrubbed = txt.select(
-        "id", pii_scrub_col(F.col("raw_text")).alias("text")
-    ).localCheckpoint(eager=True)
-
-    exact_winners = exact_dedup(scrubbed, "id", "text").select("id")
-    d2 = scrubbed.join(exact_winners, "id", "left_semi")
-
-    pairs = minhash_lsh_pairs(
-        d2, "id", "text", n_perm=n_perm, bands=bands,
-        verify_threshold=jaccard, shingle_impl=shingle_impl,
-    )
-    comp = connected_components(pairs, d2.select("id"))
-    survivors = d2.join(
-        comp.filter(F.col("id") == F.col("component")).select("id"),
-        "id", "left_semi",
-    )
-
-    chunks = postings_chunks(
-        inverted_postings(survivors, "id", "text"), chunk_range=chunk_range
-    )
-    topk = bm25_topk(survivors, "id", "text", query_terms, k=k)
-    return survivors, chunks, topk

@@ -1,5 +1,5 @@
-"""Shared file-barrier protocol for the process-model scaling benches
-(scaling_bench_index.py, sort_contention_control.py): children signal
+"""File-barrier protocol for the process-model scaling control
+(sort_contention_control.py): children signal
 readiness after building their (untimed) input, the parent releases
 all timed regions together, and a crashed child is detected instead of
 hanging the poll loop forever."""

@@ -1,14 +1,12 @@
-"""Data-size linearity of the composed pipelines (bench.py
-mega_pipeline and release_pipeline): run the identical job at 1x and
-4x input replicas on the same sf dir and report pages/sec at both —
-the 100-TB question is "does doubling the corpus double the wall",
-and the compositions (hash-agg dedups + LSH band join + CC loop +
-index agg; license gate + trigram-df novelty + bucketed manifest)
-should be near linear because nothing in them is super-linear in rows
-at fixed key cardinality growth.
+"""Data-size linearity of the composed release pipeline (bench.py
+release_pipeline): run the identical job at 1x and 4x input replicas
+on the same sf dir and report pages/sec at both — the 100-TB question
+is "does doubling the corpus double the wall", and the composition
+(license gate + hash-agg dedup + trigram-df novelty + bucketed
+manifest) should be near linear because nothing in it is super-linear
+in rows at fixed key cardinality growth.
 
-Usage: PYTHONPATH=. python scripts/mega_linearity.py [sf_dir] [job]
-  job: mega (default) | release
+Usage: PYTHONPATH=. python scripts/mega_linearity.py [sf_dir]
 Appends a row to stdout as one JSON line; record it in BASELINE.md.
 """
 
@@ -24,7 +22,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-JOB = sys.argv[2] if len(sys.argv) > 2 else "mega"
 
 
 def main() -> None:
@@ -34,16 +31,14 @@ def main() -> None:
     spark = get_spark("mega-linearity", master="local[32]")
     spark.range(1000).count()  # warm
 
-    job = {"mega": bench.mega_pipeline_job,
-           "release": bench.release_pipeline_job}[JOB]
-    out = {"sf": SF_DIR, "job": JOB, "legs": {}}
+    out = {"sf": SF_DIR, "job": "release", "legs": {}}
     for label, replicas in (("1x", 2), ("4x", 8)):
         pages = bench.mega_input(spark, SF_DIR, replicas=replicas)
         n_pages = pages.count()  # untimed materialization
         best = None
         for _ in range(2):
             t0 = time.time()
-            counts = job(spark, pages)
+            counts = bench.release_pipeline_job(spark, pages)
             best = min(best or 1e9, time.time() - t0)
         pages.unpersist()
         out["legs"][label] = {

@@ -3,7 +3,7 @@ JVM sort job (no sessionize logic, no parquet, no Python) and a pure
 hash-aggregation job, each run solo and as 4 concurrent 1-core JVMs
 with barrier-aligned timed regions. If the sort degrades under
 4-way concurrency while the hash agg doesn't — matching the
-sessionize-vs-bm25 split in scaling_bench_index.py — the shortfall is
+sessionize-vs-bm25 split BASELINE.md records — the shortfall is
 the host memory subsystem under concurrent sort pressure, independent
 of any engine code.
 

@@ -1,8 +1,6 @@
 """CDX index generation (sources/cdx) and the SURT range layout
 (layout.write_surt_layout / read_domain)."""
 
-import pyspark.sql.functions as F
-
 from biothings_crawler_spark.sources.cdx import (
     RECORD_TRAILER_BYTES,
     cdx_index,

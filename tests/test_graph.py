@@ -349,3 +349,23 @@ def test_spam_mass_bounded_and_deficit_consistent(spark):
         assert 0 <= r["spam_ppm"] <= 1_000_000
         if r["tr_adj"] >= r["pr"]:
             assert r["spam_ppm"] == 0
+
+
+def test_trustrank_unreached_nodes_zero(spark):
+    """A two-island graph: seeds live on island A; island B (a 'link
+    farm' citing only itself) must end at exactly rank 0, while plain
+    pagerank gives it mass."""
+    from biothings_crawler_spark.operators.pagerank import pagerank, trustrank
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (10, 11), (11, 10)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    tr = {r["node"]: r["rank"] for r in
+          trustrank(edges, seeds, iters=4).collect()}
+    pr = {r["node"]: r["rank"] for r in pagerank(edges, iters=4).collect()}
+    assert tr[10] == 0 and tr[11] == 0
+    assert pr[10] > 0 and pr[11] > 0
+    assert tr[1] > 0 and tr[2] > 0 and tr[3] > 0  # trust propagates the cycle
+
+

@@ -1,5 +1,5 @@
-"""Training-data pipeline operators: dedup family, BM25 search, text
-analysis, analysis queries."""
+"""Training-data pipeline operators: dedup family, text analysis,
+analysis queries."""
 
 import json
 
@@ -409,40 +409,6 @@ def test_latest_snapshot_picks_newest_no_window(spark):
     assert "Window [" not in plan and "partial_max" in plan
 
 
-def test_web_pipeline_composition_and_plan(spark, documents):
-    """The composed crawl-output-to-search pipeline: exact dedup must
-    collapse byte-identical replicas to one survivor each, BM25 must
-    return ranked results over the survivors, and the extraction/scrub
-    stages must stay JVM-side (the only Python in any plan is the
-    Arrow-batched shingle UDF inside MinHash)."""
-    from biothings_crawler_spark.plans.pipeline import web_pipeline
-
-    base = documents.limit(120).select("doc_id", "text")
-    pages = (
-        base.crossJoin(spark.range(3).select(F.col("id").alias("rep")))
-        .select(
-            (F.col("doc_id") * 3 + F.col("rep")).alias("id"),
-            F.encode(
-                F.concat(F.lit("<html><body><p>"), F.col("text"),
-                         F.lit("</p></body></html>")), "utf-8").alias("html"),
-        )
-        .coalesce(4)
-    )
-    survivors, chunks, topk = web_pipeline(
-        pages, "id", "html", ["data", "research"], bands=4)
-    n_surv = survivors.count()
-    # replicas are byte-identical bodies: exact dedup alone caps
-    # survivors at the unique-doc count; near-dup may remove more
-    assert 0 < n_surv <= 120
-    rows = topk.collect()
-    assert 0 < len(rows) <= 20
-    assert all(r["score"] > 0 for r in rows)
-    # survivors' plan: extraction + scrub are expressions, no
-    # row-at-a-time Python anywhere in the composition
-    plan = survivors._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-
-
 def test_clean_corpus_each_stage_bites(spark):
     """One planted casualty per pipeline stage: non-English dropped,
     low-quality dropped, exact dup dropped, near-dup dropped (min id
@@ -789,28 +755,6 @@ def test_domain_blocklist_drops_low_quality_sources(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-def test_bm25_ranking_and_index(spark):
-    from biothings_crawler_spark.operators.bm25 import bm25_topk, inverted_index
-
-    df = spark.createDataFrame(
-        [
-            (1, "data data data filler filler"),
-            (2, "data filler filler filler filler"),
-            (3, "rare filler filler filler filler"),
-        ],
-        "id long, text string",
-    )
-    # idf(rare) > idf(data) (df 1 vs 2); tf boosts doc 1 over doc 2
-    ranked = [r["id"] for r in bm25_topk(df, "id", "text", ["data", "rare"], k=3).collect()]
-    assert ranked == [3, 1, 2]
-
-    idx = {r["term"]: (r["df"], r["postings"])
-           for r in inverted_index(df, "id", "text").collect()}
-    assert idx["data"] == (2, "1:3 2:1")
-    assert idx["filler"][0] == 3
-    assert idx["rare"] == (1, "3:1")
-
-
 def test_sessionize_gap_boundaries(spark):
     from biothings_crawler_spark.operators.sessionize import sessionize
     import datetime as dt
@@ -971,75 +915,6 @@ def test_hll_small_range_linear_counting(spark):
     # tiny cardinality: LC is exact when every value lands its own bucket
     few = spark.createDataFrame([("a",), ("b",), ("a",)], "v string")
     assert hll_distinct(few, "v").collect()[0]["estimate"] == 2
-
-
-def test_postings_chunks_bounded_and_reassembly(spark):
-    """The scale-path chunked index: per-(term, chunk) groups bounded
-    by the id range, chunk keys row-local (no window), and the
-    canonical string reassembles from chunks in id order."""
-    from biothings_crawler_spark.operators.bm25 import (
-        inverted_index,
-        inverted_postings,
-        postings_chunks,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "common " + ("rare" if i == 5 else "filler")) for i in range(10)],
-        "id long, text string",
-    )
-    chunks = postings_chunks(
-        inverted_postings(df, "id", "text"), chunk_range=4
-    ).collect()
-    by_term = {}
-    for r in chunks:
-        by_term.setdefault(r["term"], {})[r["chunk_no"]] = (r["df_chunk"], r["postings"])
-    # 'common' hits all 10 docs -> chunks 0..2 with 4/4/2 postings
-    assert {c: d for c, (d, _) in by_term["common"].items()} == {0: 4, 1: 4, 2: 2}
-    assert by_term["common"][0][1] == "0:1 1:1 2:1 3:1"
-    assert by_term["common"][2][1] == "8:1 9:1"
-    assert by_term["rare"] == {1: (1, "5:1")}
-    # canonical projection == chunk strings concatenated in chunk order
-    idx = {r["term"]: (r["df"], r["postings"])
-           for r in inverted_index(df, "id", "text", chunk_range=4).collect()}
-    assert idx["common"] == (10, "0:1 1:1 2:1 3:1 4:1 5:1 6:1 7:1 8:1 9:1")
-    assert idx["rare"] == (1, "5:1")
-    # no per-term window anywhere in the chunk plan
-    plan = postings_chunks(
-        inverted_postings(df, "id", "text"), chunk_range=4
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-
-
-def test_postings_varint_hand_computed(spark):
-    """LEB128 accounting against a hand-worked example: term 'common'
-    in chunk 0 (range 4) has ids 0..3 -> gaps [0,1,1,1] (1 byte each)
-    + tfs [1,1,1,1] (1 byte each) = 8 packed vs 48 raw; a doc id gap
-    needing two varint bytes (>=128) is exercised via chunk_range 1024
-    with ids {0, 500}."""
-    from biothings_crawler_spark.operators.bm25 import (
-        inverted_postings,
-        postings_compression_report,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "common") for i in range(4)], "id long, text string"
-    )
-    r = {(x["term"], x["chunk_no"]): x for x in postings_compression_report(
-        inverted_postings(df, "id", "text"), chunk_range=4).collect()}
-    row = r[("common", 0)]
-    assert (row["df_chunk"], row["raw_bytes"], row["packed_bytes"]) == (4, 48, 8)
-    assert row["savings_ppm"] == (48 - 8) * 1_000_000 // 48
-    df2 = spark.createDataFrame(
-        [(0, "twobyte"), (500, "twobyte")], "id long, text string"
-    )
-    r2 = postings_compression_report(
-        inverted_postings(df2, "id", "text"), chunk_range=1024).collect()[0]
-    # gaps [0, 500]: 1 + 2 varint bytes; tfs: 2 bytes -> 5 packed vs 24 raw
-    assert (r2["raw_bytes"], r2["packed_bytes"]) == (24, 5)
-    plan = postings_compression_report(
-        inverted_postings(df, "id", "text"), chunk_range=4
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "BatchEvalPython" not in plan
 
 
 def test_lang_id_model_hook_matches_expression(spark):
@@ -1485,35 +1360,6 @@ def test_corpus_layout_partition_pruning(spark, tmp_path):
     assert sorted(langs) == ["lang=de", "lang=en", "lang=fr"]
 
 
-def test_compact_index_touches_only_affected_chunks(spark):
-    """Incremental deletion: the compacted index equals the
-    from-scratch rebuild, AND chunks with no deleted posting are the
-    untouched originals (verified by value).  Deleting every doc of a
-    chunk removes the chunk row entirely."""
-    from biothings_crawler_spark.operators.bm25 import (
-        compact_index,
-        inverted_postings,
-        postings_chunks,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha w{i % 3}") for i in range(12)], "id long, text string"
-    )
-    postings = inverted_postings(docs, "id", "text")
-    chunks = postings_chunks(postings, chunk_range=4)
-    dels = spark.createDataFrame([(1,), (4,), (5,), (6,), (7,)], "id long")
-    got = sorted(map(tuple, compact_index(
-        postings, chunks, dels, chunk_range=4).collect()))
-    surviving = docs.join(dels, "id", "left_anti")
-    want = sorted(map(tuple, postings_chunks(
-        inverted_postings(surviving, "id", "text"), chunk_range=4).collect()))
-    assert got == want
-    # chunk 1 of 'alpha' (ids 4-7) was fully deleted -> gone
-    assert not [r for r in got if r[0] == "alpha" and r[1] == 1]
-    # chunk 2 of 'alpha' (ids 8-11, no deletions) survives verbatim
-    assert ("alpha", 2, 4, "8:1 9:1 10:1 11:1") in got
-
-
 def test_trim_repeated_lines_keeps_first_in_order(spark):
     from biothings_crawler_spark.operators.text import trim_repeated_lines
 
@@ -1782,43 +1628,6 @@ def test_hilbert_twin_bijective_and_unit_step():
         # the Hilbert guarantee Morton lacks: consecutive keys are
         # Manhattan neighbours, so a key range is one connected blob
         assert abs(x0 - x1) + abs(y0 - y1) == 1
-
-
-def test_bm25_terms_df_matches_literal_variant(spark):
-    from biothings_crawler_spark.operators.bm25 import (
-        bm25_scores, bm25_scores_terms_df)
-
-    df = spark.createDataFrame(
-        [(1, "data table spark data"), (2, "data lake house"),
-         (3, "spark table"), (4, "warehouse of bricks")],
-        "doc_id long, text string")
-    lit = {(r["id"], r["score"])
-           for r in bm25_scores(df, "doc_id", "text",
-                                ["data", "spark"]).collect()}
-    tdf = spark.createDataFrame([("data",), ("spark",)], "term string")
-    viadf = {(r["id"], r["score"])
-             for r in bm25_scores_terms_df(df, "doc_id", "text",
-                                           tdf).collect()}
-    assert lit == viadf and lit
-
-
-def test_prf_expands_with_planted_cooccurring_term(spark):
-    from biothings_crawler_spark.operators.prf import (
-        prf_expand_terms, prf_search)
-
-    # "zeta" rides along with the query term in the feedback docs and
-    # is rare elsewhere; "the" is everywhere (high df -> low score)
-    rows = [(i, "alpha zeta zeta the") for i in range(4)]
-    rows += [(10 + i, "the filler words here") for i in range(4)]
-    rows += [(20, "zeta zeta zeta the")]          # no alpha: pass-2-only hit
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    exp = prf_expand_terms(df, "doc_id", "text", ["alpha"],
-                           fb_docs=4, n_exp=1).collect()
-    assert [r["term"] for r in exp] == ["zeta"]
-    hits = {r["id"] for r in prf_search(df, "doc_id", "text", ["alpha"],
-                                        fb_docs=4, n_exp=1, k=20).collect()}
-    assert 20 in hits                  # reachable only via expansion
-    assert all(i in hits for i in range(4))
 
 
 def test_k_truss_strips_tails_keeps_clique(spark):

@@ -1,14 +1,7 @@
-"""Serving plane: positional phrase matching, snippet extraction,
-host-diversified top-k, and Elias-Fano accounting."""
+"""Serving plane: positional phrase matching, snippet extraction, rank
+fusion, spelling and autocomplete."""
 
-from pyspark.sql import functions as F
-
-from biothings_crawler_spark.operators.bm25 import (
-    inverted_postings,
-    postings_ef_report,
-)
 from biothings_crawler_spark.operators.serving import (
-    diverse_topk,
     phrase_topk,
     positional_postings,
     snippet_windows,
@@ -71,40 +64,6 @@ def test_snippet_plan_has_no_exchange(spark):
     out = snippet_windows(docs, "id", "text", ["q"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "EvalPython" not in plan
-
-
-def test_diverse_topk_caps_per_host(spark):
-    # host A holds the 3 best docs; cap 2 lets the host-B doc in
-    docs = spark.createDataFrame(
-        [
-            (1, "q q q q", "a"),
-            (2, "q q q z", "a"),
-            (3, "q q z z", "a"),
-            (4, "q z z z", "b"),
-        ],
-        "id long, text string, host string",
-    )
-    got = diverse_topk(docs, "id", "text", "host", ["q"], k=3, per_host=2)
-    rows = got.collect()
-    assert [r["id"] for r in rows] == [1, 2, 4]
-    assert all(r["host_rank"] <= 2 for r in rows)
-
-
-def test_ef_bits_match_formula_and_beat_raw_when_dense(spark):
-    # 64 ids in a 64-universe chunk: l=0, ef = n + 64 = 128 bits vs
-    # raw 2048; a singleton posting: l=5, ef = 5 + 1 + 2 = 8 bits
-    dense = [(i, "t") for i in range(64)]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in dense] + [(100, "rare")],
-        "doc_id long, text string",
-    )
-    rep = {(r["term"], r["chunk_no"]): r for r in postings_ef_report(
-        inverted_postings(docs, "doc_id", "text"), chunk_range=64).collect()}
-    d = rep[("t", 0)]
-    assert (d["df_chunk"], d["low_bits"], d["ef_bits"]) == (64, 0, 128)
-    assert d["savings_ppm"] == (2048 - 128) * 1000000 // 2048
-    r = rep[("rare", 1)]
-    assert (r["df_chunk"], r["low_bits"], r["ef_bits"]) == (1, 6, 8)
 
 
 def test_rrf_fusion_hand_computed(spark):

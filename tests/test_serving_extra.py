@@ -36,31 +36,6 @@ def test_calibration_bin_edges(spark):
     assert got[0] == 1 and got[9] == 1
 
 
-def test_hard_negatives_exclude_positives_and_rank(spark):
-    """Mined negatives are exactly the top-scored non-positives, in
-    rank order."""
-    from pyspark.sql import functions as F
-
-    from biothings_crawler_spark.operators.bm25 import bm25_scores
-
-    rows = [
-        (1, "data data data table spark"),   # strong hit, positive
-        (2, "data table spark extra pad"),   # strong hit, negative
-        (3, "data only here"),               # weak hit, negative
-        (4, "nothing relevant at all"),      # no hit
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pos = df.filter(F.col("doc_id") == 1).select(
-        F.col("doc_id").alias("id"))
-    scored = bm25_scores(df, "doc_id", "text",
-                         ["data", "table", "spark"])
-    negs = (scored.join(F.broadcast(pos), "id", "left_anti")
-            .orderBy(F.desc("score"), "id").limit(10).collect())
-    ids = [r.id for r in negs]
-    assert 1 not in ids
-    assert ids[0] == 2 and 3 in ids
-
-
 def test_query_parse_clauses(spark):
     from biothings_crawler_spark.operators.serving import parse_queries
 
@@ -90,45 +65,6 @@ def test_query_parse_fielded_phrase_and_empty(spark):
                                               "clause_idx").collect()]
     # the empty phrase clause drops; the blank query yields nothing
     assert got == [(1, "title", "big data", 1)]
-
-
-def test_shard_skip_no_false_negatives_and_real_skips(spark):
-    from biothings_crawler_spark.operators.bm25 import shard_skip_report
-
-    rows = [
-        (1, 0, "alpha beta gamma"),
-        (2, 0, "alpha delta"),
-        (3, 1, "alpha beta"),       # shard 1 lacks gamma
-        (4, 2, "epsilon zeta"),     # shard 2 lacks all three
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, shard long, text string")
-    got = {r.shard: (r.candidate, r.truth)
-           for r in shard_skip_report(df, "doc_id", "text", "shard",
-                                      ["alpha", "beta", "gamma"]).collect()}
-    assert got[0] == (1, 1)
-    # structural guarantee: truth=1 -> candidate=1; and real skips
-    for c, t in got.values():
-        assert not (t == 1 and c == 0)
-    assert got[2] == (0, 0)
-
-
-def test_shard_skip_false_positives_visible_with_tiny_bloom(spark):
-    """m_bits=2 forces bit collisions: shards lacking a term can still
-    be candidates — visible as candidate=1/truth=0, never the
-    reverse."""
-    from biothings_crawler_spark.operators.bm25 import shard_skip_report
-
-    rows = [(i, i % 3, f"w{i} common") for i in range(9)]
-    df = spark.createDataFrame(rows, "doc_id long, shard long, text string")
-    got = {r.shard: (r.candidate, r.truth)
-           for r in shard_skip_report(df, "doc_id", "text", "shard",
-                                      ["common", "w1"],
-                                      m_bits=2, k_hashes=1).collect()}
-    for c, t in got.values():
-        assert not (t == 1 and c == 0)
-    # w1 lives only in shard 1; with a 2-bit bloom the other shards
-    # almost surely collide into candidacy
-    assert got[1] == (1, 1)
 
 
 def test_word_segment_tiebreak_and_unsegmentable(spark):

@@ -129,68 +129,6 @@ def test_anchor_and_trap_plans_are_jvm_only(spark):
     assert "Window" not in aplan
 
 
-# --- incremental index merge + retrieval metrics (operators/bm25) -----------
-
-
-def test_merge_postings_replaces_and_removes(spark):
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, "b c"), (3, "x")], "id long, text string"
-    )
-    from biothings_crawler_spark.operators.bm25 import (
-        inverted_postings,
-        merge_postings,
-    )
-
-    base = inverted_postings(docs, "id", "text")
-    delta = spark.createDataFrame([(2, "c c d")], "id long, text string")
-    removed = spark.createDataFrame([(3,), (2,)], "id long")  # 2 also refetched
-    out = {
-        (r.term, r.id): r.tf
-        for r in merge_postings(base, delta, removed).collect()
-    }
-    # d1 untouched, d2 replaced (refetch wins over removal), d3 gone
-    assert out == {("a", 1): 2, ("b", 1): 1, ("c", 2): 2, ("d", 2): 1}
-
-
-def test_merge_postings_plan_broadcasts_stale_ids(spark):
-    docs = spark.createDataFrame([(1, "a")], "id long, text string")
-    from biothings_crawler_spark.operators.bm25 import (
-        inverted_postings,
-        merge_postings,
-    )
-
-    plan = (
-        merge_postings(
-            inverted_postings(docs, "id", "text"),
-            docs, docs.select("id"),
-        )
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_retrieval_metrics_hand_case(spark):
-    from biothings_crawler_spark.operators.bm25 import retrieval_metrics
-
-    ranked = spark.createDataFrame(
-        [(1, 10, 1), (1, 20, 2), (1, 30, 3),   # q1: relevant 30 at rank 3
-         (2, 40, 1), (2, 50, 2),               # q2: no relevant retrieved
-         (3, 60, 1), (3, 61, 11)],             # q3: second relevant PAST k
-        "query_id long, id long, rank long",
-    )
-    qrels = spark.createDataFrame(
-        [(1, 30), (1, 99), (2, 77), (3, 60), (3, 61)],
-        "query_id long, id long",
-    )
-    out = {r.query_id: r for r in retrieval_metrics(ranked, qrels, k=10).collect()}
-    assert out[1].first_rank == 3 and out[1].rr_ppm == 333333
-    assert out[1].recall_at_k_ppm == 500000  # 1 of 2 judged found
-    assert out[2].n_hits_at_k == 0 and out[2].rr_ppm == 0
-    assert out[2].first_rank is None
-    assert out[3].n_hits_at_k == 1  # rank-11 hit excluded by k=10
-    assert out[3].rr_ppm == 1000000
-
-
 def test_heavy_bigrams_counts_and_order(spark):
     from biothings_crawler_spark.operators.text import heavy_bigrams
 
