@@ -52,15 +52,12 @@ EXTRACT_REPLICAS = int(os.environ.get("SPARK_GRAFT_EXTRACT_REPLICAS", "16"))
 # operator-suite queries worth timing at sf0.1 (brute-force pair ops
 # excluded: they are oracle-scale verifiers, not the 10^10 path)
 SUITE = [
-    # source formats, compliance, retrieval, release integrity
-    "q_license_detect",
+    # source formats, compliance, release integrity
     "q_epoch_alloc",
-    "q_proximity_topk",
     "q_sitemap_render",
     "q_ngram_novelty",
     "q_release_manifest",
     "q_robots_render",
-    "q_calibration",
     "q_manifest_diff",
     "q_host_boilerplate",
     "q_homograph_hosts",
@@ -68,20 +65,15 @@ SUITE = [
     "q_html_tables",
     "q_pagination_chains",
     "q_js_required",
-    "q_query_parse",
-    "q_word_segment",
     "q_feed_render",
     "q_refs_strip",
     "q_depth_yield",
     "q_rendezvous_assign",
     "q_meta_refresh",
-    "q_cloaking_hosts",
     "q_idn_decode",
-    "q_pairwise_auc",
     "q_label_agreement",
     "q_rdfa_extract",
     "q_sitemap_scope",
-    "q_survival_ledger",
     "q_event_transitions",
     "q_lexicon_filter",
     "q_schema_drift",
@@ -136,8 +128,6 @@ SUITE = [
     "q_quality_stats",
     "q_event_windows",
     "q_line_dedup",
-    "q_pii_scrub",
-    "q_decontamination",
     "q_html_to_text",
     "q_passage_dedup",
     "q_recrawl_schedule",
@@ -155,7 +145,6 @@ SUITE = [
     "q_anchor_text",
     "q_warc_ingest",
     "q_link_farm",
-    "q_corpus_datasheet",
     "q_c4_filter",
     "q_hits",
     "q_domain_scorecard",
@@ -208,8 +197,6 @@ SUITE = [
     "q_nfc_normalize",
     "q_chunked_decode",
     "q_gzip_decode",
-    "q_cdc_chunks",
-    "q_delta_storage",
     "q_zorder_key",
     "q_typosquat_pairs",
     "q_payload_pipeline",
@@ -265,25 +252,19 @@ MEGA_REPLICAS = int(os.environ.get("SPARK_GRAFT_MEGA_REPLICAS", "4"))
 
 
 def mega_input(spark: SparkSession, sf_dir: str, replicas: int = MEGA_REPLICAS):
-    """Crawled-page corpus for the composed pipelines: documents x
-    replicas wrapped in full HTML (script/style/comment noise, an
-    email for id%3==0), distinct ids per replica — so exact dedup has
-    real work (the replicas are byte-identical bodies). Materialized
-    OUTSIDE the timed window."""
+    """Crawled-page corpus for the archive pipeline: documents x
+    replicas wrapped in full HTML (script/style/comment noise),
+    distinct ids per replica. Materialized OUTSIDE the timed window."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_rows = docs.count() * replicas
     n_parts = max(4, min(spark.sparkContext.defaultParallelism, n_rows // 4000))
     i = F.col("doc_id") * replicas + F.col("rep")
     s = i.cast("string")
-    email = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(F.lit(" contact user"), s, F.lit("@example.org")),
-    ).otherwise(F.lit(""))
     html = F.concat(
         F.lit("<html><head><title>Page</title><style>p{margin:0}</style>"
               '<script>var v="'), s, F.lit('";</script></head>'),
         F.lit("<body><!-- rep --><h1>Doc</h1><p>"), F.col("text"),
-        email, F.lit("</p></body></html>"),
+        F.lit("</p></body></html>"),
     )
     return (
         docs.crossJoin(spark.range(replicas).select(F.col("id").alias("rep")))
@@ -327,43 +308,6 @@ def archive_pipeline_job(spark: SparkSession, pages) -> dict:
     members.unpersist()
     files.unpersist()
     return {"files": n_files, "pages": n_pages, "cdx_rows": n_idx}
-
-
-def release_pipeline_job(spark: SparkSession, pages) -> dict:
-    """The composed crawl-output-to-PUBLISHED-RELEASE pipeline over
-    the session-4 operators: html->text -> license admission gate
-    (permissive or unknown-with-no-copyleft policy: here keep
-    permissive + unknown) -> exact dedup -> corpus trigram novelty
-    (drop fully-boilerplate docs, novelty 0 with >= 8 grams) ->
-    Merkle release manifest.  Same one-materialization discipline as
-    the other composed jobs; the manifest is the artifact a consumer
-    verifies bucket-by-bucket."""
-    from biothings_crawler_spark.operators.dedup import exact_dedup
-    from biothings_crawler_spark.operators.extract import html_to_text_col
-    from biothings_crawler_spark.operators.license import detect_licenses
-    from biothings_crawler_spark.operators.manifest import release_manifest
-    from biothings_crawler_spark.operators.text import ngram_novelty
-
-    txt = pages.select(
-        "id", html_to_text_col(F.col("html")).alias("text"))
-    lic = detect_licenses(txt)
-    admitted = lic.filter(
-        (F.col("permissive") == 1) | (F.col("license") == "unknown"))
-    d2 = admitted.join(
-        exact_dedup(admitted, "id", "text").select("id"),
-        "id", "left_semi").persist()
-    n_admitted = d2.count()
-    nov = ngram_novelty(d2, "id", "text")
-    keep = d2.join(
-        nov.filter((F.col("novelty_ppm") > 0) | (F.col("n_grams") < 8))
-        .select(F.col("id")), "id", "left_semi")
-    manifest = release_manifest(keep, "id", "text", n_buckets=64)
-    rows = manifest.collect()
-    d2.unpersist()
-    root = [r for r in rows if r.bucket == -1]
-    return {"admitted": n_admitted,
-            "released": int(root[0].n_docs) if root else 0,
-            "buckets": len(rows) - 1}
 
 
 def extract_input(spark: SparkSession, sf_dir: str):
@@ -435,7 +379,7 @@ def main() -> None:
         best = min(best or 1e9, time.time() - t0)
     timings["extract_jsonld"] = round(best, 3)
 
-    # crawled pages shared by the archive and release pipelines
+    # crawled pages for the archive pipeline
     mega_pages = mega_input(spark, SF_DIR)
     n_mega_pages = mega_pages.count()  # materialize, untimed
 
@@ -450,15 +394,6 @@ def main() -> None:
     counts["archive_pipeline_cdx_rows"] = ap_counts["cdx_rows"]
     assert ap_counts["pages"] == n_mega_pages, "archive roundtrip lost pages"
 
-    # the license->dedup->novelty->manifest release tail (best-of-2)
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        rp_counts = release_pipeline_job(spark, mega_pages)
-        best = min(best or 1e9, time.time() - t0)
-    timings["release_pipeline"] = round(best, 3)
-    counts["release_pipeline_released"] = rp_counts["released"]
-    counts["release_pipeline_buckets"] = rp_counts["buckets"]
     mega_pages.unpersist()
 
     for name in SUITE:

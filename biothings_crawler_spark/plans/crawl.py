@@ -62,36 +62,21 @@ from biothings_crawler_spark.urlnorm import canonicalize_col, domain_key_col, ho
 __all__ = ["CrawlConfig", "run_crawl", "run_refetch"]
 
 
-def _policy_case(policies: list[dict], key: str, default):
-    """Literal when-chain over the (tiny) policy list — Catalyst-foldable,
+def _per_source(policies: list[dict], key: str, default, value=F.lit):
+    """``value(policy[key])`` for the row's source, else ``default``: a
+    literal when-chain over the (tiny) policy list — Catalyst-foldable,
     no join, no UDF for policy routing."""
     expr = None
     for p in policies:
-        v = p.get(key)
         cond = F.col("source") == F.lit(p["source"])
-        val = F.lit(v) if not callable(v) else v(p)
+        val = value(p.get(key))
         expr = F.when(cond, val) if expr is None else expr.when(cond, val)
     return expr.otherwise(F.lit(default)) if expr is not None else F.lit(default)
 
 
-def _extract_ok(policies: list[dict]):
-    expr = None
-    for p in policies:
-        cond = F.col("source") == F.lit(p["source"])
-        ex = p.get("extract_regex")
-        val = F.lit(True) if ex is None else F.col("url").rlike(ex)
-        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    return expr.otherwise(F.lit(True))
-
-
-def _allow_link_ok(policies: list[dict]):
-    expr = None
-    for p in policies:
-        cond = F.col("source") == F.lit(p["source"])
-        al = p.get("allow_link")
-        val = F.lit(True) if al is None else F.col("link").rlike(al)
-        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
-    return expr.otherwise(F.lit(True))
+def _matches(col: str):
+    """Per-policy regex gate on ``col``; a policy without one admits all."""
+    return lambda rx: F.lit(True) if rx is None else F.col(col).rlike(rx)
 
 
 def run_refetch(
@@ -165,11 +150,11 @@ def run_crawl(
         "html",
     ).filter(F.col("url_canon").isNotNull())
 
-    follow_ok = _policy_case(policies, "follow", False)
-    same_dom = _policy_case(policies, "same_domain", True)
-    max_depth = _policy_case(policies, "max_depth", None).cast("int")
-    extract_ok = _extract_ok(policies)
-    allow_ok = _allow_link_ok(policies)
+    follow_ok = _per_source(policies, "follow", False)
+    same_dom = _per_source(policies, "same_domain", True)
+    max_depth = _per_source(policies, "max_depth", None).cast("int")
+    extract_ok = _per_source(policies, "extract_regex", True, _matches("url"))
+    allow_ok = _per_source(policies, "allow_link", True, _matches("link"))
 
     last = cat.latest_round()
     if last is None:

@@ -1641,7 +1641,8 @@ SELECT id, unnest(fps) AS fp FROM w
 
 def _chunked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-line docs synthesized from documents (5-word lines + an
-    injected COMMON FOOTER) — shared by q_line_dedup and q_clean_corpus."""
+    injected COMMON FOOTER) — shared by the line-dedup, passage-dedup and
+    repetition pairs."""
     d = _t(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_chunks = F.ceil(F.size(words) / 5).cast("int")
@@ -1665,27 +1666,6 @@ _SQL_CHUNKED_DOCS = """
 """
 
 
-def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED training-corpus cleaning pipeline (plans/pipeline):
-    lang filter -> quality filter -> exact dedup -> MinHash near-dup
-    components -> boilerplate line dedup -> token count, end-to-end in
-    one lazy plan, verified against one DuckDB statement (brute-force
-    pair generation + recursive-CTE components on the oracle side)."""
-    from biothings_crawler_spark.plans.pipeline import clean_corpus
-
-    # 500-doc oracle fixture: cap shuffle width so the component loop's
-    # per-iteration jobs aren't dominated by empty-task scheduling
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = clean_corpus(_chunked_docs(spark, sf_dir).coalesce(8), "id", "t")
-        # the component loop materializes eagerly (localCheckpoint), so
-        # the capped width is baked in before the conf is restored
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 _SQL_Q40 = f"""(CASE WHEN len(text) BETWEEN 50 AND 20000 THEN 10 ELSE 0 END
           + CASE WHEN len({_SQL_WORDS}) > 0
                   AND CAST(len(text) AS DOUBLE) / len({_SQL_WORDS}) >= 3.0
@@ -1696,71 +1676,6 @@ _SQL_Q40 = f"""(CASE WHEN len(text) BETWEEN 50 AND 20000 THEN 10 ELSE 0 END
                                            x -> len(x) > 0)) AS DOUBLE) / len(text) <= 0.2
                  THEN 10 ELSE 0 END
           + len(list_intersect(list_distinct({_SQL_WORDS}), {_SQL_EN})))"""
-
-SQL_CLEAN_CORPUS = f"""
-WITH RECURSIVE docs AS ({_SQL_CHUNKED_DOCS}),
-lq AS (
-  SELECT id, text FROM (
-    SELECT id, text,
-           len(list_intersect(list_distinct({_SQL_WORDS}), {_SQL_EN})) AS en,
-           len(list_intersect(list_distinct({_SQL_WORDS}), {_SQL_DE})) AS de,
-           len(list_intersect(list_distinct({_SQL_WORDS}), {_SQL_ES})) AS es,
-           {_SQL_Q40} AS q40
-    FROM docs)
-  WHERE en >= de AND en >= es AND en > 0 AND q40 >= 20),
-ex AS (SELECT MIN(id) AS id FROM lq
-       GROUP BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))),
-d2 AS (SELECT lq.id, lq.text FROM lq JOIN ex USING (id)),
-wds AS (
-  SELECT id,
-         list_filter(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g')), '\\s+'),
-                     x -> len(x) > 0) AS words
-  FROM d2),
-shg AS (
-  SELECT id,
-         list_distinct(CASE WHEN len(words) >= 3
-           THEN [array_to_string(words[j:j+2], ' ') for j in range(1, len(words) - 1)]
-           ELSE [array_to_string(words, ' ')] END) AS sh
-  FROM wds),
-pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.id AS id_a, b.id AS id_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))) AS j
-    FROM shg a, shg b
-    -- J>=0.5 requires |sh| sizes within 2x (min>=t*max): prunes the
-    -- quadratic list_intersect work without changing the result set
-    WHERE a.id < b.id
-      AND len(a.sh) <= 2 * len(b.sh) AND len(b.sh) <= 2 * len(a.sh))
-  WHERE j >= 0.5),
-und AS (SELECT id_a AS a, id_b AS b FROM pairs
-        UNION SELECT id_b, id_a FROM pairs),
-reach(a, b) AS (
-  SELECT id, id FROM d2
-  UNION
-  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-comp AS (SELECT a AS id, MIN(b) AS component FROM reach GROUP BY a),
-surv AS (SELECT d2.id, d2.text FROM d2 JOIN comp ON d2.id = comp.id
-         WHERE comp.component = d2.id),
-lines AS (
-  SELECT id, ls[i] AS line, i AS pos
-  FROM (SELECT id, string_split(text, chr(10)) AS ls FROM surv),
-       UNNEST(range(1, len(ls) + 1)) AS r(i)),
-freq AS (SELECT line FROM lines GROUP BY line HAVING COUNT(DISTINCT id) > 10),
-keptl AS (SELECT l.id, l.line, l.pos FROM lines l ANTI JOIN freq USING (line)),
-rebuilt AS (
-  SELECT id, array_to_string(list(line ORDER BY pos), chr(10)) AS clean_text,
-         COUNT(*) AS n_kept
-  FROM keptl GROUP BY id),
-tot AS (SELECT id, len(string_split(text, chr(10))) AS n_lines FROM surv)
-SELECT t.id, coalesce(r.clean_text, '') AS clean_text,
-       CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
-       CAST(t.n_lines - coalesce(r.n_kept, 0) AS BIGINT) AS n_removed,
-       CAST(len(list_filter(regexp_extract_all(coalesce(r.clean_text, ''),
-                 '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s])', 1),
-                 x -> len(x) > 0)) AS BIGINT) AS n_tokens
-FROM tot t LEFT JOIN rebuilt r USING (id)
-"""
 
 
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2036,158 +1951,8 @@ def q_mainentity_unwrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# web-text pipeline: PII scrub / repetition filters / decontamination
+# web-text pipeline: passage dedup / repetition filters
 # ---------------------------------------------------------------------------
-
-
-def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with deterministically injected PII (email for
-    id%3==0, phone for id%4==0, IPv4 for id%5==0 — combinations occur
-    at the lcm residues, and id%3,4,5 != 0 rows stay PII-free)."""
-    d = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    email = F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.org"))
-    phone = F.concat(
-        F.lit(" call 555-"),
-        F.lpad((did % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((did % 10000).cast("string"), 4, "0"),
-    )
-    ip = F.concat(
-        F.lit(" from 10."), (did % 256).cast("string"),
-        F.lit("."), ((did * 7) % 256).cast("string"),
-        F.lit("."), ((did * 13) % 256).cast("string"),
-    )
-    # SSN shape for id%8==0 (varying last group, no checksum); Luhn-
-    # VALID card for id%6==0, card-SHAPED-but-invalid for id%7==0;
-    # mod-97-VALID IBAN for id%9==0, IBAN-SHAPED-but-invalid (bad check
-    # digits) for id%11==0: counts see only the valid ones, redaction
-    # masks both.
-    ssn = F.concat(F.lit(" ssn 078-05-"),
-                   F.lpad((did % 10000).cast("string"), 4, "0"))
-    # ONE flat concat of conditional suffixes, NOT a nested
-    # when(...).otherwise(t) chain: nesting references the running
-    # text expression twice per level, duplicating the subtree 2^9
-    # times — that single fixture expression overflowed Janino's 64 KB
-    # method limit and silently dropped the whole fused projection
-    # (fixture + scrub cascade) to interpreted mode.  The flat form is
-    # linear, matches the SQL twin's `|| CASE ... ELSE '' END` shape,
-    # and keeps the scrub pass inside WholeStageCodegen.
-    def _sfx(cond, piece):
-        return F.when(cond, piece).otherwise(F.lit(""))
-
-    t = F.concat(
-        F.col("text"),
-        _sfx(did % 3 == 0, email),
-        _sfx(did % 4 == 0, phone),
-        _sfx(did % 5 == 0, ip),
-        _sfx(did % 6 == 0, F.lit(" card 4111-1111-1111-1111")),
-        _sfx(did % 7 == 0, F.lit(" ref 4111 1111 1111 1112")),
-        _sfx(did % 8 == 0, ssn),
-        _sfx(did % 9 == 0, F.lit(" iban DE89370400440532013000")),
-        _sfx(did % 11 == 0, F.lit(" acct DE00370400440532013000")),
-    )
-    return d.select(did.alias("id"), t.alias("text"))
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction (operators/pii.pii_scrub): per-doc
-    email/IPv4/phone counts and the redacted text, over documents with
-    deterministically injected contact strings. Pure-expression pass —
-    the plan is one WholeStageCodegen projection, no exchange."""
-    from biothings_crawler_spark.operators.pii import pii_scrub
-
-    return pii_scrub(_pii_docs(spark, sf_dir), "id", "text")
-
-
-_SQL_PII_DOCS = """
-  SELECT doc_id AS id,
-         text
-         || CASE WHEN doc_id % 3 = 0
-                 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.org'
-                 ELSE '' END
-         || CASE WHEN doc_id % 4 = 0
-                 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                      || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE '' END
-         || CASE WHEN doc_id % 5 = 0
-                 THEN ' from 10.' || CAST(doc_id % 256 AS VARCHAR)
-                      || '.' || CAST((doc_id * 7) % 256 AS VARCHAR)
-                      || '.' || CAST((doc_id * 13) % 256 AS VARCHAR)
-                 ELSE '' END
-         || CASE WHEN doc_id % 6 = 0
-                 THEN ' card 4111-1111-1111-1111' ELSE '' END
-         || CASE WHEN doc_id % 7 = 0
-                 THEN ' ref 4111 1111 1111 1112' ELSE '' END
-         || CASE WHEN doc_id % 8 = 0
-                 THEN ' ssn 078-05-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE '' END
-         || CASE WHEN doc_id % 9 = 0
-                 THEN ' iban DE89370400440532013000' ELSE '' END
-         || CASE WHEN doc_id % 11 = 0
-                 THEN ' acct DE00370400440532013000' ELSE '' END AS text
-  FROM documents
-"""
-
-# the oracle interpolates the OPERATOR's own patterns/tokens — editing
-# pii.py can't silently leave the DuckDB side running the old regex
-from biothings_crawler_spark.operators.pii import (  # noqa: E402
-    CC_RE as _RE_CC_SQL,
-    CC_TOKEN as _TOK_CC,
-    EMAIL_RE as _RE_EMAIL_SQL,
-    EMAIL_TOKEN as _TOK_EMAIL,
-    IBAN_RE as _RE_IBAN_SQL,
-    IBAN_TOKEN as _TOK_IBAN,
-    IPV4_RE as _RE_IPV4_SQL,
-    IPV4_TOKEN as _TOK_IP,
-    PHONE_RE as _RE_PHONE_SQL,
-    PHONE_TOKEN as _TOK_PHONE,
-    SSN_RE as _RE_SSN_SQL,
-    SSN_TOKEN as _TOK_SSN,
-)
-
-# DuckDB Luhn twin of operators.pii.luhn_valid_col: odd 1-based
-# positions doubled (16-digit shapes), -9 when over 9, sum % 10 == 0
-_SQL_LUHN = (
-    "list_sum(list_transform(range(1, 17), i -> "
-    "CASE WHEN i % 2 = 1 THEN "
-    "CASE WHEN 2 * CAST(substr(regexp_replace(c, '[^0-9]', '', 'g'), i, 1) AS INT) > 9 "
-    "THEN 2 * CAST(substr(regexp_replace(c, '[^0-9]', '', 'g'), i, 1) AS INT) - 9 "
-    "ELSE 2 * CAST(substr(regexp_replace(c, '[^0-9]', '', 'g'), i, 1) AS INT) END "
-    "ELSE CAST(substr(regexp_replace(c, '[^0-9]', '', 'g'), i, 1) AS INT) END)) % 10 = 0"
-)
-
-# DuckDB mod-97 twin of operators.pii.iban_valid_col: rearrange, fold
-# character ASCII codes with an integer-only running remainder
-_SQL_IBAN_VALID = (
-    "list_reduce(list_prepend(0, list_transform("
-    "list_filter(string_split(substr(c, 5) || substr(c, 1, 4), ''), "
-    "ch -> len(ch) > 0), ch -> ascii(ch))), "
-    "(r, d) -> CASE WHEN d <= 57 THEN (r * 10 + (d - 48)) % 97 "
-    "ELSE (r * 100 + (d - 55)) % 97 END) = 1"
-)
-
-SQL_PII_SCRUB = f"""
-WITH docs AS ({_SQL_PII_DOCS}),
-s1 AS (SELECT id, text,
-              regexp_replace(text, '{_RE_EMAIL_SQL}', '{_TOK_EMAIL}', 'g') AS t1
-       FROM docs),
-s2 AS (SELECT *, regexp_replace(t1, '{_RE_IPV4_SQL}', '{_TOK_IP}', 'g') AS t2 FROM s1),
-s3 AS (SELECT *, regexp_replace(t2, '{_RE_PHONE_SQL}', '{_TOK_PHONE}', 'g') AS t3 FROM s2),
-s4 AS (SELECT *, regexp_replace(t3, '{_RE_SSN_SQL}', '{_TOK_SSN}', 'g') AS t4 FROM s3),
-s5 AS (SELECT *, regexp_replace(t4, '{_RE_IBAN_SQL}', '{_TOK_IBAN}', 'g') AS t5 FROM s4)
-SELECT id,
-       CAST(len(regexp_extract_all(text, '{_RE_EMAIL_SQL}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(t1, '{_RE_IPV4_SQL}')) AS BIGINT) AS n_ipv4,
-       CAST(len(regexp_extract_all(t2, '{_RE_PHONE_SQL}')) AS BIGINT) AS n_phones,
-       CAST(len(regexp_extract_all(t3, '{_RE_SSN_SQL}')) AS BIGINT) AS n_ssns,
-       CAST(len(list_filter(regexp_extract_all(t4, '{_RE_IBAN_SQL}'),
-                            c -> {_SQL_IBAN_VALID})) AS BIGINT) AS n_ibans,
-       CAST(len(list_filter(regexp_extract_all(t5, '{_RE_CC_SQL}'),
-                            c -> {_SQL_LUHN})) AS BIGINT) AS n_cards,
-       regexp_replace(t5, '{_RE_CC_SQL}', '{_TOK_CC}', 'g') AS clean_text
-FROM s5
-"""
 
 
 def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2399,7 +2164,7 @@ def q_refetch_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     (next_due_us <= cutoff), and the union is deduplicated per URL
     keeping the highest-priority reason (changed > added > due).
     Verified against ONE DuckDB statement for the whole composition —
-    the integration contract, like q_clean_corpus / q_web_refine."""
+    the integration contract."""
     from biothings_crawler_spark.operators.recrawl import recrawl_schedule
     from biothings_crawler_spark.operators.snapshot import (
         refetch_queue,
@@ -2613,56 +2378,11 @@ SELECT id, n_lines, n_words,
 FROM joined
 """
 
-DECONTAM_N = 5
 
-
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/contamination.decontaminate,
-    GPT-3-style n-gram overlap, n=5 at fixture scale): the 'benchmark'
-    is a 10-word slice of every 20th document — those documents (and
-    any chance n-gram collisions) must flag as contaminated. The
-    benchmark gram set is broadcast (bounded by construction); the
-    corpus side never shuffles."""
-    from biothings_crawler_spark.operators.contamination import decontaminate
-    from biothings_crawler_spark.operators.text import words_col
-
-    d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"), "text")
-    bench = d.filter(F.col("id") % 20 == 0).select(
-        F.array_join(F.slice(words_col(F.col("text")), 3, 10), " ").alias("text")
-    )
-    return decontaminate(d, bench, "id", "text", n=DECONTAM_N)
-
-
-_SQL_GRAMS5 = (
-    "CASE WHEN len(words) >= 5 THEN "
-    "[array_to_string(words[i:i+4], ' ') for i in range(1, len(words) - 3)] "
-    "ELSE [] END"
-)
-
-SQL_DECONTAMINATION = f"""
-WITH wds AS (SELECT doc_id AS id, {_SQL_WORDS} AS words FROM documents),
-bwords AS (SELECT words[3:12] AS words FROM wds WHERE id % 20 = 0),
-bgrams AS (
-  SELECT DISTINCT unnest({_SQL_GRAMS5}) AS gram FROM bwords),
-dg AS (SELECT id, list_distinct({_SQL_GRAMS5}) AS grams FROM wds),
-hits AS (
-  SELECT id, COUNT(*) AS n_hits
-  FROM (SELECT id, unnest(grams) AS gram FROM dg) JOIN bgrams USING (gram)
-  GROUP BY id)
-SELECT d.id, CAST(len(d.grams) AS BIGINT) AS n_grams,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       coalesce(h.n_hits, 0) >= 1 AS contaminated
-FROM dg d LEFT JOIN hits h USING (id)
-"""
-
-
-def _synth_html_pages(
-    spark: SparkSession, sf_dir: str, inject_email: bool = False
-) -> DataFrame:
+def _synth_html_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, source, html binary) pages synthesized from documents:
     script/style blocks, comments, entities incl. the '&amp;lt;'
-    double-escape case, block tags, <br>; optionally an email in the
-    second paragraph for id%3==0 (the web_refine PII casualty)."""
+    double-escape case, block tags, <br>."""
     d = _t(spark, sf_dir, "documents")
     i = F.col("doc_id").cast("string")
     words = F.split(F.col("text"), " ")
@@ -2672,28 +2392,13 @@ def _synth_html_pages(
     p2 = F.array_join(
         F.slice(words, 9, F.greatest(F.size(words) - F.lit(8), F.lit(1))), " "
     )
-    spam = F.lit("")
-    if inject_email:
-        # web_refine casualties: an email (PII scrub must catch it) and,
-        # for id%9==0, a 6-item spam list (dup_line_frac 5/13 > 0.3 after
-        # html->text, so the repetition filter must drop the doc)
-        p2 = F.concat(
-            p2,
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(F.lit(" contact user"), i, F.lit("@example.org")),
-            ).otherwise(F.lit("")),
-        )
-        spam = F.when(
-            F.col("doc_id") % 9 == 0, F.lit("<li>buy now</li>" * 6)
-        ).otherwise(F.lit(""))
     html = F.concat(
         F.lit("<html><head><title>Doc "), i, F.lit("</title>"),
         F.lit("<style>body { color: red; }</style>"),
         F.lit('<script type="text/javascript">var x = "'), i, F.lit('";</script></head>'),
         F.lit("<body><!-- build "), i, F.lit(" --><h1>Q&amp;A &amp;lt;doc "), i, F.lit("&gt;</h1>"),
         F.lit("<p>"), p1, F.lit("</p><p>"), p2, F.lit("&nbsp;&#39;end&quot;</p>"),
-        F.lit("<ul><li>alpha</li><li>beta</li>"), spam,
+        F.lit("<ul><li>alpha</li><li>beta</li>"),
         F.lit("</ul><br>tail</body></html>"),
     )
     return d.select(
@@ -2712,22 +2417,10 @@ def q_html_to_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages.select("id", html_to_text_col(F.col("html")).alias("text"))
 
 
-def _sql_html_pipeline(inject_email: bool = False) -> str:
+def _sql_html_pipeline() -> str:
     """CTE chain d -> h -> ... -> tx(id, source, text): the synthetic
     pages plus the full RE2 html->text pipeline, ending at extracted
-    text. Shared by SQL_HTML_TO_TEXT and SQL_WEB_REFINE."""
-    email = (
-        " || CASE WHEN id % 3 = 0 THEN ' contact user' || i || '@example.org'"
-        " ELSE '' END"
-        if inject_email
-        else ""
-    )
-    spam = (
-        " || CASE WHEN id % 9 = 0 THEN repeat('<li>buy now</li>', 6)"
-        " ELSE '' END"
-        if inject_email
-        else ""
-    )
+    text."""
     return f"""
 d AS (
   SELECT doc_id AS id, CAST(doc_id AS VARCHAR) AS i,
@@ -2740,8 +2433,8 @@ h AS (
          || '<script type="text/javascript">var x = "' || i || '";</script></head>'
          || '<body><!-- build ' || i || ' --><h1>Q&amp;A &amp;lt;doc ' || i || '&gt;</h1>'
          || '<p>' || array_to_string(w[1:8], ' ') || '</p><p>'
-         || array_to_string(w[9:], ' '){email} || '&nbsp;&#39;end&quot;</p>'
-         || '<ul><li>alpha</li><li>beta</li>'{spam}
+         || array_to_string(w[9:], ' ') || '&nbsp;&#39;end&quot;</p>'
+         || '<ul><li>alpha</li><li>beta</li>'
          || '</ul><br>tail</body></html>' AS t
   FROM d),
 r1 AS (SELECT id, source, regexp_replace(t, '(?is)<script[^>]*>.*?</script>', '', 'g') AS t FROM h),
@@ -2764,96 +2457,6 @@ tx AS (SELECT id, source, regexp_replace(t, '^\\s+|\\s+$', '', 'g') AS text FROM
 SQL_HTML_TO_TEXT = f"""
 WITH {_sql_html_pipeline()}
 SELECT id, text FROM tx
-"""
-
-
-def q_web_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED web-page refinement pipeline, end-to-end in one
-    lazy plan: synthetic HTML pages (with injected emails) ->
-    html_to_text -> PII scrub -> repetition filter (dup_line<=0.3,
-    top_word<=0.2) -> per-source mixture sampling. One DuckDB
-    statement is the oracle for the whole composition. The only
-    exchanges in the plan are the repetition word-mode agg and its
-    1:1 id-join back — extraction, scrubbing, and sampling are all
-    codegen projections / row-local filters riding the scan."""
-    from biothings_crawler_spark.operators.extract import html_to_text_col
-    from biothings_crawler_spark.operators.pii import (
-        pii_email_count,
-        pii_scrub_col,
-    )
-    from biothings_crawler_spark.operators.sampling import mixture_sample
-    from biothings_crawler_spark.operators.text import repetition_stats
-
-    pages = _synth_html_pages(spark, sf_dir, inject_email=True)
-    txt = pages.select("id", "source", html_to_text_col(F.col("html")).alias("text"))
-    t = F.col("text")
-    scr = txt.select(
-        "id", "source",
-        pii_email_count(t).cast("long").alias("n_emails"),
-        pii_scrub_col(t).alias("clean_text"),
-    )
-    rep = repetition_stats(scr, "id", "clean_text")
-    keep = scr.join(rep.select("id", "n_words", "dup_line_frac", "top_word_frac"), "id").filter(
-        (F.col("dup_line_frac") <= 0.3) & (F.col("top_word_frac") <= 0.2)
-    )
-    rates = {f"src{i}": MIX_RATES[i % 4] for i in range(20)}
-    sampled = mixture_sample(keep, "id", "source", rates, seed="web1")
-    return sampled.select(
-        "id", "source", "n_emails",
-        F.md5("clean_text").alias("text_md5"),
-        "n_words",
-    )
-
-
-def _sql_web_refine() -> str:
-    from biothings_crawler_spark.operators.sampling import rate_threshold
-
-    whens = "\n".join(
-        f"        WHEN {m} THEN {rate_threshold(MIX_RATES[m])}" for m in range(4)
-    )
-    return f"""
-WITH {_sql_html_pipeline(inject_email=True)},
-s1 AS (SELECT id, source, text,
-              regexp_replace(text, '{_RE_EMAIL_SQL}', '{_TOK_EMAIL}', 'g') AS t1
-       FROM tx),
-s2 AS (SELECT *, regexp_replace(t1, '{_RE_IPV4_SQL}', '{_TOK_IP}', 'g') AS t2 FROM s1),
-scr AS (
-  SELECT id, source,
-         CAST(len(regexp_extract_all(text, '{_RE_EMAIL_SQL}')) AS BIGINT) AS n_emails,
-         regexp_replace(t2, '{_RE_PHONE_SQL}', '{_TOK_PHONE}', 'g') AS clean_text
-  FROM s2),
-per AS (
-  SELECT id,
-         list_filter(string_split(clean_text, chr(10)), l -> len(trim(l)) > 0) AS lines,
-         list_filter(string_split_regex(lower(clean_text), '\\s+'), x -> len(x) > 0) AS words
-  FROM scr),
-expr AS (
-  SELECT id,
-         CASE WHEN len(lines) > 0
-              THEN 1.0 - len(list_distinct(lines)) / CAST(len(lines) AS DOUBLE)
-              ELSE 0.0 END AS dup_line_frac
-  FROM per),
-wc AS (
-  SELECT id, w, COUNT(*) AS c
-  FROM (SELECT id, unnest(words) AS w FROM per)
-  GROUP BY id, w),
-tops AS (SELECT id, MAX(c) AS top_c, SUM(c) AS n_words FROM wc GROUP BY id),
-keep AS (
-  -- LEFT JOIN + coalesce mirrors repetition_stats' left join: a
-  -- zero-word doc has no tops row but top_word_frac 0.0, so it passes
-  SELECT s.id, s.source, s.n_emails, s.clean_text,
-         CAST(coalesce(tp.n_words, 0) AS BIGINT) AS n_words
-  FROM scr s JOIN expr e USING (id) LEFT JOIN tops tp USING (id)
-  WHERE e.dup_line_frac <= 0.3
-    AND (CASE WHEN coalesce(tp.n_words, 0) > 0
-              THEN tp.top_c / CAST(tp.n_words AS DOUBLE)
-              ELSE 0.0 END) <= 0.2)
-SELECT id, source, n_emails, md5(clean_text) AS text_md5, n_words
-FROM keep
-WHERE {_SQL_HASH60.format(w="'web1:' || CAST(id AS VARCHAR)")}
-      < CASE CAST(substr(source, 4) AS INT) % 4
-{whens}
-        END
 """
 
 
@@ -3197,9 +2800,6 @@ FROM sess GROUP BY key, session_idx
 """
 
 
-BM25_QUERY = ["data", "table", "spark"]
-
-
 BLOCKLIST_MIN_QUALITY = 0.8
 
 
@@ -3312,9 +2912,6 @@ r{i + 1} AS (
 
 
 SQL_PAGERANK = _sql_pagerank()
-
-
-SQL_WEB_REFINE = _sql_web_refine()
 
 
 # --- golden-parquet oracles (frozen pure-Python implementations of the
@@ -3764,39 +3361,6 @@ SELECT pa.src AS host, n_partners,
          AND COALESCE(n_reciprocal, 0) * 1000000 // n_partners >= 500000
          AS is_farm
 FROM pa LEFT JOIN ra ON pa.src = ra.src
-"""
-
-
-def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition datasheet (operators/datasheet.corpus_datasheet):
-    per-(lang, source) doc counts, corpus share, token totals, and
-    short-doc fraction — all exact integer ppm."""
-    from biothings_crawler_spark.operators.datasheet import corpus_datasheet
-
-    return corpus_datasheet(_t(spark, sf_dir, "documents"))
-
-
-SQL_CORPUS_DATASHEET = f"""
-WITH per AS (
-  SELECT lang, source,
-         CAST({_SQL_TOKENS} AS BIGINT) AS n_tokens,
-         CAST(len(text) AS BIGINT) AS n_chars,
-         CASE WHEN len(text) < 200 THEN 1 ELSE 0 END AS is_short
-  FROM documents),
-s AS (
-  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         CAST(SUM(is_short) AS BIGINT) AS n_short
-  FROM per GROUP BY 1, 2),
-t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total_docs FROM s)
-SELECT lang, source, n_docs,
-       CAST(n_docs * 1000000 // total_docs AS BIGINT) AS share_ppm,
-       total_tokens,
-       CAST(total_tokens * 1000000 // n_docs AS BIGINT) AS avg_tokens_ppm,
-       total_chars,
-       CAST(n_short * 1000000 // n_docs AS BIGINT) AS short_docs_ppm
-FROM s, t
 """
 
 
@@ -4771,7 +4335,7 @@ def q_crawl_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     but hosts with id%3=0 have a sparkbot group disallowing only /tmp/
     (specific group EXCLUDES the star rules).  The oracle is ONE DuckDB
     statement encoding the fixture's intended admissions — a golden
-    pair in the q_clean_corpus style: if any stage's learning or rule
+    pair over the whole composition: if any stage's learning or rule
     semantics drift, the hash breaks."""
     from biothings_crawler_spark.operators.blocklist import blocklist_filter
     from biothings_crawler_spark.operators.dust import (
@@ -8030,93 +7594,6 @@ FROM b
 SQL_GZIP_DECODE = _sql_gzip_oracle()
 
 
-def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking (operators/cdc.cdc_chunks): gear-hash
-    boundaries with min/max clamps over a doubled document text (long
-    enough for several cuts per doc).  The Spark path is one JVM
-    expression fold per row; the oracle re-walks the same gear recipe
-    with DuckDB list_reduce (shared gear LUT, independent fold/explode
-    logic).  chunk_md5 keys the downstream storage-dedup aggregate."""
-    from biothings_crawler_spark.operators.cdc import cdc_chunks
-
-    # Fixed 301-char text: uniform fold length bounds the per-row work
-    # on BOTH engines and sidesteps DuckDB 1.0's varying-length
-    # list_reduce corruption by construction (see the oracle docstring).
-    # row-local fold: spread the single parquet split across cores
-    d = (_t(spark, sf_dir, "documents").repartition(32, "doc_id")
-         .select("doc_id",
-                 F.substring(
-                     F.rpad(F.concat("text", F.lit(" "), "text"),
-                            301, "."), 1, 301).alias("t")))
-    return cdc_chunks(d, "doc_id", "t")
-
-
-def _sql_cdc_oracle() -> str:
-    """DuckDB twin of the gear CDC fold.  Two DuckDB 1.0 lambda quirks
-    shape this SQL: (1) a LIST-typed field in a list_reduce struct
-    accumulator silently loses appended elements across steps, so cut
-    positions accumulate as a comma-delimited STRING; (2) list_reduce
-    over PER-ROW-VARYING list lengths corrupts accumulator state
-    across rows in a vector (rows receive other rows' intermediate
-    values), so every row folds over the SAME max-length range with
-    no-op steps past its own length."""
-    from biothings_crawler_spark.operators.cdc import GEAR, MOD48
-
-    G = "[" + ", ".join(str(v) for v in GEAR) + "]"
-    h2 = (f"((acc.h * 2 + ({G})[(ascii(substr(t, x.last, 1)) % 256) + 1]) "
-          f"% {MOD48})")
-    cut = (f"(((x.last - acc.last >= 8) AND (({h2} & 31) = 0)) "
-           f"OR (x.last - acc.last >= 128))")
-    live = "(x.last <= len(t))"
-    return f"""
-WITH u AS (
-  SELECT doc_id,
-         substr(rpad(text || ' ' || text, 301, '.'), 1, 301) AS t
-  FROM documents),
-m AS (SELECT max(len(t)) AS mx FROM u),
-f AS (
-  SELECT doc_id, t,
-    list_reduce(
-      list_prepend(
-        struct_pack(cuts := '', last := 0, h := CAST(0 AS BIGINT)),
-        list_transform(range(1, (SELECT mx FROM m) + 1), i ->
-          struct_pack(cuts := '', last := CAST(i AS INTEGER),
-                      h := CAST(0 AS BIGINT)))),
-      (acc, x) -> struct_pack(
-        cuts := CASE WHEN {live} AND {cut}
-                     THEN acc.cuts || ',' || CAST(x.last AS VARCHAR)
-                     ELSE acc.cuts END,
-        last := CASE WHEN {live} AND {cut} THEN x.last
-                     ELSE acc.last END,
-        h := CASE WHEN {live} THEN {h2} ELSE acc.h END)) AS st
-  FROM u),
-c AS (
-  SELECT doc_id, t,
-    list_transform(
-      string_split(trim(
-        CASE WHEN st.last = len(t) THEN st.cuts
-             ELSE st.cuts || ',' || CAST(len(t) AS VARCHAR) END, ','), ','),
-      s -> CAST(s AS INTEGER)) AS cuts
-  FROM f)
-SELECT doc_id,
-  CAST(k - 1 AS INT) AS chunk_no,
-  CAST(CASE WHEN k = 1 THEN 1 ELSE cuts[CAST(k - 1 AS INTEGER)] + 1 END
-    AS INT) AS start,
-  CAST(cuts[CAST(k AS INTEGER)]
-       - CASE WHEN k = 1 THEN 0 ELSE cuts[CAST(k - 1 AS INTEGER)] END
-    AS INT) AS chunk_len,
-  md5(substr(t,
-        CASE WHEN k = 1 THEN 1 ELSE cuts[CAST(k - 1 AS INTEGER)] + 1 END,
-        cuts[CAST(k AS INTEGER)]
-        - CASE WHEN k = 1 THEN 0 ELSE cuts[CAST(k - 1 AS INTEGER)] END))
-    AS chunk_md5
-FROM c, unnest(range(1, len(cuts) + 1)) AS s(k)
-"""
-
-
-SQL_CDC_CHUNKS = _sql_cdc_oracle()
-
-
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton/Z-order layout key (layout.zorder_key_col): interleave
     (n_chars, doc_id) and answer a rectangle query through the coarse
@@ -8168,142 +7645,6 @@ WHERE (ax | (bx << 1)) BETWEEN {zlo} AND {zhi}
 
 
 SQL_ZORDER_KEY = _sql_zorder_oracle()
-
-
-def q_delta_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-storage composition: two crawl rounds of the same pages ->
-    gear-CDC chunk both -> round 2 stores ONLY chunks whose hash is
-    absent from the round-1 store (cross-document dedup against the
-    whole archive).  One doc class takes a length-preserving mid-page
-    edit, one is appended-to via tail rewrite; the rest are unchanged
-    and must store ZERO new bytes.  Spark shape: two row-local chunk
-    projections, one distinct hash set, one anti-join, one hash
-    aggregate; the oracle states the whole composition as ONE DuckDB
-    statement."""
-    from biothings_crawler_spark.operators.cdc import cdc_chunks
-
-    base = (_t(spark, sf_dir, "documents").repartition(32, "doc_id")
-            .select("doc_id",
-                    F.substring(
-                        F.rpad(F.concat("text", F.lit(" "), "text"),
-                               301, "."), 1, 301).alias("t1")))
-    t2 = (F.when(F.col("doc_id") % 5 == 0,
-                 F.concat(F.lit("EDIT! "),
-                          F.substring(F.col("t1"), 7, 295)))
-          .when(F.col("doc_id") % 5 == 1,
-                F.concat(F.substring(F.col("t1"), 1, 281),
-                         F.lit(" tail-rewrite v2 etc")))
-          .otherwise(F.col("t1")))
-    rounds = base.withColumn("t2", t2)
-
-    c1 = cdc_chunks(rounds.select("doc_id", "t1"), "doc_id", "t1")
-    c2 = cdc_chunks(rounds.select("doc_id", "t2"), "doc_id", "t2")
-    store = c1.select("chunk_md5").distinct()
-    new = c2.join(F.broadcast(store), "chunk_md5", "left_anti")
-    totals = c2.groupBy("doc_id").agg(
-        F.count("*").cast("int").alias("n_chunks"),
-        F.sum("chunk_len").cast("long").alias("total_bytes"))
-    news = new.groupBy("doc_id").agg(
-        F.count("*").cast("int").alias("n_new_chunks"),
-        F.sum("chunk_len").cast("long").alias("new_bytes"))
-    return (totals.join(news, "doc_id", "left")
-            .select("doc_id", "n_chunks", "total_bytes",
-                    F.coalesce("n_new_chunks", F.lit(0)).cast("int")
-                     .alias("n_new_chunks"),
-                    F.coalesce("new_bytes", F.lit(0)).cast("long")
-                     .alias("new_bytes")))
-
-
-def _sql_delta_storage_oracle() -> str:
-    """ONE-statement DuckDB twin: both rounds fold through the same
-    padded gear recipe (fixed 301-char texts keep every row's fold the
-    same length — the varying-length list_reduce corruption workaround)
-    and the store/anti-join/aggregate run as plain SQL."""
-    from biothings_crawler_spark.operators.cdc import GEAR, MOD48
-
-    G = "[" + ", ".join(str(v) for v in GEAR) + "]"
-
-    def fold(tcol: str) -> str:
-        h2 = (f"((acc.h * 2 + ({G})[(ascii(substr({tcol}, x.last, 1)) "
-              f"% 256) + 1]) % {MOD48})")
-        cut = (f"(((x.last - acc.last >= 8) AND (({h2} & 31) = 0)) "
-               f"OR (x.last - acc.last >= 128))")
-        return f"""list_reduce(
-      list_prepend(
-        struct_pack(cuts := '', last := 0, h := CAST(0 AS BIGINT)),
-        list_transform(range(1, 302), i ->
-          struct_pack(cuts := '', last := CAST(i AS INTEGER),
-                      h := CAST(0 AS BIGINT)))),
-      (acc, x) -> struct_pack(
-        cuts := CASE WHEN {cut}
-                     THEN acc.cuts || ',' || CAST(x.last AS VARCHAR)
-                     ELSE acc.cuts END,
-        last := CASE WHEN {cut} THEN x.last ELSE acc.last END,
-        h := {h2}))"""
-
-    explode = """
-  SELECT doc_id, t,
-    CASE WHEN k = 1 THEN 1 ELSE cuts[CAST(k - 1 AS INTEGER)] + 1 END
-      AS start,
-    cuts[CAST(k AS INTEGER)]
-      - CASE WHEN k = 1 THEN 0 ELSE cuts[CAST(k - 1 AS INTEGER)] END
-      AS chunk_len
-  FROM {src}, unnest(range(1, len(cuts) + 1)) AS s(k)"""
-
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         substr(rpad(text || ' ' || text, 301, '.'), 1, 301) AS t1
-  FROM documents),
-rounds AS (
-  SELECT doc_id, t1,
-    CASE
-      WHEN doc_id % 5 = 0 THEN 'EDIT! ' || substr(t1, 7, 295)
-      WHEN doc_id % 5 = 1 THEN substr(t1, 1, 281) || ' tail-rewrite v2 etc'
-      ELSE t1 END AS t2
-  FROM base),
-f1 AS (
-  SELECT doc_id, t1 AS t, {fold('t1')} AS st FROM rounds),
-f2 AS (
-  SELECT doc_id, t2 AS t, {fold('t2')} AS st FROM rounds),
-c1 AS (
-  SELECT doc_id, t,
-    list_transform(string_split(trim(
-      CASE WHEN st.last = len(t) THEN st.cuts
-           ELSE st.cuts || ',' || CAST(len(t) AS VARCHAR) END, ','), ','),
-      s -> CAST(s AS INTEGER)) AS cuts
-  FROM f1),
-c2 AS (
-  SELECT doc_id, t,
-    list_transform(string_split(trim(
-      CASE WHEN st.last = len(t) THEN st.cuts
-           ELSE st.cuts || ',' || CAST(len(t) AS VARCHAR) END, ','), ','),
-      s -> CAST(s AS INTEGER)) AS cuts
-  FROM f2),
-e1 AS ({explode.format(src='c1')}),
-e2 AS ({explode.format(src='c2')}),
-h1 AS (
-  SELECT DISTINCT md5(substr(t, start, chunk_len)) AS chunk_md5
-  FROM e1),
-h2 AS (
-  SELECT doc_id, chunk_len, md5(substr(t, start, chunk_len)) AS chunk_md5
-  FROM e2),
-news AS (
-  SELECT doc_id, count(*) AS n_new_chunks, sum(chunk_len) AS new_bytes
-  FROM h2 ANTI JOIN h1 USING (chunk_md5)
-  GROUP BY doc_id)
-SELECT h2.doc_id,
-       CAST(count(*) AS INT) AS n_chunks,
-       CAST(sum(h2.chunk_len) AS BIGINT) AS total_bytes,
-       CAST(COALESCE(any_value(news.n_new_chunks), 0) AS INT)
-         AS n_new_chunks,
-       CAST(COALESCE(any_value(news.new_bytes), 0) AS BIGINT) AS new_bytes
-FROM h2 LEFT JOIN news ON h2.doc_id = news.doc_id
-GROUP BY h2.doc_id
-"""
-
-
-SQL_DELTA_STORAGE = _sql_delta_storage_oracle()
 
 
 def q_typosquat_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8793,78 +8134,6 @@ FROM s, mm
 
 
 SQL_MODULARITY = _sql_modularity()
-
-
-# ---------------------------------------------------------------------------
-# query serving: phrase search and snippets
-# ---------------------------------------------------------------------------
-
-PHRASE = ["table", "hash"]
-
-
-def q_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-phrase ranked retrieval (operators/serving.phrase_topk):
-    the positional index is (term, id, pos) rows, the phrase resolves
-    as an adjacency equi-join between the two terms' posting slivers.
-    Oracle re-derives positions with unnest(range(...)) and the same
-    pos+1 self-join."""
-    from biothings_crawler_spark.operators.serving import phrase_topk
-
-    d = _t(spark, sf_dir, "documents")
-    return phrase_topk(d, "doc_id", "text", PHRASE, k=20)
-
-
-SQL_PHRASE_TOPK = f"""
-WITH w AS (SELECT doc_id AS id, {_SQL_WORDS} AS words FROM documents),
-p AS (SELECT id, i, words[i] AS term
-      FROM w, unnest(range(1, len(words) + 1)) AS r(i)),
-m AS (SELECT p1.id
-      FROM p p1 JOIN p p2 ON p2.id = p1.id AND p2.i = p1.i + 1
-      WHERE p1.term = '{PHRASE[0]}' AND p2.term = '{PHRASE[1]}')
-SELECT id, CAST(COUNT(*) AS BIGINT) AS phrase_tf
-FROM m GROUP BY id
-ORDER BY phrase_tf DESC, id LIMIT 20
-"""
-
-SNIPPET_WIDTH = 8
-
-
-def q_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Query-dependent snippet extraction (operators/serving.
-    snippet_windows): best 8-word window by query-term hits, earliest
-    window on ties — a zero-Exchange row-local projection.  Oracle
-    enumerates the same windows with a lateral range unnest and picks
-    the winner with QUALIFY row_number()."""
-    from biothings_crawler_spark.operators.serving import snippet_windows
-
-    d = _t(spark, sf_dir, "documents")
-    return snippet_windows(d, "doc_id", "text", BM25_QUERY, width=SNIPPET_WIDTH)
-
-
-_SQL_SNIP_TERMS = ", ".join("'" + t + "'" for t in BM25_QUERY)
-
-SQL_SNIPPETS = f"""
-WITH w AS (SELECT doc_id AS id, {_SQL_WORDS} AS words,
-                  len({_SQL_WORDS}) AS n FROM documents),
-s AS (SELECT id, words, n, st
-      FROM w, unnest(range(1,
-           (CASE WHEN n > {SNIPPET_WIDTH} THEN n - {SNIPPET_WIDTH} + 1
-                 ELSE 1 END) + 1)) AS r(st)),
-h AS (SELECT id, words, st,
-             CAST(list_sum(
-               [CASE WHEN words[j] IN ({_SQL_SNIP_TERMS}) THEN 1 ELSE 0 END
-                for j in range(st, least(st + {SNIPPET_WIDTH} - 1, n) + 1)])
-               AS BIGINT) AS hits
-      FROM s),
-b AS (SELECT id, st, hits, words FROM h
-      QUALIFY row_number() OVER (PARTITION BY id ORDER BY hits DESC, st) = 1)
-SELECT id, CAST(st AS BIGINT) AS "start", hits,
-       COALESCE(array_to_string(
-         [words[j] for j in range(st,
-            least(st + {SNIPPET_WIDTH} - 1, len(words)) + 1)], ' '), '')
-         AS snippet
-FROM b WHERE hits > 0
-"""
 
 
 def q_indegree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9670,95 +8939,6 @@ FROM manifest WHERE size_bytes >= {COMPACTION_TARGET}
 """
 
 
-_LICENSE_HDR_SPARK = """CASE doc_id % 9
-  WHEN 1 THEN '// SPDX-License-Identifier: MIT\n'
-  WHEN 2 THEN '// SPDX-License-Identifier: Apache-2.0\n'
-  WHEN 3 THEN '// SPDX-License-Identifier: GPL-3.0-only\n'
-  WHEN 4 THEN '/* Permission is hereby granted, free of charge */\n'
-  WHEN 5 THEN '/* Licensed under the Apache License, Version 2.0 */\n'
-  WHEN 6 THEN '/* Redistribution and use in source and binary forms */\n'
-  WHEN 7 THEN '/* free software under the GNU General Public License */\n'
-  WHEN 8 THEN '// SPDX-License-Identifier: MIT\n/* GNU General Public License */\n'
-  ELSE '' END"""
-
-
-def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """License classification for training-data compliance
-    (operators/license.detect_licenses, The Stack's inclusion rule):
-    SPDX identifier beats phrase heuristics beats 'unknown', scan
-    bounded to the 600-char header window.  Fixture lanes prepend a
-    deterministic header per doc_id%9 — SPDX ids (incl. GPL), each
-    phrase family, a conflict lane where the SPDX MIT line must beat a
-    GPL phrase, and a no-header lane.  Oracle replays the identical
-    header construction + CASE chain in SQL."""
-    from biothings_crawler_spark.operators.license import detect_licenses
-
-    d = _t(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id",
-        F.concat(F.expr(_LICENSE_HDR_SPARK),
-                 F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-    )
-    return detect_licenses(docs).select(
-        "doc_id", "license", "detector", "permissive")
-
-
-SQL_LICENSE_DETECT = """
-WITH d AS (
-  SELECT doc_id,
-         CASE doc_id % 9
-           WHEN 1 THEN '// SPDX-License-Identifier: MIT' || chr(10)
-           WHEN 2 THEN '// SPDX-License-Identifier: Apache-2.0' || chr(10)
-           WHEN 3 THEN '// SPDX-License-Identifier: GPL-3.0-only' || chr(10)
-           WHEN 4 THEN '/* Permission is hereby granted, free of charge */'
-                       || chr(10)
-           WHEN 5 THEN '/* Licensed under the Apache License, Version 2.0 */'
-                       || chr(10)
-           WHEN 6 THEN '/* Redistribution and use in source and binary forms */'
-                       || chr(10)
-           WHEN 7 THEN '/* free software under the GNU General Public License */'
-                       || chr(10)
-           WHEN 8 THEN '// SPDX-License-Identifier: MIT' || chr(10)
-                       || '/* GNU General Public License */' || chr(10)
-           ELSE '' END || coalesce(text, '') AS t
-  FROM documents),
-w AS (SELECT doc_id,
-             regexp_extract(substring(t, 1, 600),
-                            'SPDX-License-Identifier: ([A-Za-z0-9.\\-]+)',
-                            1) AS spdx,
-             substring(t, 1, 600) AS win
-      FROM d),
-cls AS (
-  SELECT doc_id,
-         CASE WHEN spdx <> '' THEN spdx
-              WHEN contains(win, 'Permission is hereby granted, free of charge')
-                THEN 'MIT'
-              WHEN contains(win, 'Licensed under the Apache License, Version 2.0')
-                THEN 'Apache-2.0'
-              WHEN contains(win, 'Redistribution and use in source and binary forms')
-                THEN 'BSD-3-Clause'
-              WHEN contains(win, 'This is free and unencumbered software')
-                THEN 'Unlicense'
-              WHEN contains(win, 'GNU General Public License')
-                THEN 'GPL-3.0-only'
-              ELSE 'unknown' END AS license,
-         CASE WHEN spdx <> '' THEN 'spdx'
-              WHEN contains(win, 'Permission is hereby granted, free of charge')
-                OR contains(win, 'Licensed under the Apache License, Version 2.0')
-                OR contains(win, 'Redistribution and use in source and binary forms')
-                OR contains(win, 'This is free and unencumbered software')
-                OR contains(win, 'GNU General Public License')
-                THEN 'phrase'
-              ELSE 'none' END AS detector
-  FROM w)
-SELECT doc_id, license, detector,
-       CAST(CASE WHEN license IN
-                 ('MIT', 'Apache-2.0', 'BSD-3-Clause', 'Unlicense')
-                 THEN 1 ELSE 0 END AS BIGINT) AS permissive
-FROM cls
-"""
-
-
 def q_epoch_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-constrained epoch allocation (operators/sampling.
     allocate_epochs, after Muennighoff et al. 2023): per-source unique
@@ -10105,59 +9285,6 @@ SELECT host,
          flatten([['User-agent: *'], al, dis, cd, sm]), chr(10))
          AS robots_txt
 FROM p
-"""
-
-
-def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-score calibration audit (operators/serving.
-    calibration_report): reliability bins + exact-integer ECE.  The
-    fixture plants a classifier that is systematically OVERCONFIDENT
-    (empirical positive rate = half the score), so bins show a growing
-    gap and ECE is provably nonzero; labels derive from a hash coin so
-    both engines replay them exactly."""
-    from biothings_crawler_spark.operators.serving import calibration_report
-
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        ((F.col("doc_id") * 37 % 101) * 10000).cast("long")
-        .alias("score_ppm"),
-        F.when(
-            F.conv(F.substring(F.md5(F.concat(
-                F.lit("cal:"), F.col("doc_id").cast("string"))), 1, 8),
-                16, 10).cast("long") % 1000000
-            < (F.col("doc_id") * 37 % 101) * 5000,
-            F.lit(1)).otherwise(F.lit(0)).cast("long").alias("label"),
-    )
-    return calibration_report(scored)
-
-
-SQL_CALIBRATION = """
-WITH scored AS (
-  SELECT (doc_id * 37 % 101) * 10000 AS s,
-         CASE WHEN CAST(('0x' || substr(md5('cal:'
-                  || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000000
-                  < (doc_id * 37 % 101) * 5000
-              THEN 1 ELSE 0 END AS y
-  FROM documents),
-b AS (SELECT s * 10 // 1000001 AS bin, s, y FROM scored),
-bins AS (
-  SELECT CAST(bin AS BIGINT) AS bin, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(s) // COUNT(*) AS BIGINT) AS mean_score_ppm,
-         CAST(SUM(y) * 1000000 // COUNT(*) AS BIGINT) AS emp_ppm
-  FROM b GROUP BY bin),
-g AS (SELECT bin, n, mean_score_ppm, emp_ppm,
-             CAST(ABS(mean_score_ppm - emp_ppm) AS BIGINT) AS gap_ppm
-      FROM bins),
-tot AS (
-  SELECT CAST(-1 AS BIGINT) AS bin, CAST(SUM(n) AS BIGINT) AS n,
-         CAST(NULL AS BIGINT) AS mean_score_ppm,
-         CAST(NULL AS BIGINT) AS emp_ppm,
-         CAST(SUM(CAST(n AS HUGEINT) * gap_ppm) // SUM(n) AS BIGINT)
-           AS gap_ppm
-  FROM g)
-SELECT bin, n, mean_score_ppm, emp_ppm, gap_ppm FROM g
-UNION ALL
-SELECT bin, n, mean_score_ppm, emp_ppm, gap_ppm FROM tot
 """
 
 
@@ -10663,143 +9790,6 @@ FROM m2
 """
 
 
-def q_query_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fielded query-language parsing (operators/serving.
-    parse_queries): Lucene-style subset — field prefixes, ``-``
-    negation, quoted phrases with interior spaces, unknown prefixes
-    degrade to text terms.  Query strings are synthesized closed-form
-    per doc so the oracle rebuilds and re-parses identically in RE2."""
-    from biothings_crawler_spark.operators.serving import parse_queries
-
-    d = _t(spark, sf_dir, "documents")
-    q = F.concat(
-        F.lit("data host:s"), (F.col("doc_id") % 9).cast("string"),
-        F.lit(".org -lang:de "),
-        F.lit('"exact phrase '), (F.col("doc_id") % 4).cast("string"),
-        F.lit('" '),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("foo:bar "))
-        .otherwise(F.lit("")),
-        F.lit("-noise title:spark"),
-    )
-    return parse_queries(
-        d.select(F.col("doc_id").alias("query_id"), q.alias("q")))
-
-
-SQL_QUERY_PARSE = """
-WITH qs AS (
-  SELECT doc_id AS query_id,
-         lower('data host:s' || CAST(doc_id % 9 AS VARCHAR)
-         || '.org -lang:de "exact phrase '
-         || CAST(doc_id % 4 AS VARCHAR) || '" '
-         || CASE WHEN doc_id % 3 = 0 THEN 'foo:bar ' ELSE '' END
-         || '-noise title:spark') AS q
-  FROM documents),
-toks AS (
-  SELECT query_id, t.i - 1 AS clause_idx,
-         arr[t.i] AS tok
-  FROM (SELECT query_id,
-               regexp_extract_all(q,
-                 '(-?(?:[a-z]+:)?"[^"]*"|\\S+)', 1) AS arr
-        FROM qs), unnest(range(1, len(arr) + 1)) AS t(i)),
-c1 AS (
-  SELECT query_id, clause_idx,
-         CASE WHEN tok LIKE '-%' THEN 1 ELSE 0 END AS negated,
-         CASE WHEN tok LIKE '-%' THEN substring(tok, 2) ELSE tok END
-           AS body
-  FROM toks),
-c2 AS (
-  SELECT query_id, clause_idx, negated,
-         regexp_extract(body, '^(title|host|lang|text):', 1) AS fld,
-         body
-  FROM c1),
-c3 AS (
-  SELECT query_id, clause_idx, negated,
-         CASE WHEN fld = '' THEN 'text' ELSE fld END AS field,
-         CASE WHEN fld = '' THEN body
-              ELSE substring(body, length(fld) + 2) END AS rest
-  FROM c2)
-SELECT query_id, CAST(clause_idx AS BIGINT) AS clause_idx, field,
-       CASE WHEN regexp_matches(rest, '^"[^"]*"$')
-            THEN substring(rest, 2, length(rest) - 2)
-            ELSE rest END AS term,
-       CAST(negated AS BIGINT) AS negated,
-       CAST(CASE WHEN regexp_matches(rest, '^"[^"]*"$') THEN 1 ELSE 0 END
-            AS BIGINT) AS is_phrase
-FROM c3
-WHERE (CASE WHEN regexp_matches(rest, '^"[^"]*"$')
-            THEN substring(rest, 2, length(rest) - 2)
-            ELSE rest END) <> ''
-"""
-
-
-WSEG_WORDS = ["merge", "vector", "stream", "hash", "join", "scan",
-              "data", "table", "spark", "window", "batch", "row"]
-
-
-def q_word_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dictionary word segmentation (operators/serving.segment_words):
-    space-free strings rebuilt from the corpus vocabulary by exact DP
-    — fewest words, then highest total frequency, then smallest
-    joined string.  Inputs concatenate three known corpus words per
-    doc; the corpus-derived (term, freq) table is the broadcast side.
-    The oracle walks EVERY segmentation with a recursive CTE and
-    applies the identical tie-break — DP optimality itself is on the
-    hook, not just the arithmetic."""
-    from biothings_crawler_spark.operators.serving import segment_words
-    from biothings_crawler_spark.operators.text import words_col
-
-    d = _t(spark, sf_dir, "documents")
-    vocab = d.select(F.explode(words_col(F.col("text"))).alias("term")) \
-        .groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    w = F.array(*[F.lit(x) for x in WSEG_WORDS])
-    q = F.concat(
-        F.element_at(w, (F.col("doc_id") % 12 + 1).cast("int")),
-        F.element_at(w, (F.expr("doc_id div 12") % 12 + 1).cast("int")),
-        F.element_at(w, (F.col("doc_id") * 7 % 12 + 1).cast("int")),
-    )
-    queries = d.select(F.col("doc_id").alias("query_id"), q.alias("q"))
-    return segment_words(queries, vocab)
-
-
-def _sql_word_segment() -> str:
-    arr = "[" + ", ".join(f"'{x}'" for x in WSEG_WORDS) + "]"
-    return f"""
-WITH RECURSIVE
-v AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-        SELECT unnest({_SQL_WORDS}) AS term FROM documents)
-      GROUP BY term),
-qs AS (
-  SELECT doc_id AS query_id,
-         {arr}[CAST(doc_id % 12 AS INT) + 1]
-         || {arr}[CAST((doc_id // 12) % 12 AS INT) + 1]
-         || {arr}[CAST(doc_id * 7 % 12 AS INT) + 1] AS q
-  FROM documents),
-walk AS (
-  SELECT query_id, q, 0 AS pos, 0 AS n, CAST(0 AS BIGINT) AS fs,
-         '' AS path
-  FROM qs
-  UNION ALL
-  SELECT w.query_id, w.q, w.pos + len(v.term), w.n + 1, w.fs + v.freq,
-         CASE WHEN w.path = '' THEN v.term
-              ELSE w.path || ' ' || v.term END
-  FROM walk w JOIN v
-    ON substring(w.q, w.pos + 1, len(v.term)) = v.term
-  WHERE w.pos < len(w.q) AND len(v.term) <= 12),
-full_segs AS (
-  SELECT query_id, n, fs, path FROM walk WHERE pos = len(q)),
-best AS (
-  SELECT query_id, path, n FROM full_segs
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY n, fs DESC, path) = 1)
-SELECT q2.query_id, b.path AS segmented,
-       CAST(COALESCE(b.n, 0) AS BIGINT) AS n_words
-FROM qs q2 LEFT JOIN best b USING (query_id)
-"""
-
-
-SQL_WORD_SEGMENT = _sql_word_segment()
-
-
 def q_feed_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atom feed rendering (sources/feed.render_atom) — the publishing
     side of the polling loop; cap pinned to 5 so the newest-first
@@ -11158,100 +10148,6 @@ FROM sig WHERE target IS NOT NULL
 """
 
 
-def q_cloaking_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dual-UA cloaking verdicts (operators/cloaking.cloaking_verdicts):
-    long-format fetch table pivoted by ONE hash agg, then row-local
-    integer word-set Jaccard + length-ratio ladder. Lanes: identical,
-    whitespace/case-only dynamic, keyword-stuffed cloak, tripled-text
-    stuffing cloak (ratio trigger), one-word drift, missing bot fetch.
-    Oracle replays the ladder on the pivoted shape."""
-    from biothings_crawler_spark.operators.cloaking import cloaking_verdicts
-
-    d = _t(spark, sf_dir, "documents")
-    i = F.col("doc_id").cast("string")
-    m = F.col("doc_id") % 6
-    bot = (
-        F.when(m == 1, F.upper(F.regexp_replace(F.col("text"), " ", "  ")))
-        .when(m == 2, F.concat(F.repeat(F.lit("buy cheap pills now "), 8), i))
-        .when(m == 3, F.concat(F.col("text"), F.lit(" "), F.col("text"),
-                               F.lit(" "), F.col("text")))
-        .when(m == 4, F.concat(F.col("text"), F.lit(" zzzunique"), i))
-        .when(m == 5, F.lit(None).cast("string"))
-        .otherwise(F.col("text"))
-    )
-    base = d.select(
-        F.concat(F.lit("https://h"), (F.col("doc_id") % 40).cast("string"),
-                 F.lit(".example.com/p"), i).alias("url"),
-        F.concat(F.lit("h"), (F.col("doc_id") % 40).cast("string")).alias("host"),
-        bot.alias("bot"), F.col("text").alias("browser"),
-    )
-    fetches = base.select(
-        "url", "host",
-        F.explode(F.array(
-            F.struct(F.lit("bot").alias("ua"), F.col("bot").alias("text")),
-            F.struct(F.lit("browser").alias("ua"),
-                     F.col("browser").alias("text")),
-        )).alias("f"),
-    ).select("url", "host", "f.ua", "f.text").filter(F.col("text").isNotNull())
-    return cloaking_verdicts(fetches)
-
-
-SQL_CLOAKING_HOSTS = r"""
-WITH base AS (
-  SELECT 'https://h' || CAST(doc_id % 40 AS VARCHAR) || '.example.com/p'
-         || CAST(doc_id AS VARCHAR) AS url,
-         'h' || CAST(doc_id % 40 AS VARCHAR) AS host,
-         CASE doc_id % 6
-           WHEN 1 THEN upper(replace(text, ' ', '  '))
-           WHEN 2 THEN repeat('buy cheap pills now ', 8)
-                       || CAST(doc_id AS VARCHAR)
-           WHEN 3 THEN text || ' ' || text || ' ' || text
-           WHEN 4 THEN text || ' zzzunique' || CAST(doc_id AS VARCHAR)
-           WHEN 5 THEN NULL
-           ELSE text END AS bot,
-         text AS browser
-  FROM documents),
-w AS (
-  SELECT url, host, bot, browser,
-         list_filter(string_split_regex(lower(bot), '\s+'),
-                     x -> len(x) > 0) AS wb,
-         list_filter(string_split_regex(lower(browser), '\s+'),
-                     x -> len(x) > 0) AS ww
-  FROM base),
-s AS (
-  SELECT url, host, bot, browser,
-         CAST(len(wb) AS BIGINT) AS n_bot,
-         CAST(len(ww) AS BIGINT) AS n_browser,
-         array_to_string(wb, ' ') AS norm_b,
-         array_to_string(ww, ' ') AS norm_w,
-         CAST(len(list_intersect(list_distinct(wb), list_distinct(ww)))
-              AS BIGINT) AS inter,
-         CAST(len(list_distinct(wb)) + len(list_distinct(ww))
-              AS BIGINT) AS sizes
-  FROM w),
-v AS (
-  SELECT *,
-         CASE WHEN sizes - inter > 0
-              THEN inter * 1000000 // (sizes - inter)
-              ELSE 1000000 END AS jac,
-         greatest(n_bot, n_browser) * 1000000
-           // greatest(least(n_bot, n_browser), 1) AS ratio,
-         (bot IS NULL OR browser IS NULL) AS part
-  FROM s)
-SELECT url, host,
-       CASE WHEN part THEN 'partial'
-            WHEN bot = browser THEN 'same'
-            WHEN norm_b = norm_w THEN 'dynamic'
-            WHEN jac < 500000 OR ratio > 1500000 THEN 'cloaked'
-            ELSE 'differs' END AS verdict,
-       CASE WHEN NOT part THEN n_bot END AS n_bot,
-       CASE WHEN NOT part THEN n_browser END AS n_browser,
-       CAST(CASE WHEN NOT part THEN jac END AS BIGINT) AS jaccard_ppm,
-       CAST(CASE WHEN NOT part THEN ratio END AS BIGINT) AS ratio_ppm
-FROM v
-"""
-
-
 def q_idn_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 3492 Punycode host decoding (operators/idn.idn_decode):
     Latin/Cyrillic/Greek/CJK labels, a mixed-script homograph label,
@@ -11315,63 +10211,6 @@ SELECT doc_id, lab || tail AS host,
          END AS decode_err,
        CAST(CASE WHEN doc_id % 9 = 6 THEN 0 ELSE 1 END AS BIGINT) AS ace
 FROM h
-"""
-
-
-def q_pairwise_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group ROC-AUC (operators/serving.pairwise_auc,
-    Mann-Whitney rank-sum with midrank ties): the fixture plants a
-    hash-derived score whose label coin is biased by the score, so
-    AUC is provably above 500000 ppm, with heavy score ties exercising
-    the midrank path; one group is all-negative -> NULL auc_ppm.
-    Oracle replays the rank-sum identity with SQL window functions."""
-    from biothings_crawler_spark.operators.serving import pairwise_auc
-
-    d = _t(spark, sf_dir, "documents")
-    scored = d.select(
-        (F.col("doc_id") % 5).alias("grp"),
-        ((F.col("doc_id") * 37) % 101).cast("long").alias("score_ppm"),
-        F.when(
-            (F.col("doc_id") % 5) == 4, F.lit(0)
-        ).otherwise(
-            (((F.col("doc_id") * 13 + 5) % 100)
-             < ((F.col("doc_id") * 37) % 101)).cast("int")
-        ).alias("label"),
-    )
-    return pairwise_auc(scored)
-
-
-SQL_PAIRWISE_AUC = """
-WITH scored AS (
-  SELECT doc_id % 5 AS grp,
-         CAST((doc_id * 37) % 101 AS BIGINT) AS s,
-         CASE WHEN doc_id % 5 = 4 THEN 0
-              WHEN ((doc_id * 13 + 5) % 100) < ((doc_id * 37) % 101)
-              THEN 1 ELSE 0 END AS label
-  FROM documents),
-cells AS (
-  SELECT grp, s, CAST(COUNT(*) AS BIGINT) AS n_at,
-         CAST(SUM(label) AS BIGINT) AS pos_at
-  FROM scored GROUP BY grp, s),
-ranked AS (
-  SELECT grp, n_at, pos_at,
-         SUM(n_at) OVER (PARTITION BY grp ORDER BY s
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - n_at AS cum_below
-  FROM cells),
-agg AS (
-  SELECT grp AS "group",
-         CAST(SUM(pos_at) AS BIGINT) AS n_pos,
-         CAST(SUM(n_at) - SUM(pos_at) AS BIGINT) AS n_neg,
-         CAST(SUM(pos_at * (2 * cum_below + n_at + 1)) AS BIGINT)
-           AS rank2_pos
-  FROM ranked GROUP BY grp)
-SELECT "group", n_pos, n_neg,
-       CAST(CASE WHEN n_pos > 0 AND n_neg > 0
-                 THEN (rank2_pos - n_pos * (n_pos + 1)) * 1000000
-                      // (2 * n_pos * n_neg)
-            END AS BIGINT) AS auc_ppm
-FROM agg
 """
 
 
@@ -11595,74 +10434,6 @@ SELECT sitemap_url,
        CAST(SUM(CASE WHEN verdict <> 'in_scope' THEN 1 ELSE 0 END)
             * 1000000 // COUNT(*) AS BIGINT) AS ignored_ppm
 FROM v GROUP BY sitemap_url
-"""
-
-
-def q_survival_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source first-kill survival ledger (operators/datasheet.
-    survival_attribution): language gate -> quality gate (25 words; corpus spans 10-99) -> exact
-    dedup with winners elected only among earlier-stage survivors.
-    The fixture plants extra duplicates by mapping every doc_id%9==4
-    text onto its neighbor's text, so dedup kills are guaranteed in
-    every source. Oracle replays the election and ledger."""
-    from biothings_crawler_spark.operators.datasheet import (
-        survival_attribution,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    planted = d.alias("a").join(
-        d.select(F.col("doc_id").alias("nid"),
-                 F.col("text").alias("ntext")).alias("b"),
-        F.col("a.doc_id") - (F.col("a.doc_id") % 9 == 4).cast("long")
-        == F.col("nid"),
-    ).select(
-        "a.doc_id", "a.lang", "a.source",
-        F.when(F.col("a.doc_id") % 9 == 4, F.col("ntext"))
-        .otherwise(F.col("a.text")).alias("text"),
-    )
-    return survival_attribution(planted, min_words=25)
-
-
-SQL_SURVIVAL_LEDGER = f"""
-WITH planted AS (
-  SELECT a.doc_id, a.lang, a.source,
-         CASE WHEN a.doc_id % 9 = 4 THEN b.text ELSE a.text END AS text
-  FROM documents a
-  JOIN documents b
-    ON b.doc_id = a.doc_id - CASE WHEN a.doc_id % 9 = 4
-                                  THEN 1 ELSE 0 END),
-flags AS (
-  SELECT source, doc_id AS id, text,
-         CAST(coalesce(len({_SQL_WORDS}), 0) AS BIGINT) AS tok,
-         coalesce(lang IN ('en', 'de', 'es', 'fr'), false) AS ok_lang,
-         CAST(len({_SQL_WORDS}) AS BIGINT) >= 25 AS ok_quality
-  FROM planted),
-winners AS (
-  SELECT text, MIN(id) AS w FROM flags
-  WHERE ok_lang AND ok_quality GROUP BY text),
-v AS (
-  SELECT f.source, f.tok,
-         CASE WHEN NOT f.ok_lang THEN 'lang'
-              WHEN NOT f.ok_quality THEN 'quality'
-              WHEN f.id <> w.w THEN 'dup'
-              ELSE 'ok' END AS v
-  FROM flags f LEFT JOIN winners w ON w.text = f.text)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(tok) AS BIGINT) AS tokens_in,
-       CAST(SUM(CASE WHEN v = 'lang' THEN 1 ELSE 0 END) AS BIGINT)
-         AS killed_lang,
-       CAST(SUM(CASE WHEN v = 'quality' THEN 1 ELSE 0 END) AS BIGINT)
-         AS killed_quality,
-       CAST(SUM(CASE WHEN v = 'dup' THEN 1 ELSE 0 END) AS BIGINT)
-         AS killed_dup,
-       CAST(SUM(CASE WHEN v = 'ok' THEN 1 ELSE 0 END) AS BIGINT)
-         AS survived,
-       CAST(SUM(CASE WHEN v = 'ok' THEN tok ELSE 0 END) AS BIGINT)
-         AS tokens_out,
-       CAST(SUM(CASE WHEN v = 'ok' THEN tok ELSE 0 END) * 1000000
-            // greatest(SUM(tok), 1) AS BIGINT) AS survival_ppm
-FROM v GROUP BY source
 """
 
 
@@ -12080,47 +10851,6 @@ SELECT c.host, c.signature, c.n_urls,
               ORDER BY c.n_urls DESC, c.signature) AS BIGINT) AS rank
 FROM cells c JOIN tot t ON t.host = c.host
 """
-
-
-PROX_TERMS = ["hash", "join", "scan"]
-
-
-def q_proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Term-proximity retrieval (operators/serving.proximity_topk,
-    Büttcher & Clarke min-dist^2 accumulation): adjacent query-term
-    pairs contribute 10^6 div d^2 with d the minimum token gap between
-    any two occurrences, summed exactly in integers.  The Spark side
-    computes the min-gap ROW-LOCAL from the words array (nested
-    integer folds, no positional self-join shuffle); the oracle derives
-    the same minima from an exploded positional index and a pair join
-    — two independent plans, one answer."""
-    from biothings_crawler_spark.operators.serving import proximity_topk
-
-    d = _t(spark, sf_dir, "documents")
-    return proximity_topk(d, "doc_id", "text", PROX_TERMS, k=25)
-
-
-SQL_PROXIMITY_TOPK = f"""
-WITH w AS (SELECT doc_id AS id, {_SQL_WORDS} AS words FROM documents),
-p AS (SELECT id, CAST(r.i AS BIGINT) AS i, words[i] AS term
-      FROM w, unnest(range(1, len(words) + 1)) AS r(i)),
-pair0 AS (SELECT a.id, MIN(ABS(a.i - b.i)) AS d
-          FROM p a JOIN p b ON a.id = b.id
-          WHERE a.term = '{{t0}}' AND b.term = '{{t1}}'
-          GROUP BY a.id),
-pair1 AS (SELECT a.id, MIN(ABS(a.i - b.i)) AS d
-          FROM p a JOIN p b ON a.id = b.id
-          WHERE a.term = '{{t1}}' AND b.term = '{{t2}}'
-          GROUP BY a.id),
-s AS (SELECT COALESCE(p0.id, p1.id) AS id,
-             COALESCE(1000000 // (p0.d * p0.d), 0)
-             + COALESCE(1000000 // (p1.d * p1.d), 0) AS prox
-      FROM pair0 p0 FULL OUTER JOIN pair1 p1 ON p0.id = p1.id)
-SELECT id, CAST(prox AS BIGINT) AS prox
-FROM s WHERE prox > 0
-ORDER BY prox DESC, id
-LIMIT 25
-""".format(t0=PROX_TERMS[0], t1=PROX_TERMS[1], t2=PROX_TERMS[2])
 
 
 def _soft404_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13244,42 +11974,6 @@ FROM nn, agg, rc, mo, mi
 SQL_GRAPH_CENSUS = _sql_graph_census()
 
 
-SPELL_TERMS = ["scann", "colum", "joln", "spark", "zzzzqq"]
-
-
-def q_spell_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Did-you-mean suggestions (operators/serving.spell_suggest,
-    FastSS deletion-neighborhood index — Bocek et al. 2007) for five
-    query terms against the corpus vocabulary: one exact term, three
-    edit-distance-1 misspellings (insertion / deletion /
-    substitution), one no-match control.  The oracle re-derives the
-    suggestions INDEPENDENTLY by brute force: DuckDB cross-joins the
-    query terms with the full vocabulary and keeps levenshtein <= 1 —
-    exhaustive truth, so the banded index's recall is checked too."""
-    from biothings_crawler_spark.operators.serving import spell_suggest
-
-    return spell_suggest(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", SPELL_TERMS, k=5)
-
-
-SQL_SPELL_SUGGEST = f"""
-WITH w AS (
-  SELECT DISTINCT id, term
-  FROM (SELECT doc_id AS id, unnest({_SQL_WORDS}) AS term FROM documents)),
-v AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS term_df FROM w GROUP BY term),
-q AS (SELECT unnest(['scann', 'colum', 'joln', 'spark', 'zzzzqq']) AS q),
-cand AS (
-  SELECT q, term AS suggestion,
-         CAST(levenshtein(q, term) AS BIGINT) AS dist, term_df
-  FROM q, v WHERE levenshtein(q, term) <= 1),
-r AS (SELECT *, row_number()
-        OVER (PARTITION BY q ORDER BY dist, term_df DESC, suggestion) AS rn
-      FROM cand)
-SELECT q, suggestion, dist, term_df, CAST(rn AS BIGINT) AS rank
-FROM r WHERE rn <= 5
-"""
-
-
 def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (operators/pagerank.degree_assortativity,
     Newman PRL 2002) of the hub graph — exact ppm: undirected
@@ -13349,39 +12043,6 @@ k AS (SELECT CAST(q_ppm AS BIGINT) AS q_ppm, n,
 s AS (SELECT x, row_number() OVER (ORDER BY x) AS r FROM v)
 SELECT k.q_ppm, k.n, k.rank, CAST(s.x AS BIGINT) AS value
 FROM k JOIN s ON s.r = k.rank
-"""
-
-
-AUTOCOMPLETE_PREFIXES = ["s", "ta", "w", "zzz"]
-
-
-def q_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search-box prefix completion (operators/serving.autocomplete,
-    most-popular-completion): top-5 vocabulary completions per prefix
-    by document frequency.  Prefix list broadcasts into a startswith
-    theta-join against the vocab hash agg; per-prefix top-k is a
-    WindowGroupLimit.  Oracle = LIKE prefix match + QUALIFY in SQL."""
-    from biothings_crawler_spark.operators.serving import autocomplete
-
-    return autocomplete(
-        _t(spark, sf_dir, "documents"), "doc_id", "text",
-        AUTOCOMPLETE_PREFIXES, k=5)
-
-
-SQL_AUTOCOMPLETE = f"""
-WITH w AS (
-  SELECT DISTINCT id, term
-  FROM (SELECT doc_id AS id, unnest({_SQL_WORDS}) AS term FROM documents)),
-v AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS term_df FROM w GROUP BY term),
-p AS (SELECT unnest(['s', 'ta', 'w', 'zzz']) AS prefix),
-cand AS (
-  SELECT prefix, term AS completion, term_df
-  FROM v JOIN p ON v.term LIKE p.prefix || '%'),
-r AS (SELECT *, row_number() OVER (
-        PARTITION BY prefix ORDER BY term_df DESC, completion) AS rn
-      FROM cand)
-SELECT prefix, completion, term_df, CAST(rn AS BIGINT) AS rank
-FROM r WHERE rn <= 5
 """
 
 
@@ -14336,7 +12997,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_trending_terms": q_trending_terms,
     "q_anchor_summary": q_anchor_summary,
     "q_anchor_field": q_anchor_field,
-    "q_autocomplete": q_autocomplete,
     "q_exact_quantiles": q_exact_quantiles,
     "q_assortativity": q_assortativity,
     "q_effective_diameter": q_effective_diameter,
@@ -14345,7 +13005,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_cusum_drift": q_cusum_drift,
     "q_spam_mass": q_spam_mass,
     "q_clustering_coeff": q_clustering_coeff,
-    "q_spell_suggest": q_spell_suggest,
     "q_modularity": q_modularity,
     "q_soft404_probe": q_soft404_probe,
     "q_ip_politeness": q_ip_politeness,
@@ -14380,15 +13039,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_host_triangles": q_host_triangles,
     "q_microdata_extract": q_microdata_extract,
     "q_compaction_plan": q_compaction_plan,
-    "q_license_detect": q_license_detect,
     "q_epoch_alloc": q_epoch_alloc,
-    "q_proximity_topk": q_proximity_topk,
     "q_sitemap_render": q_sitemap_render,
     "q_ngram_novelty": q_ngram_novelty,
     "q_release_manifest": q_release_manifest,
     "q_scc_census": q_scc_census,
     "q_robots_render": q_robots_render,
-    "q_calibration": q_calibration,
     "q_manifest_diff": q_manifest_diff,
     "q_host_boilerplate": q_host_boilerplate,
     "q_homograph_hosts": q_homograph_hosts,
@@ -14396,20 +13052,15 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_html_tables": q_html_tables,
     "q_pagination_chains": q_pagination_chains,
     "q_js_required": q_js_required,
-    "q_query_parse": q_query_parse,
-    "q_word_segment": q_word_segment,
     "q_feed_render": q_feed_render,
     "q_refs_strip": q_refs_strip,
     "q_depth_yield": q_depth_yield,
     "q_rendezvous_assign": q_rendezvous_assign,
     "q_meta_refresh": q_meta_refresh,
-    "q_cloaking_hosts": q_cloaking_hosts,
     "q_idn_decode": q_idn_decode,
-    "q_pairwise_auc": q_pairwise_auc,
     "q_label_agreement": q_label_agreement,
     "q_rdfa_extract": q_rdfa_extract,
     "q_sitemap_scope": q_sitemap_scope,
-    "q_survival_ledger": q_survival_ledger,
     "q_event_transitions": q_event_transitions,
     "q_lexicon_filter": q_lexicon_filter,
     "q_schema_drift": q_schema_drift,
@@ -14419,14 +13070,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_url_templates": q_url_templates,
     "q_seed_distance": q_seed_distance,
     "q_host_communities": q_host_communities,
-    "q_phrase_topk": q_phrase_topk,
-    "q_snippets": q_snippets,
     "q_waterfill_budget": q_waterfill_budget,
     "q_payload_pipeline": q_payload_pipeline,
     "q_typosquat_pairs": q_typosquat_pairs,
-    "q_delta_storage": q_delta_storage,
     "q_zorder_key": q_zorder_key,
-    "q_cdc_chunks": q_cdc_chunks,
     "q_gzip_decode": q_gzip_decode,
     "q_chunked_decode": q_chunked_decode,
     "q_nfc_normalize": q_nfc_normalize,
@@ -14482,7 +13129,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_main_content": q_main_content,
     "q_url_history": q_url_history,
     "q_link_farm": q_link_farm,
-    "q_corpus_datasheet": q_corpus_datasheet,
     "q_crawl_traps": q_crawl_traps,
     "q_host_skew": q_host_skew,
     "q_anchor_text": q_anchor_text,
@@ -14492,8 +13138,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_neardup_clusters": q_neardup_clusters,
     "q_tokenizer_model": q_tokenizer_model,
     "q_crawl_refetch_round": q_crawl_refetch_round,
-    "q_pii_scrub": q_pii_scrub,
-    "q_web_refine": q_web_refine,
     "q_sessionize": q_sessionize,
     "q_aimd_rates": q_aimd_rates,
     "q_soft404": q_soft404,
@@ -14504,7 +13148,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_bigram_coverage": q_bigram_coverage,
     "q_snapshot_diff": q_snapshot_diff,
     "q_refetch_round": q_refetch_round,
-    "q_clean_corpus": q_clean_corpus,
     "q_redirect_trace": q_redirect_trace,
     "q_reindex_conflicts": q_reindex_conflicts,
     "q_existence_sample": q_existence_sample,
@@ -14512,7 +13155,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q_discovery_dump": q_discovery_dump,
     "q_mainentity_unwrap": q_mainentity_unwrap,
     "q_repetition_stats": q_repetition_stats,
-    "q_decontamination": q_decontamination,
     "q_html_to_text": q_html_to_text,
     "q_mixture_sample": q_mixture_sample,
     "q_doc_chunks": q_doc_chunks,
@@ -14585,8 +13227,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # TPC-H revenue queries, the text-modelling pairs (LM, BPE, Naive Bayes,
 # TextTiling, bitext alignment), the vector and training-data pairs
 # (k-means, PQ, ANN, corpus statistics, chunking, packing, ExactSubstr,
-# TextRank) and the BM25, PRF and sharding pairs have since been deleted;
-# the full-registry oracle run (scripts/compare_oracle.py) covers every
+# TextRank), the BM25, PRF and sharding pairs, the query-serving pairs and
+# the training-data quality pairs (PII, decontamination, licence,
+# datasheet, cloaking, CDC, corpus cleaning) have since been deleted; the
+# full-registry oracle run (scripts/compare_oracle.py) covers every
 # surviving entry.
 _GATE_FIRST: list[str] = [
     # queries over operators rewritten this round (stale green rows)
@@ -14595,7 +13239,7 @@ _GATE_FIRST: list[str] = [
     "q_bowtie", "q_scc_census", "q_pagerank", "q_trustrank", "q_hits",
     "q_salsa", "q_host_communities", "q_ppr_push", "q_spam_mass",
     "q_pagerank_incremental", "q_random_walks", "q_minhash_lsh",
-    "q_incremental_neardup", "q_neardup_clusters", "q_clean_corpus",
+    "q_incremental_neardup", "q_neardup_clusters",
     "q_ngram_novelty", "q_politeness_quota", "q_ip_politeness",
     "q_site_families",
     "q_modularity", "q_priority_fusion", "q_frontier_aging",
@@ -14603,7 +13247,7 @@ _GATE_FIRST: list[str] = [
     # VERDICT r5's named never-gated queries
     "q_ai_optout", "q_erasure_impact",
     # further never-gated entries (toward the 229/344 union target)
-    "q_containment_pairs", "q_cdc_chunks", "q_c4_filter",
+    "q_containment_pairs", "q_c4_filter",
     "q_archive_roundtrip", "q_crawl_admission",
 ]
 QUERIES = {
@@ -14640,7 +13284,6 @@ ORACLES: dict[str, str] = {
     "q_hll_by_host": SQL_HLL_BY_HOST,
     "q_priority_fusion": SQL_PRIORITY_FUSION,
     "q_graph_census": SQL_GRAPH_CENSUS,
-    "q_spell_suggest": SQL_SPELL_SUGGEST,
     "q_clustering_coeff": SQL_CLUSTERING_COEFF,
     "q_ktruss": SQL_KTRUSS,
     "q_hilbert_key": SQL_HILBERT_KEY,
@@ -14650,7 +13293,6 @@ ORACLES: dict[str, str] = {
     "q_trending_terms": SQL_TRENDING_TERMS,
     "q_anchor_summary": SQL_ANCHOR_SUMMARY,
     "q_anchor_field": SQL_ANCHOR_FIELD,
-    "q_autocomplete": SQL_AUTOCOMPLETE,
     "q_exact_quantiles": SQL_EXACT_QUANTILES,
     "q_assortativity": SQL_ASSORTATIVITY,
     "q_effective_diameter": SQL_EFFECTIVE_DIAMETER,
@@ -14673,15 +13315,12 @@ ORACLES: dict[str, str] = {
     "q_host_triangles": SQL_HOST_TRIANGLES,
     "q_microdata_extract": SQL_MICRODATA_EXTRACT,
     "q_compaction_plan": SQL_COMPACTION_PLAN,
-    "q_license_detect": SQL_LICENSE_DETECT,
     "q_epoch_alloc": SQL_EPOCH_ALLOC,
-    "q_proximity_topk": SQL_PROXIMITY_TOPK,
     "q_sitemap_render": SQL_SITEMAP_RENDER,
     "q_ngram_novelty": SQL_NGRAM_NOVELTY,
     "q_release_manifest": SQL_RELEASE_MANIFEST,
     "q_scc_census": SQL_SCC_CENSUS,
     "q_robots_render": SQL_ROBOTS_RENDER,
-    "q_calibration": SQL_CALIBRATION,
     "q_manifest_diff": SQL_MANIFEST_DIFF,
     "q_host_boilerplate": SQL_HOST_BOILERPLATE,
     "q_homograph_hosts": SQL_HOMOGRAPH_HOSTS,
@@ -14689,20 +13328,15 @@ ORACLES: dict[str, str] = {
     "q_html_tables": SQL_HTML_TABLES,
     "q_pagination_chains": SQL_PAGINATION_CHAINS,
     "q_js_required": SQL_JS_REQUIRED,
-    "q_query_parse": SQL_QUERY_PARSE,
-    "q_word_segment": SQL_WORD_SEGMENT,
     "q_feed_render": SQL_FEED_RENDER,
     "q_refs_strip": SQL_REFS_STRIP,
     "q_depth_yield": SQL_DEPTH_YIELD,
     "q_rendezvous_assign": SQL_RENDEZVOUS_ASSIGN,
     "q_meta_refresh": SQL_META_REFRESH,
-    "q_cloaking_hosts": SQL_CLOAKING_HOSTS,
     "q_idn_decode": SQL_IDN_DECODE,
-    "q_pairwise_auc": SQL_PAIRWISE_AUC,
     "q_label_agreement": SQL_LABEL_AGREEMENT,
     "q_rdfa_extract": SQL_RDFA_EXTRACT,
     "q_sitemap_scope": SQL_SITEMAP_SCOPE,
-    "q_survival_ledger": SQL_SURVIVAL_LEDGER,
     "q_event_transitions": SQL_EVENT_TRANSITIONS,
     "q_lexicon_filter": SQL_LEXICON_FILTER,
     "q_schema_drift": SQL_SCHEMA_DRIFT,
@@ -14712,8 +13346,6 @@ ORACLES: dict[str, str] = {
     "q_url_templates": SQL_URL_TEMPLATES,
     "q_seed_distance": SQL_SEED_DISTANCE,
     "q_host_communities": SQL_HOST_COMMUNITIES,
-    "q_phrase_topk": SQL_PHRASE_TOPK,
-    "q_snippets": SQL_SNIPPETS,
     "q_crawl_traps": SQL_CRAWL_TRAPS,
     "q_c4_filter": SQL_C4_FILTER,
     "q_hits": SQL_HITS,
@@ -14729,7 +13361,6 @@ ORACLES: dict[str, str] = {
     "q_main_content": SQL_MAIN_CONTENT,
     "q_url_history": SQL_URL_HISTORY,
     "q_link_farm": SQL_LINK_FARM,
-    "q_corpus_datasheet": SQL_CORPUS_DATASHEET,
     "q_host_skew": SQL_HOST_SKEW,
     "q_anchor_text": SQL_ANCHOR_TEXT,
     "q_warc_ingest": SQL_WARC_INGEST,
@@ -14800,19 +13431,15 @@ ORACLES: dict[str, str] = {
     "q_line_dedup": SQL_LINE_DEDUP,
     "q_neardup_clusters": SQL_NEARDUP_CLUSTERS,
     "q_winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
-    "q_clean_corpus": SQL_CLEAN_CORPUS,
     "q_redirect_trace": SQL_REDIRECT_TRACE,
     "q_reindex_conflicts": SQL_REINDEX_CONFLICTS,
     "q_existence_sample": SQL_EXISTENCE_SAMPLE,
     "q_sitemap_from_robots": SQL_SITEMAP_FROM_ROBOTS,
     "q_discovery_dump": SQL_DISCOVERY_DUMP,
     "q_mainentity_unwrap": SQL_MAINENTITY_UNWRAP,
-    "q_pii_scrub": SQL_PII_SCRUB,
     "q_repetition_stats": SQL_REPETITION_STATS,
-    "q_decontamination": SQL_DECONTAMINATION,
     "q_html_to_text": SQL_HTML_TO_TEXT,
     "q_mixture_sample": SQL_MIXTURE_SAMPLE,
-    "q_web_refine": SQL_WEB_REFINE,
     "q_doc_chunks": SQL_DOC_CHUNKS,
     "q_pagerank": SQL_PAGERANK,
     "q_domain_blocklist": SQL_DOMAIN_BLOCKLIST,
@@ -14854,9 +13481,7 @@ ORACLES: dict[str, str] = {
     "q_nfc_normalize": SQL_NFC_NORMALIZE,
     "q_chunked_decode": SQL_CHUNKED_DECODE,
     "q_gzip_decode": SQL_GZIP_DECODE,
-    "q_cdc_chunks": SQL_CDC_CHUNKS,
     "q_zorder_key": SQL_ZORDER_KEY,
-    "q_delta_storage": SQL_DELTA_STORAGE,
     "q_typosquat_pairs": SQL_TYPOSQUAT_PAIRS,
     "q_payload_pipeline": SQL_PAYLOAD_PIPELINE,
     "q_waterfill_budget": SQL_WATERFILL_BUDGET,

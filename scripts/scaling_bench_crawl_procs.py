@@ -3,9 +3,8 @@ round-5 review's ask: the thread-based local[2]→local[8] harness
 (scripts/scaling_bench.py) punishes sort-bearing plans with
 single-JVM heap/GC contention that a real cluster does not have
 (executors are separate JVMs).  This harness measures the same
-crawl-scheduling plane the way scripts/scaling_bench_webtext.py
-already measures the web-text plane: one 1-core JVM (N) vs four
-CONCURRENT 1-core JVMs (4N), aggregate throughput ratio.
+crawl-scheduling plane as one 1-core JVM (N) vs four CONCURRENT
+1-core JVMs (4N), aggregate throughput ratio.
 
 The job per executor is the scheduling plane of one BFS round over
 URLs synthesized from lineitem (x REPLICAS): canonicalize -> xxhash64

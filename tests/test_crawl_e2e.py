@@ -78,6 +78,27 @@ def test_engine_matches_oracle(spark, full_crawl, oracle_result):
     assert engine_seen == oracle_result.seen
 
 
+def test_engine_without_policies_matches_oracle(spark, tmp_path):
+    """An empty policy list (what the jobs pass for parquet inputs)
+    extracts every fetched page and follows no link: the simulator's
+    behaviour for a policy-less source."""
+    pages = {r["url"]: r["html"].decode("utf-8") for r in corpus.gen_pages(N)}
+    exp = simulate_crawl(
+        pages, corpus.gen_seeds(N), corpus.gen_robots(), {"web": {}}, CFG
+    )
+    run_crawl(spark, corpus.pages_df(spark, N), corpus.seeds_df(spark, N),
+              corpus.robots_df(spark), [], str(tmp_path), CFG)
+    sched, docs, _ = _engine_tables(spark, tmp_path)
+    assert sorted(
+        (r["round"], r["host"], r["sched_rank"], r["url_canon"])
+        for r in sched.select("round", "host", "sched_rank", "url_canon").collect()
+    ) == sorted(exp.ordering)
+    assert exp.docs and sorted(
+        (r["round"], r["url_canon"], r["doc_json"])
+        for r in docs.select("round", "url_canon", "doc_json").collect()
+    ) == sorted(exp.docs)
+
+
 def test_page_texts_byte_identical_to_corpus_golden(spark, full_crawl):
     _, _, texts = _engine_tables(spark, full_crawl[1])
     golden = {r["url"]: r["text"] for r in corpus.gen_pages(N)}

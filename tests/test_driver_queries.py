@@ -30,10 +30,8 @@ FAST = [
     "q_host_budgets",
     "q_incremental_round",
     "q_upload_dataset_envelope",
-    "q_pii_scrub",
     "q_html_to_text",
     "q_mixture_sample",
-    "q_web_refine",
 ]
 
 

@@ -409,129 +409,9 @@ def test_latest_snapshot_picks_newest_no_window(spark):
     assert "Window [" not in plan and "partial_max" in plan
 
 
-def test_clean_corpus_each_stage_bites(spark):
-    """One planted casualty per pipeline stage: non-English dropped,
-    low-quality dropped, exact dup dropped, near-dup dropped (min id
-    survives), boilerplate line stripped from every survivor."""
-    from biothings_crawler_spark.plans.pipeline import clean_corpus
-
-    base = ("the data analysis of spark queries is done for the "
-            "research group with data quality in mind")
-    footer = "COMMON BOILERPLATE FOOTER LINE"
-
-    def tail(i):  # unique 30-word tail keeps pairwise jaccard low
-        return " ".join(f"w{i}x{j}" for j in range(30))
-
-    rows = [(i, f"{base} {tail(i)}\n{footer}") for i in range(12)]
-    rows += [
-        (100, rows[0][1]),                                   # exact dup of 0
-        (101, rows[1][1].replace("w1x7", "w1zz")),           # near dup of 1
-        (102, "der schnelle braune fuchs springt über den faulen hund "
-              "und die daten sind für das haus mit dem mann\n" + footer),  # de
-        (103, "x y\n" + footer),                              # too short: quality
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    out = {r["id"]: r for r in
-           clean_corpus(df, "id", "text", jaccard=0.7, max_line_occ=10).collect()}
-
-    assert set(out) == set(range(12))          # 100-103 all dropped
-    assert all(footer not in out[i]["clean_text"] for i in out)  # >10 docs -> stripped
-    assert all(out[i]["n_removed"] == 1 for i in out)
-    assert all(out[i]["n_tokens"] > 0 for i in out)
-
-
 # ---------------------------------------------------------------------------
-# PII scrub / repetition stats / decontamination
+# repetition stats / mixture sampling
 # ---------------------------------------------------------------------------
-
-
-def test_pii_scrub_redacts_and_counts(spark):
-    from biothings_crawler_spark.operators.pii import pii_scrub
-
-    df = spark.createDataFrame(
-        [
-            (1, "mail me at jane.doe+x@lab.example.org today"),
-            (2, "server 192.168.001.12 and backup 10.0.0.1 up"),
-            (3, "call 555-123-4567 or 555 987 6543 now"),
-            (4, "no pii here at all"),
-            (5, None),
-        ],
-        "id long, text string",
-    )
-    out = {r["id"]: r for r in pii_scrub(df, "id", "text").collect()}
-    assert out[1]["n_emails"] == 1 and "<EMAIL>" in out[1]["clean_text"]
-    assert "jane" not in out[1]["clean_text"]
-    assert out[2]["n_ipv4"] == 2 and out[2]["clean_text"].count("<IP>") == 2
-    assert out[3]["n_phones"] == 2 and out[3]["clean_text"].count("<PHONE>") == 2
-    assert out[4]["n_emails"] == out[4]["n_ipv4"] == out[4]["n_phones"] == 0
-    assert out[4]["clean_text"] == "no pii here at all"
-    # null text survives as null, not a crash (ADVICE round-1 lesson)
-    assert out[5]["clean_text"] is None
-
-
-def test_pii_card_luhn_counts_valid_redacts_all_shapes(spark):
-    """Luhn gate: only valid card numbers COUNT; all card-shaped runs
-    are REDACTED (conservative over-masking, documented asymmetry).
-    Covers the three shapes (plain/dashed/spaced) and a 17-digit run
-    that must not match at all (word-boundary anchoring)."""
-    from biothings_crawler_spark.operators.pii import pii_scrub
-
-    df = spark.createDataFrame(
-        [
-            (1, "pay 4111-1111-1111-1111 now"),        # valid, dashed
-            (2, "pay 4111 1111 1111 1112 now"),        # invalid, spaced
-            (3, "pay 5500005555555559 now"),           # valid, plain
-            (4, "order 41111111111111111 ships"),      # 17 digits: no match
-            (5, "call 555-123-4567 re 4111111111111111"),  # phone + card
-        ],
-        "id long, text string",
-    )
-    out = {r["id"]: r for r in pii_scrub(df, "id", "text").collect()}
-    assert out[1]["n_cards"] == 1 and out[1]["clean_text"] == "pay <CARD> now"
-    assert out[2]["n_cards"] == 0 and out[2]["clean_text"] == "pay <CARD> now"
-    assert out[3]["n_cards"] == 1 and out[3]["clean_text"] == "pay <CARD> now"
-    assert out[4]["n_cards"] == 0 and "41111111111111111" in out[4]["clean_text"]
-    assert out[5]["n_cards"] == 1 and out[5]["n_phones"] == 1
-    assert out[5]["clean_text"] == "call <PHONE> re <CARD>"
-
-
-def test_pii_ssn_and_iban(spark):
-    """SSN shape counts and redacts (3-2-4, disjoint from the 3-3-4
-    phone shape); IBAN mod-97 gate: only checksum-valid IBANs COUNT,
-    all IBAN-shaped runs are REDACTED (same asymmetry as cards)."""
-    from biothings_crawler_spark.operators.pii import pii_scrub
-
-    df = spark.createDataFrame(
-        [
-            (1, "ssn 078-05-1120 on file"),
-            (2, "call 555-123-4567 ssn 078-05-1120"),      # phone != ssn
-            (3, "iban DE89370400440532013000 ok"),          # valid
-            (4, "acct DE00370400440532013000 bad"),         # invalid check
-            (5, "gb GB82WEST12345698765432 ok"),            # valid, GB
-            (6, "code DE8937040044053201300 short"),        # 21 chars: still shaped
-        ],
-        "id long, text string",
-    )
-    out = {r["id"]: r for r in pii_scrub(df, "id", "text").collect()}
-    assert out[1]["n_ssns"] == 1 and out[1]["clean_text"] == "ssn <SSN> on file"
-    assert out[2]["n_ssns"] == 1 and out[2]["n_phones"] == 1
-    assert out[2]["clean_text"] == "call <PHONE> ssn <SSN>"
-    assert out[3]["n_ibans"] == 1 and out[3]["clean_text"] == "iban <IBAN> ok"
-    assert out[4]["n_ibans"] == 0 and out[4]["clean_text"] == "acct <IBAN> bad"
-    assert out[5]["n_ibans"] == 1 and out[5]["clean_text"] == "gb <IBAN> ok"
-    # 21-char run is inside the 15-34 shape window: redacted, but the
-    # truncated check digits no longer validate -> not counted
-    assert out[6]["n_ibans"] == 0 and "<IBAN>" in out[6]["clean_text"]
-
-
-def test_pii_scrub_email_host_not_double_counted(spark):
-    from biothings_crawler_spark.operators.pii import pii_scrub
-
-    # the email is scrubbed first, so its digits can't count as an IP
-    df = spark.createDataFrame([(1, "x 1.2.3.4@example.com y")], "id long, text string")
-    row = pii_scrub(df, "id", "text").collect()[0]
-    assert row["n_emails"] == 1 and row["n_ipv4"] == 0
-    assert row["clean_text"] == "x <EMAIL> y"
 
 
 def test_repetition_stats_casualties(spark):
@@ -553,38 +433,6 @@ def test_repetition_stats_casualties(spark):
     assert out[3]["top_word_frac"] == pytest.approx(5 / 6)
     assert out[4]["dup_line_frac"] == 0.0
     assert out[4]["top_word_frac"] < 0.4
-
-
-def test_decontaminate_flags_leaked_doc(spark):
-    from biothings_crawler_spark.operators.contamination import decontaminate
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "completely different words appear in this clean document"),
-            (3, "short doc"),  # < n words -> zero grams
-        ],
-        "id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [("quick brown fox jumps over",)], "text string"
-    )
-    out = {r["id"]: r for r in decontaminate(docs, bench, "id", "text", n=5).collect()}
-    assert out[1]["contaminated"] and out[1]["n_hits"] == 1
-    assert not out[2]["contaminated"] and out[2]["n_hits"] == 0
-    assert out[3]["n_grams"] == 0 and not out[3]["contaminated"]
-
-
-def test_decontaminate_plan_broadcasts_bench(spark):
-    from biothings_crawler_spark.operators.contamination import decontaminate
-
-    docs = spark.range(20).select(
-        F.col("id"), F.lit("one two three four five six seven").alias("text")
-    )
-    bench = spark.createDataFrame([("one two three four five",)], "text string")
-    plan = decontaminate(docs, bench, "id", "text", n=5)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_mixture_sample_rates_and_determinism(spark):
@@ -628,28 +476,6 @@ def test_mixture_sample_rejects_bad_rate(spark):
     df = spark.range(5).select(F.col("id"), F.lit("s").alias("src"))
     with pytest.raises(ValueError):
         mixture_sample(df, "id", "src", {"s": 1.5})
-
-
-def test_web_refine_stages_fire(spark):
-    """Composed web-refine pipeline: every stage must have a casualty
-    at sf0.001 — emails scrubbed, spam-list docs dropped by the
-    repetition filter, sampling strictly between 0 and the survivors."""
-    from biothings_crawler_spark.plans.driver_queries import q_web_refine
-
-    rows = q_web_refine(spark, "/root/testdata/sf0.001").collect()
-    ids = {r["id"] for r in rows}
-    assert 0 < len(rows)
-    # id%9==0 docs carry the 6-item spam list -> dup_line_frac > 0.3
-    assert not any(i % 9 == 0 for i in ids)
-    # the mixture-sampling stage must itself drop some survivors
-    # (every non-spam doc passes the repetition filter on this fixture)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    n_total = docs.count()
-    n_spam = docs.filter("doc_id % 9 = 0").count()
-    assert len(rows) < n_total - n_spam
-    # scrubbed docs report their email and the text is redacted
-    emailed = [r for r in rows if r["id"] % 3 == 0]
-    assert emailed and all(r["n_emails"] == 1 for r in emailed)
 
 
 def test_chunk_documents_boundaries(spark):
@@ -1001,47 +827,6 @@ def test_tokenizer_model_hook_matches_expression(spark):
 
     plan = T.tokenizer_model(docs, "text")._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-
-
-# --- corpus datasheet (operators/datasheet.corpus_datasheet) -----------------
-
-
-def test_corpus_datasheet_hand_case(spark):
-    from biothings_crawler_spark.operators.datasheet import corpus_datasheet
-
-    docs = spark.createDataFrame(
-        [
-            ("en", "web", "one two three"),          # 3 tokens, 13 chars, short
-            ("en", "web", "x " * 150),               # 150 tokens, 300 chars
-            ("en", "books", "a b"),                  # 2 tokens, short
-            ("de", "web", "ein zwei"),               # 2 tokens, short
-        ],
-        "lang string, source string, text string",
-    )
-    out = {
-        (r.lang, r.source): r
-        for r in corpus_datasheet(docs, short_chars=200).collect()
-    }
-    ew = out[("en", "web")]
-    assert ew.n_docs == 2 and ew.share_ppm == 500_000
-    assert ew.total_tokens == 153
-    assert ew.avg_tokens_ppm == 153 * 1_000_000 // 2
-    assert ew.total_chars == 313 and ew.short_docs_ppm == 500_000
-    assert out[("en", "books")].short_docs_ppm == 1_000_000
-    assert out[("de", "web")].share_ppm == 250_000
-
-
-def test_corpus_datasheet_plan_is_single_agg_plus_broadcast(spark):
-    from biothings_crawler_spark.operators.datasheet import corpus_datasheet
-
-    docs = spark.createDataFrame(
-        [("en", "web", "hello")], "lang string, source string, text string"
-    )
-    plan = (
-        corpus_datasheet(docs)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BatchEvalPython" not in plan and "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 # --- C4 quality filter (operators/text.c4_quality_filter) --------------------
@@ -1816,49 +1601,6 @@ def test_sessionize_fold_property_random_events(spark):
         assert a == b
 
     check()
-
-
-def test_survival_attribution_first_kill_order(spark):
-    from biothings_crawler_spark.operators.datasheet import (
-        survival_attribution,
-    )
-
-    long = "w " * 30
-    docs = [
-        # src A: survivor + exact dup of it (dup killed, not winner)
-        (1, "en", "A", long + "alpha"),
-        (2, "en", "A", long + "alpha"),
-        # src A: wrong lang AND would-be dup -> charged to lang
-        (3, "zh", "A", long + "alpha"),
-        # src B: too short -> quality
-        (4, "en", "B", "tiny doc"),
-        # src B: duplicate of a QUALITY-KILLED text must NOT count as
-        # dup (no eligible winner besides itself)
-        (5, "en", "B", long + "beta"),
-        (6, "en", "B", long + "beta"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, lang string, "
-                                     "source string, text string")
-    got = {r["source"]: r for r in survival_attribution(
-        df, min_words=10).collect()}
-    a, b = got["A"], got["B"]
-    assert (a["n_docs"], a["killed_lang"], a["killed_dup"],
-            a["survived"]) == (3, 1, 1, 1)
-    assert a["killed_quality"] == 0
-    assert (b["n_docs"], b["killed_quality"], b["killed_dup"],
-            b["survived"]) == (3, 1, 1, 1)
-    # token ledger: survivors' tokens only
-    assert a["tokens_out"] == 31 and b["tokens_out"] == 31
-    assert b["survival_ppm"] == 31 * 1_000_000 // b["tokens_in"]
-    # NULL lang / NULL text are KILLS, not three-valued fall-throughs
-    # into 'ok' (review finding)
-    nulls = spark.createDataFrame(
-        [(1, None, "C", long + "x"), (2, "en", "C", None),
-         (3, "en", "C", long + "y")],
-        "doc_id long, lang string, source string, text string")
-    c = {r["source"]: r for r in survival_attribution(
-        nulls, min_words=10).collect()}["C"]
-    assert (c["killed_lang"], c["killed_quality"], c["survived"]) == (1, 1, 1)
 
 
 def test_event_transitions_census(spark):
