@@ -67,7 +67,6 @@ SUITE = [
     "q_js_required",
     "q_feed_render",
     "q_refs_strip",
-    "q_depth_yield",
     "q_rendezvous_assign",
     "q_meta_refresh",
     "q_idn_decode",
@@ -99,22 +98,14 @@ SUITE = [
     "q_tokenizer_fertility",
     "q_soft404_probe",
     "q_ip_politeness",
-    "q_opic",
     "q_hyperball",
     "q_harmonic_centrality",
-    "q_bowtie",
-    "q_random_walks",
     "q_theta_overlap",
-    "q_pagerank_incremental",
     "q_host_overlap",
-    "q_opic_greedy",
     "q_lang_smooth",
-    "q_salsa",
     "q_fetch_fairness",
     "q_robots_drift",
     "q_hll_by_host",
-    "q_priority_fusion",
-    "q_graph_census",
     "q_politeness_quota",
     "q_seen_antijoin",
     "q_frontier_dedup",
@@ -140,13 +131,11 @@ SUITE = [
     "q_asof_join",
     "q_range_join",
     "q_hypertable_rollup",
-    "q_pagerank",
     "q_crawl_traps",
     "q_anchor_text",
     "q_warc_ingest",
     "q_link_farm",
     "q_c4_filter",
-    "q_hits",
     "q_domain_scorecard",
     "q_robots_parse",
     "q_robots_enforce",
@@ -174,7 +163,6 @@ SUITE = [
     "q_token_budget",
     "q_incremental_neardup",
     "q_hist_merge",
-    "q_trustrank",
     "q_surt_keys",
     "q_politeness_audit",
     "q_cdx_index",
@@ -205,7 +193,6 @@ SUITE = [
     "q_slo_burn",
     "q_ucb_recrawl",
     "q_hilbert_key",
-    "q_ktruss",
 ]
 
 

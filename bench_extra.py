@@ -4,9 +4,9 @@ materialization) AND with bench.py's count() methodology, and captures
 .explain("formatted") into plans/r06/.
 
 Usage:
-  python bench_extra.py q_site_families q_pagerank        # time + plan
-  python bench_extra.py --plan-only --tag before q_pagerank # just plans
-  python bench_extra.py --top N                           # N slowest from BENCH_LAST.json
+  python bench_extra.py q_site_families q_frontier_dedup          # time + plan
+  python bench_extra.py --plan-only --tag before q_frontier_dedup # just plans
+  python bench_extra.py --top N                                   # N slowest from BENCH_LAST.json
 
 This file is NOT part of the frozen measurement surface (bench.py is);
 its numbers are cited in OPTIMIZATION_r06.md as isolation evidence.

@@ -22,7 +22,7 @@ and 4N-core runs build identical frontiers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biothings_crawler_spark.urlnorm import canonicalize_col, host_col
@@ -253,61 +253,3 @@ def greedy_seed_cover(cov: DataFrame, k: int) -> DataFrame:
         out = out.unionByName(p)
     return out
 
-
-def fuse_priority(
-    authority: DataFrame,
-    staleness: DataFrame,
-    relevance: DataFrame,
-    w_auth: int = 40,
-    w_stale: int = 30,
-    w_rel: int = 30,
-) -> DataFrame:
-    """The frontier SCORING FUNCTION: fuse the three priority planes —
-    link authority (pagerank/trustrank micro-units), refresh pressure
-    (staleness seconds from the recrawl model), topical relevance
-    (ppm) — into one integer priority the politeness window orders by.
-    The reference's scheduler is FIFO; a production frontier ranks by
-    exactly this kind of weighted fusion (authority says WHAT matters,
-    staleness says WHEN, relevance says WHETHER it is on-mission).
-
-    Inputs are (url_canon, score) frames; a URL missing from a plane
-    contributes 0 there. Each plane is normalized to its corpus max in
-    exact ppm (x * 10^6 div max, via a 1-row broadcast maxima join —
-    no sort, no quantiles), then fused = Σ w_i * norm_i div Σ w_i and
-    priority = 10^6 - fused (ascending = first, matching
-    politeness.ORDER_COLS). Two outer equi-joins on url_canon + one
-    broadcast row; everything integer, so the schedule is exact and
-    width-invariant."""
-    a = authority.select("url_canon", F.col(authority.columns[1]).alias("a"))
-    s = staleness.select("url_canon", F.col(staleness.columns[1]).alias("s"))
-    r = relevance.select("url_canon", F.col(relevance.columns[1]).alias("r"))
-    j = (
-        a.join(s, "url_canon", "full_outer")
-        .join(r, "url_canon", "full_outer")
-        .select(
-            "url_canon",
-            F.coalesce("a", F.lit(0)).cast("long").alias("a"),
-            F.coalesce("s", F.lit(0)).cast("long").alias("s"),
-            F.coalesce("r", F.lit(0)).cast("long").alias("r"),
-        )
-    )
-    maxima = j.agg(
-        F.greatest(F.max("a"), F.lit(1)).alias("ma"),
-        F.greatest(F.max("s"), F.lit(1)).alias("ms"),
-        F.greatest(F.max("r"), F.lit(1)).alias("mr"),
-    )
-    wsum = w_auth + w_stale + w_rel
-    out = j.join(F.broadcast(maxima))
-    # micro-unit scores x 10^6 can pass 2^63: normalize through
-    # DECIMAL(38,0) (HUGEINT in the twin), div back to BIGINT ppm
-    fused = F.expr(
-        f"({w_auth} * (cast(a as decimal(38,0)) * 1000000 div ma)"
-        f" + {w_stale} * (cast(s as decimal(38,0)) * 1000000 div ms)"
-        f" + {w_rel} * (cast(r as decimal(38,0)) * 1000000 div mr))"
-        f" div {wsum}"
-    )
-    return out.select(
-        "url_canon",
-        fused.cast("long").alias("fused_ppm"),
-        (F.lit(1000000) - fused).cast("long").alias("priority"),
-    )

@@ -59,7 +59,7 @@ from biothings_crawler_spark.operators.seen import build_segments, filter_unseen
 from biothings_crawler_spark.oracle.bfs import CrawlConfig
 from biothings_crawler_spark.urlnorm import canonicalize_col, domain_key_col, host_col
 
-__all__ = ["CrawlConfig", "run_crawl", "run_refetch"]
+__all__ = ["CrawlConfig", "run_crawl", "run_refetch", "scheduled_seed_router"]
 
 
 def _per_source(policies: list[dict], key: str, default, value=F.lit):
@@ -128,6 +128,31 @@ def run_refetch(
     seeds = seed_router(qc)
     pol = [dict(p, follow=False) for p in policies]
     return run_crawl(spark, new_pages, seeds, robots, pol, checkpoint_dir, cfg)
+
+
+def scheduled_seed_router(prev_checkpoint: str):
+    """Seed router for ``run_refetch`` that needs no host rules: each
+    queued URL keeps the ``source`` and ``parser`` the previous crawl
+    (``prev_checkpoint``) scheduled it under, so real snapshots route
+    exactly like the crawl that fetched them. ``scheduled`` holds each
+    url_canon once and the queue is already semi-joined to it, so the
+    equi-join is 1:1. Like ``corpus.fixture_seed_router``, every seed
+    gets seed_id "refetch" and priority 0."""
+
+    def route(queue: DataFrame) -> DataFrame:
+        sched = ParquetManifestCatalog(prev_checkpoint).read(
+            queue.sparkSession, "scheduled")
+        return queue.join(
+            sched.select("url_canon", "source", "parser"), "url_canon"
+        ).select(
+            F.lit("refetch").alias("seed_id"),
+            "url",
+            "source",
+            "parser",
+            F.lit(0).alias("priority"),
+        )
+
+    return route
 
 
 def run_crawl(

@@ -10,17 +10,18 @@ the reference's rescheduled Scrapy runs):
 
 Composition (plans/crawl.run_refetch): md5-content diff of the two
 page snapshots -> changed-only refetch queue -> semi-join against the
-previous crawl's scheduled table -> host-rule seed routing -> one
-crawl round over the NEW corpus with link-follow off, through
+previous crawl's scheduled table -> seed routing that keeps each URL's
+source and parser from that table (plans/crawl.scheduled_seed_router)
+-> one crawl round over the NEW corpus with link-follow off, through
 extraction and atomic commit. Re-running with the same --checkpoint
 resumes (a finished refetch is a no-op — pytest-pinned).
 
 With --fixture-n > 0 the deterministic synthetic corpus v1/v2 pair is
 used (smoke/demo mode; --prev-checkpoint must hold a committed crawl
 of the same fixture, e.g. from jobs/crawl_job.py --fixture-n).
-Without it, pass parquet paths and a seeds router is required at the
-library level — this CLI uses the fixture router only, so production
-callers compose run_refetch directly with their own routing rules.
+Without it, pass parquet paths. Both modes route the same way, so GEO
+table and mainEntity pages of a real crawl are re-extracted with the
+parser they were first fetched with.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import json
 from pyspark.sql import SparkSession
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--old-pages")
     ap.add_argument("--new-pages")
@@ -41,13 +42,14 @@ def main() -> None:
     ap.add_argument("--round-seconds", type=float, default=60.0)
     ap.add_argument("--fixture-n", type=int, default=0,
                     help="use the synthetic fixture corpus v1/v2 of this size")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
-    spark = SparkSession.builder.appName("biothings-crawler-refetch").getOrCreate()
 
+def refetch(spark: SparkSession, args: argparse.Namespace) -> dict:
+    """The refetch round *args* describe; returns run_refetch's summary."""
     from biothings_crawler_spark.fixtures import corpus
     from biothings_crawler_spark.oracle.bfs import CrawlConfig
-    from biothings_crawler_spark.plans.crawl import run_refetch
+    from biothings_crawler_spark.plans.crawl import run_refetch, scheduled_seed_router
 
     if args.fixture_n:
         old_pages = corpus.pages_df(spark, args.fixture_n)
@@ -65,11 +67,17 @@ def main() -> None:
         default_budget=args.default_budget,
         round_seconds=args.round_seconds,
     )
-    summary = run_refetch(
+    return run_refetch(
         spark, old_pages, new_pages, args.prev_checkpoint,
-        corpus.fixture_seed_router, robots, policies, args.checkpoint, cfg,
+        scheduled_seed_router(args.prev_checkpoint), robots, policies,
+        args.checkpoint, cfg,
     )
-    print(json.dumps(summary))
+
+
+def main() -> None:
+    args = parse_args()
+    spark = SparkSession.builder.appName("biothings-crawler-refetch").getOrCreate()
+    print(json.dumps(refetch(spark, args)))
     spark.stop()
 
 

@@ -194,3 +194,81 @@ def test_resume_identical_after_kill(spark, tmp_path, full_crawl):
         ra = sorted((tuple(r[c] for c in cols) for r in a.select(*cols).collect()), key=key)
         rb = sorted((tuple(r[c] for c in cols) for r in b.select(*cols).collect()), key=key)
         assert ra == rb, table
+
+
+def _refetch_job():
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "jobs" / "refetch_job.py"
+    spec = importlib.util.spec_from_file_location("refetch_job", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_refetch_job_fixture_docs_equal_golden(spark, tmp_path):
+    """jobs/refetch_job.py on the fixture (previous-crawl routing, no
+    host rules) re-extracts exactly the simulator's refetch docs."""
+    import duckdb
+
+    from biothings_crawler_spark.oracle import golden
+    from biothings_crawler_spark.plans.driver_queries import _run_fixture_crawl
+
+    job = _refetch_job()
+    prev = _run_fixture_crawl(spark).root
+    out = tmp_path / "refetch"
+    job.refetch(spark, job.parse_args([
+        "--prev-checkpoint", str(prev), "--checkpoint", str(out),
+        "--fixture-n", str(golden.CRAWL_N), "--default-budget",
+        str(golden.CRAWL_CFG["default_budget"]), "--round-seconds",
+        str(golden.CRAWL_CFG["round_seconds"]),
+    ]))
+    from biothings_crawler_spark.catalog import ParquetManifestCatalog
+
+    got = sorted(
+        (r["round"], r["url_canon"], r["doc_json"])
+        for r in ParquetManifestCatalog(str(out)).read(spark, "docs")
+        .select("round", "url_canon", "doc_json").collect()
+    )
+    want = sorted(map(tuple, duckdb.sql(
+        "SELECT round, url_canon, doc_json FROM "
+        f"read_parquet('{golden.paths()['refetch_docs']}')").fetchall()))
+    assert got == want and len(got) > 0
+
+
+def test_refetch_job_keeps_previous_parser_on_real_hosts(spark, tmp_path):
+    """A GEO page the previous crawl scheduled under a real (non-fixture)
+    host with parser geo_table is refetched with geo_table; the fixture's
+    host rules would route it to the jsonld default."""
+    from biothings_crawler_spark.catalog import ParquetManifestCatalog
+    from biothings_crawler_spark.functions.json_canon import canonical_json
+    from biothings_crawler_spark.urlnorm import canonicalize_url
+
+    url = "https://www.ncbi.nlm.nih.gov/geo/query/acc.cgi?acc=GSE5"
+    html = corpus.page_row(5, 100)["html"]  # an ncbi_geo fixture page
+    for name, body in (("v1", html), ("v2", html + b"<!-- rev2 -->")):
+        spark.createDataFrame([(url, body)], "url string, html binary") \
+            .write.parquet(str(tmp_path / name))
+    prev = ParquetManifestCatalog(str(tmp_path / "prev"))
+    prev.commit(0, {"scheduled": spark.createDataFrame(
+        [(canonicalize_url(url), "ncbi_geo", "geo_table")],
+        "url_canon string, source string, parser string")})
+
+    queue = spark.createDataFrame([(url, canonicalize_url(url))],
+                                  "url string, url_canon string")
+    assert corpus.fixture_seed_router(queue).first()["parser"] == "jsonld"
+
+    job = _refetch_job()
+    out = tmp_path / "refetch"
+    job.refetch(spark, job.parse_args([
+        "--old-pages", str(tmp_path / "v1"), "--new-pages", str(tmp_path / "v2"),
+        "--prev-checkpoint", str(prev.root), "--checkpoint", str(out),
+    ]))
+    cat = ParquetManifestCatalog(str(out))
+    sched = cat.read(spark, "scheduled").select("seed_id", "source", "parser").collect()
+    assert [tuple(r) for r in sched] == [("refetch", "ncbi_geo", "geo_table")]
+    want = sorted(canonical_json(it) for it in corpus.oracle_page_items(
+        "geo_table", (html + b"<!-- rev2 -->").decode("utf-8"), url))
+    got = sorted(r["doc_json"] for r in cat.read(spark, "docs").collect())
+    assert want and got == want

@@ -501,59 +501,6 @@ def test_chunk_documents_boundaries(spark):
         chunk_documents(df, "id", "text", chunk_tokens=8, overlap=8)
 
 
-def test_pagerank_hand_computed(spark):
-    from biothings_crawler_spark.operators.pagerank import pagerank
-
-    e = spark.createDataFrame([(1, 0), (2, 0), (2, 1)], "src long, dst long")
-    # scale=1e12, base=0.15e12; deg(1)=1, deg(2)=2
-    # iter1: r0=0.15e12+0.85e12+0.425e12, r1=0.15e12+0.425e12, r2=base
-    # iter2: r0=base+85*r1//100+85*r2//200, r1=base+85*r2//200
-    out = {r["node"]: r["rank"] for r in pagerank(e, iters=2).collect()}
-    assert out[2] == 150_000_000_000
-    assert out[1] == 150_000_000_000 + (85 * 150_000_000_000) // 200
-    assert out[0] == (
-        150_000_000_000
-        + (85 * 575_000_000_000) // 100
-        + (85 * 150_000_000_000) // 200
-    )
-
-
-def test_pagerank_deterministic_under_partitioning(spark):
-    from biothings_crawler_spark.operators.pagerank import pagerank
-
-    e = spark.range(200).selectExpr("id AS src", "id div 3 AS dst").filter("src <> dst")
-    a = {r["node"]: r["rank"] for r in pagerank(e, iters=3).collect()}
-    b = {r["node"]: r["rank"] for r in pagerank(e.repartition(13), iters=3).collect()}
-    assert a == b
-
-
-def test_hits_hand_computed(spark):
-    from biothings_crawler_spark.operators.pagerank import hits
-
-    e = spark.createDataFrame([(1, 0), (2, 0), (2, 1)], "src long, dst long")
-    # s=1e12; hub0=s everywhere.
-    # auth_raw: v0 <- hub(1)+hub(2)=2s, v1 <- hub(2)=s; total 3s
-    #   auth = (2s*s//3s, s*s//3s, 0) = (666666666666, 333333333333, 0)
-    # hub_raw: u1 <- auth(0), u2 <- auth(0)+auth(1)=999999999999;
-    #   total 1666666666665 = 5*333333333333 -> exact 2/5 and 3/5 splits
-    out = {r["node"]: (r["auth"], r["hub"]) for r in hits(e, iters=1).collect()}
-    assert out[0] == (666_666_666_666, 0)
-    assert out[1] == (333_333_333_333, 400_000_000_000)
-    assert out[2] == (0, 600_000_000_000)
-
-
-def test_hits_deterministic_under_partitioning(spark):
-    from biothings_crawler_spark.operators.pagerank import hits
-
-    e = spark.range(200).selectExpr("id AS src", "id div 3 AS dst").filter("src <> dst")
-    a = {r["node"]: (r["auth"], r["hub"]) for r in hits(e, iters=2).collect()}
-    b = {
-        r["node"]: (r["auth"], r["hub"])
-        for r in hits(e.repartition(13), iters=2).collect()
-    }
-    assert a == b
-
-
 def test_dedup_weights_sum_to_cluster_unit(spark):
     from biothings_crawler_spark.operators.dedup import connected_components
 
@@ -1413,29 +1360,6 @@ def test_hilbert_twin_bijective_and_unit_step():
         # the Hilbert guarantee Morton lacks: consecutive keys are
         # Manhattan neighbours, so a key range is one connected blob
         assert abs(x0 - x1) + abs(y0 - y1) == 1
-
-
-def test_k_truss_strips_tails_keeps_clique(spark):
-    from itertools import combinations
-    from biothings_crawler_spark.operators.pagerank import k_truss
-
-    # K5 clique (every edge support 3) + a pendant path + a triangle
-    # hanging off node 0 (its edges have support 1 -> peeled at k=4)
-    edges = list(combinations(range(5), 2))
-    edges += [(0, 10), (10, 11), (0, 20), (0, 21), (20, 21)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r["a"], r["b"]): r["support"]
-           for r in k_truss(df, 4).collect()}
-    assert got == {(a, b): 3 for a, b in combinations(range(5), 2)}
-
-
-def test_k_truss_triangle_survives_k3(spark):
-    from biothings_crawler_spark.operators.pagerank import k_truss
-
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long")
-    got = {(r["a"], r["b"]) for r in k_truss(df, 3).collect()}
-    assert got == {(1, 2), (2, 3), (1, 3)}       # the pendant edge peels
 
 
 def test_passage_dedup_huge_ids_and_million_passage_doc(spark):

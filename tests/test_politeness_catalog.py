@@ -359,38 +359,6 @@ def test_robots_drift_longest_match_still_wins(spark):
     assert r["action"] == "revoke"
 
 
-def test_priority_fusion_normalization_and_order(spark):
-    from biothings_crawler_spark.operators.frontier import fuse_priority
-
-    a = spark.createDataFrame(
-        [("u1", 1000), ("u2", 500), ("u3", 0)], "url_canon string, x long")
-    s = spark.createDataFrame(
-        [("u2", 80), ("u4", 40)], "url_canon string, x long")
-    r = spark.createDataFrame([("u1", 100)], "url_canon string, x long")
-    got = {row["url_canon"]: row
-           for row in fuse_priority(a, s, r, 50, 30, 20).collect()}
-    assert set(got) == {"u1", "u2", "u3", "u4"}
-    # u1: max authority (50 * 1e6) + max relevance (20 * 1e6) -> 700000
-    assert got["u1"]["fused_ppm"] == 700_000
-    # u2: half authority + max staleness: (50*500000 + 30*1000000)//100
-    assert got["u2"]["fused_ppm"] == 550_000
-    assert got["u3"]["fused_ppm"] == 0
-    # priority is the ascending-order complement
-    assert got["u1"]["priority"] < got["u2"]["priority"] < got["u3"]["priority"]
-
-
-def test_priority_fusion_huge_scores_no_overflow(spark):
-    from biothings_crawler_spark.operators.frontier import fuse_priority
-
-    big = 5 * 10**17  # micro-unit ranks near BIGINT range
-    a = spark.createDataFrame(
-        [("u1", big), ("u2", big // 2)], "url_canon string, x long")
-    empty = spark.createDataFrame([], "url_canon string, x long")
-    got = {r["url_canon"]: r["fused_ppm"]
-           for r in fuse_priority(a, empty, empty, 100, 0, 0).collect()}
-    assert got["u1"] == 1_000_000 and got["u2"] == 500_000
-
-
 def test_rendezvous_minimal_movement_and_balance(spark):
     """HRW: adding a worker moves only the hosts the NEW worker wins
     (~1/(N+1)), and every moved host moves TO the new worker."""

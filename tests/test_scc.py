@@ -1,8 +1,8 @@
-"""Full SCC census (operators/pagerank.scc_census)."""
+"""Full SCC census (operators/reach.scc_census)."""
 
 import pytest
 
-from biothings_crawler_spark.operators.pagerank import scc_census
+from biothings_crawler_spark.operators.reach import scc_census
 
 
 def _tarjan(edges):

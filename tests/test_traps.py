@@ -142,21 +142,6 @@ def test_heavy_bigrams_counts_and_order(spark):
     assert out[1:] == [("now buy", 1), ("now please", 1)]
 
 
-def test_allocate_budget_exact_and_clamped(spark):
-    from biothings_crawler_spark.operators.pagerank import allocate_budget
-
-    ranks = spark.createDataFrame(
-        [(1, 7 * 10**12), (24, 2 * 10**12), (2, 10**9)],
-        "node long, rank long",
-    )
-    host = F.concat(F.lit("h"), (F.col("node") % 23).cast("string"))
-    out = {r.host: r for r in allocate_budget(ranks, host, total_budget=1000).collect()}
-    total = 9 * 10**12 + 10**9
-    assert out["h1"].mass == 9 * 10**12  # nodes 1 and 24 share host h1
-    assert out["h1"].quota == 9 * 10**12 * 1000 // total
-    assert out["h2"].quota == 1  # floor share 0 -> clamped to min_quota
-
-
 # --- reciprocal-link farm detection (operators/traps.link_farm_report) -------
 
 
